@@ -294,15 +294,20 @@ class Database:
         names, WITHOUT per-run classification (no second-level listdir).
         Complete run dirs only ever appear/disappear via atomic renames,
         so two equal fingerprints bracket a window with no commit or
-        compaction swap — the point reader's consistency probe."""
-        names = os.listdir(self.path)
-        if COMPACT_PLAN in names:
+        compaction swap — the point reader's consistency probe.
+        ``DirEntry.is_dir()`` answers from the readdir d_type (following
+        symlinks like ``os.path.isdir``), so no entry is stat'ed."""
+
+        def scan() -> list[os.DirEntry]:
+            with os.scandir(self.path) as it:
+                return list(it)
+
+        entries = scan()
+        if any(e.name == COMPACT_PLAN for e in entries):
             self._heal_compact_crash()  # see runs(): never serve the
-            names = os.listdir(self.path)  # mid-swap zero-run view
+            entries = scan()  # mid-swap zero-run view
         return sorted(
-            n
-            for n in names
-            if _TX_NAME_RE.match(n) and os.path.isdir(os.path.join(self.path, n))
+            e.name for e in entries if _TX_NAME_RE.match(e.name) and e.is_dir()
         )
 
     def data_runs(self) -> list[RunInfo]:

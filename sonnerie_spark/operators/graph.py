@@ -61,8 +61,12 @@ def connected_components(
     from pyspark.sql import Observation
 
     # decimal(38,0) BEFORE the sum: V node ids of up to 2^63 would
-    # overflow a long accumulator far below the claimed corpus scale
-    _label_sum = F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
+    # overflow a long accumulator far below the claimed corpus scale.
+    # The row count tells an overflowed (NULL) sum from an empty graph.
+    _label_sum = (
+        F.sum(F.col("comp").cast("decimal(38,0)")).alias("s"),
+        F.count(F.lit(1)).alias("n"),
+    )
     e = pairs.select(
         F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")
     )
@@ -73,10 +77,10 @@ def connected_components(
         sym.select(F.col("s").alias("id"))
         .distinct()
         .withColumn("comp", F.col("id"))
-        .observe(obs0, _label_sum)
+        .observe(obs0, *_label_sum)
     )
     labels = labels.localCheckpoint(eager=True)
-    prev_sum = obs0.get["s"] or 0
+    prev_sum = observed_label_sum(obs0.get)
     for it in range(max_iter):
         # 1. propagate: min over own label and all neighbour labels
         msgs = sym.join(labels.withColumnRenamed("id", "s"), "s").select(
@@ -102,13 +106,13 @@ def connected_components(
         nxt = (
             nxt.join(ptr, "comp")
             .select("id", F.col("comp2").alias("comp"))
-            .observe(obs, _label_sum)
+            .observe(obs, *_label_sum)
         )
         # 3. converged iff no label changed, i.e. the monotone label
         # sum held steady this round (exact integer arithmetic).
         nxt = nxt.localCheckpoint(eager=True)
         labels = nxt
-        cur_sum = obs.get["s"] or 0
+        cur_sum = observed_label_sum(obs.get)
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
@@ -124,6 +128,26 @@ def connected_components(
         )
     sym.unpersist()
     return labels
+
+
+def observed_label_sum(metrics: dict) -> int:
+    """The label sum one round of :func:`connected_components` observed
+    (``metrics``: the round's Observation dict, keys ``s`` and ``n``).
+
+    Spark's non-ANSI decimal sum returns NULL on overflow. Reading that
+    as 0 would let two overflowed rounds compare equal and report a
+    false convergence, so a NULL sum over a non-empty label table
+    raises. Over zero rows (an empty pair graph) NULL is the plain
+    empty sum, 0."""
+    s = metrics["s"]
+    if s is None:
+        if metrics["n"] == 0:
+            return 0
+        raise ArithmeticError(
+            "connected_components: label sum overflowed decimal(38,0); "
+            "convergence cannot be decided"
+        )
+    return s
 
 
 def cc_oracle_sql(pairs_sql: str) -> str:

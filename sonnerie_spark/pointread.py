@@ -14,9 +14,10 @@ lookup is a binary search over mmap'ed segment headers
 analytics keep the Spark plan; only `key == constant` (optionally with a
 time range) takes this path.
 
-Scale note: the fast path reads only footers (cached) plus the pruned
-row groups, so its cost is O(runs) metadata + O(selectivity) data — on
-a compacted DB that is one footer and usually one row group. It runs on
+Scale note: the fast path reads only footer statistics and delete
+markers (both cached per run) plus the pruned row groups, so its cost is
+O(runs) listing + O(selectivity) data — on a compacted DB that is one
+file open and usually one row group. It runs on
 whatever process calls it (driver or serve worker); it never loads a
 run's full data.
 """
@@ -34,21 +35,24 @@ from sonnerie_spark.plans.keyfilter import wildcard_regex
 
 
 class _FileMeta:
-    """One run file: open handle + per-row-group key min/max.
+    """One run file: row-group count + per-row-group key/ts min/max.
 
     Row groups are (key, ts)-sorted at write time, so the per-group
     [min_key, max_key] intervals are non-overlapping and sorted — a
     bisect finds the matching groups without touching the (potentially
-    hundreds of) statistics objects per lookup.
+    hundreds of) statistics objects per lookup. Only these plain lists
+    are kept (a few KB per run), not the Parquet footer object or an
+    open file: a read opens the file for just its own row groups.
     """
 
     __slots__ = (
-        "path", "pf", "mins", "maxs", "ts_mins", "ts_maxs", "bucket", "run_b",
+        "path", "num_row_groups", "mins", "maxs", "ts_mins", "ts_maxs",
+        "bucket", "run_b",
     )
 
-    def __init__(self, path: str, pf: Any, run_b: int | None = None):
+    def __init__(self, path: str, md: Any, run_b: int | None = None):
         self.path = path
-        self.pf = pf
+        self.num_row_groups = md.num_row_groups
         # bucket id from the file name (bucketing.py layout), paired with
         # the RUN's recorded bucket count: lets an exact-key lookup skip
         # every file of the other B-1 buckets before touching footer
@@ -57,7 +61,6 @@ class _FileMeta:
         # has no recorded B are never pruned.
         self.bucket = parse_bucket_id(os.path.basename(path))
         self.run_b = run_b
-        md = pf.metadata
         arrow_schema = md.schema.to_arrow_schema()
         key_idx = arrow_schema.get_field_index("key")
         ts_idx = arrow_schema.get_field_index("ts")
@@ -110,7 +113,7 @@ class _FileMeta:
         before_ns: int | None = None,
     ) -> list[int]:
         if self.mins is None:
-            return list(range(self.pf.metadata.num_row_groups))
+            return list(range(self.num_row_groups))
         import bisect
 
         # candidate groups: those with min <= key <= max; since groups
@@ -135,7 +138,7 @@ class _FileMeta:
     ) -> list[int]:
         """Row groups possibly containing keys in ``[lo, hi)``."""
         if self.mins is None:
-            return list(range(self.pf.metadata.num_row_groups))
+            return list(range(self.num_row_groups))
         import bisect
 
         # groups sorted by key: start at the first whose max >= lo, stop
@@ -150,7 +153,7 @@ class _FileMeta:
 
 
 class _RunFooters:
-    """Cached Parquet footers for one immutable run directory."""
+    """Cached footer statistics for one immutable run directory."""
 
     __slots__ = ("mtime", "files")
 
@@ -162,25 +165,28 @@ class _RunFooters:
 class PointReader:
     """Exact-key reads over a Database without Spark jobs.
 
-    Footers are cached per run directory (keyed by mtime); runs are
-    immutable once committed, so a cache entry stays valid until the run
-    is replaced by compaction (directory disappears or mtime changes).
+    Two per-run caches, both keyed by run directory + mtime: footer
+    statistics of data runs (``_footers``) and the parsed rows of
+    delete-marker runs (``_markers``). Runs are immutable once
+    committed, so an entry stays valid until the run is replaced by
+    compaction (directory disappears or mtime changes). Neither cache
+    holds an open file. Cached marker dicts are shared between reads
+    and must not be mutated.
     """
 
     def __init__(self, db):
         self.db = db
         self._footers: dict[str, _RunFooters] = {}
+        self._markers: dict[str, tuple[int, list[dict]]] = {}
 
     # -- footer cache ------------------------------------------------------
 
     def _evict_stale_footers(self, all_runs) -> None:
-        """Evict footer-cache entries for runs no longer listed: each
-        entry pins OPEN fds (one pq.ParquetFile per part file), and a
-        compacted-away run's path is never looked up again, so without
-        this a long-lived reader (the serve process) leaks fds — and
-        disk space, since deleted-but-open files survive — for every
-        transaction ever replaced. Found by the serve soak
-        (tools/soak_serve.py).
+        """Evict footer- and marker-cache entries for runs no longer
+        listed (``all_runs`` must be the FULL listing, data and delete
+        runs). A compacted-away run's path is never looked up again, so
+        without this a long-lived reader (the serve process) grows its
+        caches by one entry for every transaction ever replaced.
 
         Thread-shape: serve handlers share one PointReader with no
         lock, so snapshot the key set in one C-level op (list(dict) —
@@ -188,8 +194,9 @@ class PointReader:
         another handler inserts, and pop() tolerates a concurrent
         eviction of the same key."""
         live = {r.path for r in all_runs}
-        for stale in [p for p in list(self._footers) if p not in live]:
-            self._footers.pop(stale, None)
+        for cache in (self._footers, self._markers):
+            for stale in [p for p in list(cache) if p not in live]:
+                cache.pop(stale, None)
 
     def _run_footers(self, run) -> _RunFooters | None:
         # The whole stat/list/open sequence can race a compaction swap
@@ -206,13 +213,25 @@ class PointReader:
                 if not name.endswith(".parquet"):
                     continue
                 p = os.path.join(run.path, name)
-                files.append(_FileMeta(p, pq.ParquetFile(p), run_b))
+                files.append(_FileMeta(p, pq.read_metadata(p), run_b))
         except OSError:
             self._footers.pop(run.path, None)
             return None
         entry = _RunFooters(mtime, files)
         self._footers[run.path] = entry
         return entry
+
+    def _run_markers(self, run) -> list[dict]:
+        """The delete markers of one delete run, parsed once per
+        (path, mtime) through ``Database.delete_markers``. OSError
+        propagates: the run was purged under us, the caller retries."""
+        mtime = os.stat(run.path).st_mtime_ns
+        cached = self._markers.get(run.path)
+        if cached is not None and cached[0] == mtime:
+            return cached[1]
+        rows = self.db.delete_markers([run])
+        self._markers[run.path] = (mtime, rows)
+        return rows
 
     # -- point read --------------------------------------------------------
 
@@ -314,9 +333,11 @@ class PointReader:
         point-read class regardless of the pattern a client sends.
         """
         total = 0
-        data_runs = self.db.data_runs()
-        self._evict_stale_footers(data_runs)
-        for run in data_runs:
+        all_runs = self.db.runs()
+        self._evict_stale_footers(all_runs)
+        for run in all_runs:
+            if run.is_delete:
+                continue
             footers = self._run_footers(run)
             if footers is None:
                 continue
@@ -342,15 +363,20 @@ class PointReader:
         # A concurrent compaction swap can hide a run between the
         # directory listing and the footer read; proceeding would
         # silently drop that run's records, so restart the merge on a
-        # fresh listing (bounded retries — each swap is a handful of
-        # renames, so a second listing sees the merged replacement).
-        for _attempt in range(5):
+        # fresh listing. Retries are bounded, but not by swaps alone: the
+        # closing fingerprint probe also fails on every plain commit, and
+        # a retry starts right after the commit it lost to — so a writer
+        # committing back-to-back (a PUT streak on another serve
+        # connection, each PUT about as long as one attempt) beats
+        # attempt after attempt. The bound outlasts such a streak; a
+        # swap (a handful of renames) costs one retry.
+        for _attempt in range(20):
             merged = self._merge_once(groups_fn, filter_fn, file_ok)
             if merged is not None:
                 tables, markers = merged
                 break
         else:
-            raise RuntimeError("point read kept racing compaction swaps")
+            raise RuntimeError("point read kept racing commits and compaction swaps")
 
         # Vectorized fast path for the compacted steady state: a single
         # data run USUALLY holds no (key, ts) conflict (transactions
@@ -447,7 +473,8 @@ class PointReader:
                     groups = groups_fn(fm)
                     if not groups:
                         continue
-                    tbl = filter_fn(fm.pf.read_row_groups(groups))
+                    with pq.ParquetFile(fm.path) as pf:
+                        tbl = filter_fn(pf.read_row_groups(groups))
                     if tbl.num_rows == 0:
                         continue
                     tables.append((run.name, tbl))
@@ -458,7 +485,12 @@ class PointReader:
             # Read markers from the attempt's own listing: one consistent
             # snapshot per attempt, no second readdir, and an unrelated
             # delete commit landing mid-attempt can't consume a retry.
-            markers = self.db.delete_markers(all_runs)
+            markers = [
+                m
+                for run in all_runs
+                if run.is_delete
+                for m in self._run_markers(run)
+            ]
         except OSError:
             return None  # marker run purged mid-read: retry fresh
         if self.db.run_names() != fingerprint:

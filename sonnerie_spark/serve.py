@@ -11,11 +11,17 @@
 
 The reference keeps a 10-s-TTL cached ``DatabaseReader`` to amortize
 readdir+mmap (sonnerie-serve.rs:239-265). No analogous cache exists
-here ON PURPOSE: a GET's run listing happens inside ``Database.read``/
-``get`` (one readdir of immutable run dirs + cached parquet footers in
-``PointReader``), so a serve-layer listing cache would add a staleness
-window without removing any work — the reference's cache pays for mmap
-setup this engine does not do per request.
+here ON PURPOSE: the run listing still runs on every GET, inside
+``Database.read``/``get``. Only immutable per-run metadata is cached
+(``PointReader``: Parquet footer statistics and parsed delete markers),
+keyed by run path + mtime, so a committed write is visible to the very
+next GET — there is no staleness window to tune.
+
+Sockets: every accepted connection sets ``TCP_NODELAY``. A response
+goes out in several ``send`` calls (status + headers, then the body
+chunks); with Nagle's algorithm on, the second small segment waits for
+the client's delayed ACK — ~40 ms on Linux, on every GET and PUT of a
+kept-alive connection, more than the whole point read costs.
 
 Threading: http.server's ThreadingHTTPServer drives Spark jobs from
 handler threads — Spark sessions are thread-safe for concurrent actions
@@ -60,6 +66,9 @@ def make_server(
         # self-frames (Content-Length or chunked); an unframed body
         # under 1.1 would stall the client, not just waste a socket.
         protocol_version = "HTTP/1.1"
+        # TCP_NODELAY on each accepted socket (module docstring: the
+        # headers/body writes would otherwise wait out a delayed ACK)
+        disable_nagle_algorithm = True
         # Idle keep-alive bound: without it, every abandoned persistent
         # connection pins a handler thread + fd forever (readline blocks
         # indefinitely). The stdlib turns the socket timeout into a

@@ -129,6 +129,23 @@ def test_cc_nonconvergence_raises(spark):
         graph.connected_components(df, "id_a", "id_b", max_iter=2)
 
 
+def test_observed_label_sum_refuses_overflowed_null():
+    """A NULL (overflowed) label sum must raise, never read as 0: two
+    overflowed rounds would otherwise compare equal and report a false
+    convergence. NULL over zero rows is the empty graph's sum."""
+    import pytest as _pytest
+
+    assert graph.observed_label_sum({"s": 42, "n": 3}) == 42
+    assert graph.observed_label_sum({"s": 0, "n": 1}) == 0
+    assert graph.observed_label_sum({"s": None, "n": 0}) == 0
+    with _pytest.raises(ArithmeticError, match="overflowed"):
+        graph.observed_label_sum({"s": None, "n": 5})
+
+
+def test_cc_empty_graph(spark):
+    assert _run(spark, []) == {}
+
+
 def test_lsh_index_compact_preserves_probes(spark, sf_dir, tmp_path):
     from sonnerie_spark.operators import dedup
 

@@ -85,10 +85,10 @@ def test_point_read_after_compaction_and_footer_cache(db):
 
 
 def test_footer_cache_evicts_replaced_runs(db):
-    """The footer cache pins open fds (one pq.ParquetFile per part
-    file); entries for compacted-away runs must be EVICTED on the next
-    read — a long-lived serve process would otherwise leak fds and
-    disk (deleted-but-open files) for every replaced transaction."""
+    """Footer-cache entries for compacted-away runs must be EVICTED on
+    the next read: a replaced run's path is never looked up again, so a
+    long-lived serve process would otherwise grow its memory by one
+    entry for every replaced transaction."""
     _seed(db)
     db.get("beta")  # warm: one footer entry per data run
     pr = db._point_reader
@@ -108,6 +108,136 @@ def test_footer_cache_evicts_replaced_runs(db):
     db.compact(major=True)
     db.get_prefix("bet")
     assert len(pr._footers) == 1
+
+
+def _local_db(tmp_path):
+    """Spark-free database: commit_rows, commit_deletes and get need no
+    session."""
+    return Database(None, str(tmp_path / "db"), buckets=2, durable=False)
+
+
+def _u_row(key, ts, v):
+    return {"key": key, "ts": ts, "fmt": "u", "v_long": [v],
+            "v_double": [], "v_str": [], "v_bin": []}
+
+
+def test_delete_markers_parsed_once_per_run(tmp_path, monkeypatch):
+    """Marker runs are immutable: with k of them, repeated GETs parse
+    each run's markers once, not once per GET."""
+    db = _local_db(tmp_path)
+    db.commit_rows([_u_row("k", T0 + i * NS, i) for i in range(10)])
+    k = 3
+    for i in range(k):
+        db.commit_deletes(
+            [{"wildcard": "k", "after_ns": T0 + i * NS, "before_ns": T0 + i * NS + 1}]
+        )
+    parsed = []  # marker runs parsed per delete_markers call
+    real = Database.delete_markers
+
+    def counting(self, runs=None):
+        parsed.append(sum(r.is_delete for r in (runs or self.runs())))
+        return real(self, runs)
+
+    monkeypatch.setattr(Database, "delete_markers", counting)
+    for _ in range(5):
+        assert [r["ts"] for r in db.get("k")] == [T0 + i * NS for i in range(k, 10)]
+    assert sum(parsed) == k  # not 5 * k
+
+
+def test_marker_cache_sees_new_delete_on_next_get(tmp_path):
+    db = _local_db(tmp_path)
+    db.commit_rows([_u_row("k", T0 + i * NS, i) for i in range(4)])
+    db.commit_deletes([{"wildcard": "k", "before_ns": T0 + 1}])
+    assert [r["v_long"][0] for r in db.get("k")] == [1, 2, 3]  # warm
+    db.commit_deletes([{"wildcard": "k", "after_ns": T0 + 3 * NS}])
+    assert [r["v_long"][0] for r in db.get("k")] == [1, 2]
+    # a later write is not hit by the cached earlier markers
+    db.commit_rows([_u_row("k", T0, 9)])
+    assert [r["v_long"][0] for r in db.get("k")] == [9, 1, 2]
+
+
+def test_marker_cache_concurrent_readers_see_monotone_snapshots(tmp_path):
+    """Serve handlers share one PointReader without a lock. Readers on
+    more threads than cores, racing a writer that deletes one ts per
+    commit, must each see a committed snapshot (records j..9) and never
+    an older one than they saw before."""
+    import sys
+    import threading
+
+    db = _local_db(tmp_path)
+    db.commit_rows([_u_row("k", T0 + i * NS, i) for i in range(10)])
+    k = 6
+    seen: dict[int, list[int]] = {}
+    errors: list[BaseException] = []
+
+    def reader(tid):
+        try:
+            while len(seen.setdefault(tid, [])) < 40:
+                vals = [r["v_long"][0] for r in db.get("k")]
+                j = vals[0]
+                assert vals == list(range(j, 10)) and j <= k
+                seen[tid].append(j)
+        except BaseException as e:  # surfaced by the main thread below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=reader, args=(t,)) for t in range(8)]
+        for t in threads:
+            t.start()
+        for i in range(k):
+            db.commit_deletes(
+                [{"wildcard": "k", "after_ns": T0 + i * NS, "before_ns": T0 + i * NS + 1}]
+            )
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+    for js in seen.values():
+        assert js == sorted(js)
+    assert [r["v_long"][0] for r in db.get("k")] == list(range(k, 10))
+
+
+def test_point_read_outlasts_a_commit_streak(tmp_path, monkeypatch):
+    """Every commit that lands inside a point-read attempt fails the
+    attempt's closing run-set probe. A writer committing back-to-back
+    (a PUT streak on another serve connection) must delay the read, not
+    fail it, and the answer is the state after the streak."""
+    db = _local_db(tmp_path)
+    db.commit_rows([_u_row("k", T0 + i * NS, i) for i in range(3)])
+    db.get("k")  # warm the footer cache
+    streak = 10
+    probes = []
+    real = Database.run_names
+
+    def racing(self):
+        probes.append(None)
+        # even calls are an attempt's closing probe: a commit beats it
+        if len(probes) % 2 == 0 and len(probes) <= 2 * streak:
+            self.commit_rows([_u_row("k", T0 + (100 + len(probes)) * NS, 7)])
+        return real(self)
+
+    monkeypatch.setattr(Database, "run_names", racing)
+    rows = db.get("k")
+    assert len(probes) == 2 * (streak + 1)  # streak lost attempts + 1
+    assert [r["v_long"][0] for r in rows] == [0, 1, 2] + [7] * streak
+
+
+def test_marker_cache_evicts_markers_purged_by_compaction(db):
+    _seed(db)
+    before = {k: _norm(_point_rows(db, k)) for k in ("alpha", "zeta")}
+    pr = db._point_reader
+    marker_paths = {r.path for r in db.runs() if r.is_delete}
+    assert set(pr._markers) == marker_paths != set()
+    db.compact(major=True)  # purges the marker run from disk
+    assert not any(r.is_delete for r in db.runs())
+    after = {k: _norm(_point_rows(db, k)) for k in ("alpha", "zeta")}
+    assert pr._markers == {}
+    assert after == before
+    assert after["zeta"] == _norm(_spark_rows(db, "zeta"))
 
 
 def test_point_read_lww_values(db):
@@ -238,7 +368,7 @@ def test_point_read_prunes_row_groups_by_ts(spark, tmp_path):
 
     pr = db._point_reader
     fm = pr._run_footers(db.data_runs()[0]).files[0]
-    assert fm.pf.metadata.num_row_groups >= 20
+    assert fm.num_row_groups >= 20
     pruned = fm.groups_for("k", 5000, 5100)
     assert len(pruned) <= 2  # the window spans at most 2 of 20 groups
     assert len(fm.groups_for("k")) >= 20  # unwindowed: all groups

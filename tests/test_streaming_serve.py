@@ -446,6 +446,48 @@ def test_serve_keepalive_reuse_and_failed_put_drop(server, db):
     assert db.read().count() == 3
 
 
+def test_serve_keepalive_requests_do_not_wait_for_delayed_ack(tmp_path):
+    """A response leaves in several send() calls (headers, then body
+    chunks). Without TCP_NODELAY on the server socket, Nagle's algorithm
+    holds the second segment until the client's delayed ACK, ~40 ms on
+    Linux, on every request of a kept-alive connection: 20 requests
+    would take ~0.8 s. Spark-free, so only the serve layer is timed."""
+    import http.client
+    import time
+
+    db = Database(None, str(tmp_path / "db"), buckets=2, durable=False)
+    db.commit_rows(
+        [{"key": "k", "ts": 1000, "fmt": "u", "v_long": [1],
+          "v_double": [], "v_str": [], "v_bin": []}]
+    )
+    srv = make_server(db)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    c = http.client.HTTPConnection("127.0.0.1", srv.server_address[1], timeout=30)
+    try:
+        c.request("GET", "/k")  # warm: imports and the footer cache
+        assert c.getresponse().read() == b"k\t1000\t1\n"
+
+        t0 = time.perf_counter()
+        for _ in range(20):
+            c.request("GET", "/k")
+            r = c.getresponse()
+            assert (r.status, r.read()) == (200, b"k\t1000\t1\n")
+        get_s = time.perf_counter() - t0
+
+        t0 = time.perf_counter()
+        for i in range(20):
+            c.request("PUT", "/", body=f"p{i} 1000 u {i}\n".encode())
+            r = c.getresponse()
+            assert (r.status, r.read()) == (201, b"ok")
+        put_s = time.perf_counter() - t0
+    finally:
+        c.close()
+        srv.shutdown()
+        srv.server_close()
+    assert get_s < 0.4, f"20 GETs took {get_s:.3f} s"
+    assert put_s < 0.4, f"20 PUTs took {put_s:.3f} s"
+
+
 def test_serve_pipelined_requests_and_connection_close(server, db):
     """Pipelining fuzz on the raw socket: three GETs written in ONE
     send() must come back as three well-framed 200 responses in order;

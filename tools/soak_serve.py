@@ -169,13 +169,11 @@ def main() -> None:
         f"handler threads leaked: {base_threads} -> {threads_after}"
     )
 
-    # fd discipline: during the soak the point reader's footer cache
-    # legitimately holds one fd per part file of every LIVE run (the
-    # PUTs created many runs), so the steady-state check is post-
-    # compaction: one major compaction + one GET must drop the cache
-    # back to the single merged run's footers — if stale entries
-    # survived (the leak the soak originally caught), deleted runs
-    # would keep their fds pinned here.
+    # fd discipline: the point reader's caches hold no open files (each
+    # read opens and closes its run files), so after one major
+    # compaction + one GET the fd count must be back near its base — a
+    # read that left a file open, or a handler socket never closed,
+    # shows up here.
     fds_grown = _fd_count()
     db.compact(major=True)
     s = socket.create_connection((host, port), timeout=30)
