@@ -1,5 +1,5 @@
-"""Durability helpers shared by the commit path, the dedup ledgers and
-the sketch stores.
+"""Durability and crash-safety primitives: the one commit protocol of
+every persistent store in the package.
 
 Rename-based publication (write under a tmp name, ``os.rename`` to the
 visible name) is atomic against CONCURRENT READERS and safe under a
@@ -9,8 +9,46 @@ in the page cache until the kernel flushes them, and the disk may make
 the rename durable BEFORE the data it publishes. The reference pays for
 the stronger contract explicitly — create_tx.rs:210-264 ``commit()``
 flushes and ``sync_all``s the transaction file before the rename — so
-the Spark engine does the same: fsync the tree being published, rename,
+the Spark engine does the same: fsync what is being published, rename,
 then fsync the parent directory that now holds the new entry.
+
+The database (``db.py``) applies that rule with its own multi-run
+hide -> publish -> purge plan. Every other persistent store — the dedup
+indexes (``LshIndex``, ``ExactIndex``), the sketch stores (``HllStore``,
+``BloomStore``, ``DdStore``), the IVF index metadata and the rollup
+cursor — uses only the functions below, always under
+:func:`store_lock` when it mutates:
+
+- **JSON** (:func:`write_json_atomic`): params, index metadata and
+  cursors are written under a unique tmp name, fsynced, renamed over
+  the visible name, and the directory fsynced. A reader sees the old
+  file, the new file, or (before the first write) none — never a
+  partial one.
+- **Publish** (:func:`publish_generation`): a store's data is one
+  directory, replaced whole. The new generation is written at a
+  ``<data>.tmp-*`` (or ``.compact-*``) sibling, fsynced file by file,
+  then ``rename(data -> data.old-<ns>)``, ``rename(tmp -> data)``, one
+  fsync of the parent, and finally the backups beyond the store's
+  allowance are dropped.
+- **Recover** (:func:`recover_generation`, under the lock): a crash
+  between the two renames leaves no data dir — the newest backup is
+  restored (the interrupted write was never acknowledged, so the
+  caller's retry re-applies it). Leftover ``.tmp-*``/``.compact-*``
+  siblings and backups beyond the allowance are debris: a live writer
+  would hold the lock the recoverer holds.
+- **Load** (:func:`load_generation`): recover, then read. A corruption
+  signal (``FileNotFoundError`` or ``ValueError``, which covers Arrow's
+  ``ArrowInvalid`` and ``JSONDecodeError``) rolls back to the retained
+  backup once; any other ``OSError`` is transient (EACCES, EMFILE, EIO)
+  and propagates without touching either generation.
+
+Backup allowance (``keep_backup``): the sketch stores keep ONE backup.
+Their generation is dimension-sized, and a power loss can still surface
+a renamed-but-torn generation on a filesystem that reorders metadata;
+the backup is the last durable generation to roll back to. The dedup
+indexes keep none: their generation is corpus-sized, so a retained copy
+would double the index on disk, and compaction — their only swap — is a
+pure rewrite that a retry redoes.
 
 These run on the driver against a local/POSIX mount. On object stores
 (S3 et al.) Spark's committers provide the durability contract instead
@@ -19,7 +57,13 @@ and these paths aren't used.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
+import glob
+import json
 import os
+import shutil
+import time
 
 
 def fsync_file(path: str) -> None:
@@ -94,3 +138,114 @@ def fsync_new_files(root: str, before: set[str]) -> None:
             if cur == root:
                 break
             cur = os.path.dirname(cur)
+
+
+@contextlib.contextmanager
+def store_lock(root: str):
+    """Exclusive flock on ``root/.lock`` for the block. The kernel
+    drops it with the holder's fd, so a dead holder never wedges the
+    store. Not reentrant: a second acquisition on a fresh fd in the
+    same process deadlocks."""
+    fd = os.open(os.path.join(root, ".lock"), os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        yield
+    finally:
+        os.close(fd)
+
+
+def tmp_name(path: str, tag: str = ".tmp-") -> str:
+    """A sibling name no other writer can pick: ``<path><tag><pid>-<ns>``."""
+    return f"{path}{tag}{os.getpid()}-{time.time_ns():x}"
+
+
+def rename_durable(src: str, dst: str, *, durable: bool = True) -> None:
+    """``rename(src -> dst)``, then fsync the directory holding ``dst``."""
+    os.rename(src, dst)
+    if durable:
+        fsync_dir(os.path.dirname(dst) or ".")
+
+
+def write_json_atomic(path: str, obj, *, durable: bool = True) -> None:
+    """Replace ``path`` with ``obj`` as JSON: unique tmp name, fsync,
+    rename, fsync of the parent. ``durable=False`` keeps only the
+    rename's process-kill atomicity."""
+    tmp = tmp_name(path)
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+        if durable:
+            fsync_file(tmp)
+        rename_durable(tmp, path, durable=durable)
+    except BaseException:
+        with contextlib.suppress(OSError):
+            os.unlink(tmp)
+        raise
+
+
+def _backups(data: str) -> list[str]:
+    """``<data>.old-*`` oldest first (hex-ns suffixes sort by age). The
+    pattern is glob-escaped: an unescaped ``corpus[v2]`` would match
+    nothing and silently disable the restore."""
+    return sorted(glob.glob(glob.escape(data) + ".old-*"))
+
+
+def _excess(backs: list[str], keep_backup: bool) -> list[str]:
+    """The backups beyond the allowance: all but the newest, or all."""
+    return backs[:-1] if keep_backup else backs
+
+
+def publish_generation(data: str, tmp: str, *, keep_backup: bool) -> None:
+    """Make the fully written directory ``tmp`` the current generation
+    at ``data`` (caller holds the store lock). The replaced generation
+    becomes a ``.old-*`` backup; afterwards only the newest backup
+    remains if ``keep_backup``, else none."""
+    fsync_tree(tmp)
+    if os.path.isdir(data):
+        os.rename(data, data + f".old-{time.time_ns():x}")
+    rename_durable(tmp, data)  # both renames durable before any purge
+    for stale in _excess(_backups(data), keep_backup):
+        shutil.rmtree(stale, ignore_errors=True)
+
+
+def recover_generation(data: str, *, keep_backup: bool) -> None:
+    """Crash recovery for :func:`publish_generation` (caller holds the
+    store lock): restore the newest backup if ``data`` is missing, then
+    reap ``.tmp-*``/``.compact-*`` debris and backups beyond
+    ``keep_backup``."""
+    backs = _backups(data)
+    if not os.path.isdir(data) and backs:
+        rename_durable(backs.pop(), data)
+    debris = glob.glob(glob.escape(data) + ".tmp-*")
+    debris += glob.glob(glob.escape(data) + ".compact-*")
+    for stale in _excess(backs, keep_backup) + debris:
+        shutil.rmtree(stale, ignore_errors=True)
+
+
+def load_generation(data: str, read, label: str):
+    """``read(data)`` of the current generation of a store that keeps a
+    backup, after :func:`recover_generation` (caller holds the store
+    lock); None if nothing was published yet. A corruption signal rolls
+    back to the backup once — the torn write was never acknowledged
+    durable, so the producer's retry re-applies it. If the backup is
+    unreadable too, a RuntimeError names ``label``. Any other OSError
+    propagates and destroys nothing."""
+    recover_generation(data, keep_backup=True)
+    if not os.path.isdir(data):
+        return None
+    try:
+        return read(data)
+    except (FileNotFoundError, ValueError):
+        if not _backups(data):
+            raise
+        shutil.rmtree(data)
+        recover_generation(data, keep_backup=True)
+    try:
+        return read(data)
+    except (FileNotFoundError, ValueError) as e:
+        raise RuntimeError(
+            f"{label}: current generation was corrupt and the restored "
+            f"backup is ALSO unreadable ({type(e).__name__}: {e}); the "
+            "store cannot recover — rebuild it by replaying the source "
+            "batches into a fresh path"
+        ) from e

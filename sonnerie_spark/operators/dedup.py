@@ -22,19 +22,19 @@ Everything is JVM-side Catalyst expressions — no Python UDFs.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import re
 import shutil
-import time
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from sonnerie_spark import fsutil
 from sonnerie_spark.fsutil import (
-    fsync_dir,
-    fsync_file,
-    fsync_new_files,
-    fsync_tree,
-    snapshot_files,
+    publish_generation,
+    recover_generation,
+    store_lock,
+    write_json_atomic,
 )
 from sonnerie_spark.functions.portable_hash import phash, phash_salted
 
@@ -553,99 +553,163 @@ def _ledger_tmps(bdir: str) -> list[str]:
     )
 
 
-def _recover_swap_locked(data: str) -> None:
-    """Crash recovery for an index compact's two-rename swap (caller
-    HOLDS the index flock): a crash between ``rename(data -> .old-)``
-    and ``rename(.compact- -> data)`` leaves NO data dir, and every
-    probe would silently see an EMPTY index — un-dedup'ing every
-    future batch with no error. Restore the newest ``.old-*`` backup
-    (the pre-compact layout; compaction is a pure rewrite, so redoing
-    it later loses nothing). Older backups and leftover ``.compact-*``
-    rewrites are debris (a live compactor would hold the lock we
-    hold). Same recovery rule as the sketch stores'
-    ``_recover_data_dir`` (sketch.py). Patterns glob-escape the path:
-    a directory like ``corpus[v2]`` would otherwise silently disable
-    the restore (empty glob) — and the empty-index failure returns."""
-    import glob
+class _LedgeredIndex:
+    """What LshIndex and ExactIndex share: one parquet data directory
+    under an index root, mutated only under the index flock; the
+    applied-batch ledger that makes a ``batch_id``-tagged append
+    exactly-once; and compaction, whose swap is a
+    :func:`~sonnerie_spark.fsutil.publish_generation` that keeps no
+    backup (crash contract: :mod:`sonnerie_spark.fsutil`).
 
-    backs = sorted(glob.glob(glob.escape(data) + ".old-*"))
-    if not os.path.isdir(data) and backs:
-        os.rename(backs.pop(), data)
-    for stale in backs + glob.glob(glob.escape(data) + ".compact-*"):
-        shutil.rmtree(stale, ignore_errors=True)
+    Subclasses set ``_SCHEMA`` (the data rows), ``_RECORD_SCHEMA`` (a
+    ledger recording) and implement ``_append(df)`` and
+    ``_rewrite(old, tmp)``."""
 
+    _SCHEMA: str
+    _RECORD_SCHEMA: str
 
-def _heal_index_swap_on_open(data: str, locked) -> None:
-    """Open-time crash recovery shared by both index classes: a dead
-    compactor's swap can leave the data dir missing with the live
-    index stranded under an ``.old-*`` backup — without this, every
-    probe of a fresh handle would silently treat the index as EMPTY.
-    Cheap in the common case (one stat); ``locked`` (the instance's
-    flock context factory) is only entered when there is something to
-    recover."""
-    import glob
+    def _open(self, spark, path: str, data: str) -> None:
+        self.spark = spark
+        self.path = os.path.abspath(path)
+        os.makedirs(self.path, exist_ok=True)
+        self._data = os.path.join(self.path, data)
+        if not os.path.isdir(self._data):
+            # a compactor that died between its swap renames strands the
+            # live index under .old-*: without the restore every probe
+            # of a fresh handle would silently see an EMPTY index
+            with self._locked():
+                recover_generation(self._data, keep_backup=False)
 
-    if not os.path.isdir(data) and glob.glob(glob.escape(data) + ".old-*"):
-        with locked():
-            _recover_swap_locked(data)
+    def _locked(self):
+        """Exclusive flock over the index's mutation window: serializes
+        appends against compact()'s directory swap, so an append landing
+        in the swap window can never recreate the data dir between the
+        two renames."""
+        return store_lock(self.path)
 
+    def _existing(self) -> DataFrame | None:
+        if not os.path.isdir(self._data):
+            return None
+        return (
+            self.spark.read.schema(self._SCHEMA)
+            .option("basePath", self._data)
+            .parquet(self._data)
+        )
 
-def _ledger_recover_locked(bdir: str, finish) -> bool:
-    """Crash-window recovery for one applied-batch ledger entry; the
-    caller HOLDS the index flock. Returns True iff the batch is (now)
-    applied.
+    def _recorded(self, batch_id: str) -> DataFrame:
+        """A sealed batch's recording. Explicit schema: an empty batch's
+        ledger dir holds zero data files."""
+        return self.spark.read.schema(self._RECORD_SCHEMA).parquet(
+            _ledger_dir(self.path, batch_id)
+        )
 
-    A writer's sequence is: record the to-append set at a tmp dir and
-    mark it ``_COMPLETE``, append to the index, rename tmp -> ledger —
-    all under the flock. So for debris found under the flock:
+    def _append_durable(self, df: DataFrame) -> None:
+        before = fsutil.snapshot_files(self._data)
+        self._append(df)
+        fsutil.fsync_new_files(self._data, before)
 
-    - tmp WITH ``_COMPLETE``: a dead attempt that recorded its set
-      against the PRE-batch index view and then crashed anywhere up to
-      the final rename — possibly after (part of) the index append.
-      Finish the batch from the RECORDING, never from a recompute
-      against the (possibly polluted) index: ``finish(tmp)`` re-appends
-      the recorded set (duplicate index rows are tolerated by every
-      probe and healed by ``compact()``), then the tmp is promoted to
-      the ledger entry. A crash inside recovery just re-runs it.
-    - tmp WITHOUT ``_COMPLETE``: the recording never finished, so by
-      write ordering the index append never started — reap it and let
-      the caller run as a clean first attempt.
+    def _apply(self, batch_id: str | None, rows: DataFrame) -> None:
+        """Append ``rows`` under the flock; with a ``batch_id``, exactly
+        once. The seal sequence is: record the rows at ``<bdir>!tmp-*``,
+        fsync it, write ``_COMPLETE`` and fsync it, append (new files
+        fsynced), then rename the recording to the ledger entry and
+        fsync ``applied/``. The barriers make :meth:`_recover_batch`'s
+        write-ordering argument hold on disk under power loss — a
+        durable seal over a lost append would drop the batch forever
+        (replay skips the append)."""
+        with self._locked():
+            if batch_id is None:
+                self._append(rows)
+                return
+            bdir = _ledger_dir(self.path, batch_id)
+            if self._recover_batch(bdir):
+                return  # applied (possibly just now, from a recording)
+            tmp = fsutil.tmp_name(bdir, "!tmp-")
+            rows.repartition(1).write.mode("overwrite").parquet(tmp)
+            fsutil.fsync_tree(tmp)
+            marker = os.path.join(tmp, "_COMPLETE")
+            open(marker, "w").close()
+            fsutil.fsync_file(marker)
+            fsutil.fsync_dir(tmp)
+            self._append_durable(rows)
+            fsutil.rename_durable(tmp, bdir)  # the applied marker, LAST
 
-    No pid check is needed: the flock proves orphanhood (a live writer
-    would be holding it)."""
-    if os.path.isdir(bdir):
-        return True
-    for tmp in _ledger_tmps(bdir):
+    def _recover_batch(self, bdir: str) -> bool:
+        """Crash-window recovery for one ledger entry (caller HOLDS the
+        flock); True iff the batch is (now) applied. Debris found under
+        the flock is a dead attempt (a live writer would hold it):
+
+        - recording WITH ``_COMPLETE``: the attempt recorded its rows
+          against the PRE-batch index view and crashed anywhere up to
+          the seal — possibly after (part of) the append. Re-append the
+          RECORDING, never a recompute against the possibly polluted
+          index (duplicate rows are tolerated by every probe and healed
+          by ``compact()``), then promote it to the ledger entry. A
+          crash inside recovery just re-runs it.
+        - recording WITHOUT ``_COMPLETE``: by write ordering the append
+          never started — reap it; the caller runs a clean first
+          attempt."""
+        for tmp in _ledger_tmps(bdir):
+            if not os.path.isdir(bdir) and os.path.exists(
+                os.path.join(tmp, "_COMPLETE")
+            ):
+                self._append_durable(
+                    self.spark.read.schema(self._RECORD_SCHEMA).parquet(tmp)
+                )
+                fsutil.rename_durable(tmp, bdir)
+            else:
+                shutil.rmtree(tmp, ignore_errors=True)
+        return os.path.isdir(bdir)
+
+    def batch_applied(self, batch_id: str) -> bool:
+        """Has ``batch_id`` been sealed? (The replay guard.) Also HEALS
+        the crash window: a complete orphaned recording is finished
+        (re-append + seal) and counts as applied; a torn one is reaped
+        and does not — so a caller that crashed between the append and
+        the seal gets its first run's rows back instead of recomputing
+        against a polluted index."""
+        bdir = _ledger_dir(self.path, batch_id)
         if os.path.isdir(bdir):
-            # an earlier iteration already promoted a sibling recording
-            shutil.rmtree(tmp, ignore_errors=True)
-            continue
-        if os.path.exists(os.path.join(tmp, "_COMPLETE")):
-            finish(tmp)  # re-append (each _replay_append fsyncs its rows)
-            os.rename(tmp, bdir)
-            fsync_dir(os.path.dirname(bdir))  # the promotion, durable
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return os.path.isdir(bdir)
+            return True
+        if not _ledger_tmps(bdir):
+            return False
+        with self._locked():
+            return self._recover_batch(bdir)
+
+    def compact(self) -> None:
+        """Rewrite the accumulated per-batch appends into one compact
+        layout (the index analogue of the database's minor compaction:
+        many small appends -> one sorted layout, fewer files to open per
+        probe; crash-recovery duplicate rows are dropped). The lock
+        covers list + rewrite + swap: an append landing after the
+        rewrite read its file list but before the swap would otherwise
+        be dropped by the swap."""
+        with self._locked():
+            # a backup whose data dir is MISSING is the live index, not
+            # debris (the lock guarantees no live compaction owns these
+            # names)
+            recover_generation(self._data, keep_backup=False)
+            # finish-or-reap orphaned recordings BEFORE reading the
+            # rewrite input (finishing one appends to the index)
+            adir = os.path.join(self.path, "applied")
+            if os.path.isdir(adir):
+                for base in sorted(
+                    {n.split("!tmp-", 1)[0] for n in os.listdir(adir) if "!tmp-" in n}
+                ):
+                    self._recover_batch(os.path.join(adir, base))
+            old = self._existing()
+            if old is None:
+                return
+            tmp = fsutil.tmp_name(self._data, ".compact-")
+            self._rewrite(old, tmp)
+            # the swap destroys the old layout, so the rewrite is made
+            # durable first (the index is the corpus's dedup memory —
+            # losing it to a power loss silently un-dedups every future
+            # batch)
+            publish_generation(self._data, tmp, keep_backup=False)
 
 
-def _sweep_ledger_tmps_locked(root: str, finish) -> None:
-    """Finish-or-reap every orphaned ledger recording under
-    ``root/applied`` (caller HOLDS the index flock): complete
-    recordings are promoted via :func:`_ledger_recover_locked` (their
-    batches count as applied from now on), torn ones are reaped — so
-    crashed-writer debris never accumulates on disk."""
-    adir = os.path.join(root, "applied")
-    if not os.path.isdir(adir):
-        return
-    bases = {
-        n.split("!tmp-", 1)[0] for n in os.listdir(adir) if "!tmp-" in n
-    }
-    for base in sorted(bases):
-        _ledger_recover_locked(os.path.join(adir, base), finish)
-
-
-class LshIndex:
+class LshIndex(_LedgeredIndex):
     """Persistent MinHash-LSH index for INCREMENTAL near-dup detection.
 
     The one-shot pair enumeration recomputes every signature per run; a
@@ -673,6 +737,8 @@ class LshIndex:
     so replay output stays correct and the index is bitwise untouched.
     """
 
+    _SCHEMA = _RECORD_SCHEMA = "id long, band int, bucket string"
+
     def __init__(
         self,
         spark,
@@ -683,11 +749,6 @@ class LshIndex:
         band_size: int = 4,
         max_bucket_size: int | None = None,
     ):
-        import json
-        import os
-
-        self.spark = spark
-        self.path = os.path.abspath(path)
         self.k, self.num_hashes, self.band_size = k, num_hashes, band_size
         # Skew guard (minhash_lsh_pairs' max_bucket_size): buckets whose
         # TOTAL membership (indexed + batch) exceeds the cap emit no
@@ -695,29 +756,34 @@ class LshIndex:
         # stored band rows are cap-independent, only pair emission is
         # filtered — so it can change between add() calls.
         self.max_bucket_size = max_bucket_size
-        os.makedirs(self.path, exist_ok=True)
+        self._open(spark, path, "bands")
         meta_path = os.path.join(self.path, "lsh_index.json")
         meta = {"k": k, "num_hashes": num_hashes, "band_size": band_size}
-        if os.path.exists(meta_path):
+        # read-or-create under the lock: two processes creating the
+        # index at once agree on one parameter set
+        with self._locked():
+            if not os.path.exists(meta_path):
+                write_json_atomic(meta_path, meta)
             with open(meta_path) as f:
                 stored = json.load(f)
-            if stored != meta:
-                raise ValueError(
-                    f"index at {self.path} was built with {stored}, not {meta}"
-                )
-        else:
-            with open(meta_path, "w") as f:
-                json.dump(meta, f)
-        self._data = os.path.join(self.path, "bands")
-        _heal_index_swap_on_open(self._data, self._locked)
+        if stored != meta:
+            raise ValueError(
+                f"index at {self.path} was built with {stored}, not {meta}"
+            )
 
-    def _existing(self) -> DataFrame | None:
-        import os
+    def _append(self, df: DataFrame) -> None:
+        df.write.mode("append").parquet(self._data)
 
-        if not os.path.isdir(self._data):
-            return None
-        return self.spark.read.schema("id long, band int, bucket string").parquet(
-            self._data
+    def _rewrite(self, old: DataFrame, tmp: str) -> None:
+        (
+            # dropDuplicates heals crash-recovery double-appends:
+            # (id, band) is a natural key, so exact-duplicate rows are
+            # always redundant
+            old.dropDuplicates(["id", "band", "bucket"])
+            .repartition("band", "bucket")
+            .sortWithinPartitions("band", "bucket", "id")
+            .write.mode("overwrite")
+            .parquet(tmp)
         )
 
     def add(
@@ -749,10 +815,8 @@ class LshIndex:
         With ``batch_id``, the add is idempotent under at-least-once
         re-delivery (the ExactIndex applied-batch-ledger pattern): a
         new id records the batch's band rows at ``applied/<id>``
-        (recording marked complete BEFORE the index append, ledger
-        renamed atomically AFTER it, all under the flock — a crash in
-        between is healed from the recording on the next touch, never
-        by recomputing against a polluted index); a replayed id skips
+        (seal sequence and crash healing: ``_LedgeredIndex._apply``);
+        a replayed id skips
         the append and probes the index MINUS the batch's own band
         rows — an anti-join on the batch's ids, which are corpus-unique
         and therefore remove exactly what the first run appended,
@@ -775,17 +839,7 @@ class LshIndex:
             .persist()
         )
         try:
-            replay = False
-            bdir = None
-            if batch_id is not None:
-                bdir = _ledger_dir(self.path, batch_id)
-                if os.path.isdir(bdir):
-                    replay = True
-                elif _ledger_tmps(bdir):
-                    with self._locked():
-                        replay = _ledger_recover_locked(
-                            bdir, self._replay_append
-                        )
+            replay = batch_id is not None and self.batch_applied(batch_id)
             old = self._existing()
             if replay and old is not None:
                 # pre-batch view reconstruction: drop the batch's OWN
@@ -855,150 +909,19 @@ class LshIndex:
             # materialize pairs BEFORE appending: the probe must not see
             # the batch's own rows through the index
             out = pairs.localCheckpoint(eager=True)
-            if replay:
-                return out  # ledger says applied: index stays untouched
-            with self._locked():
-                tmp = None
-                if bdir is not None:
-                    if os.path.isdir(bdir):
-                        # applied between our check and this flock (the
-                        # single-writer contract makes this unreachable,
-                        # but an append here would double the rows)
-                        return out
-                    tmp = bdir + f"!tmp-{os.getpid()}-{time.time_ns():x}"
-                    bands.select("id", "band", "bucket").repartition(
-                        1
-                    ).write.mode("overwrite").parquet(tmp)
-                    # recording durable, THEN marked complete, THEN the
-                    # marker made durable — recovery's write-ordering
-                    # argument (_ledger_recover_locked) must hold on
-                    # disk under power loss, not just in page cache
-                    fsync_tree(tmp)
-                    open(os.path.join(tmp, "_COMPLETE"), "w").close()
-                    fsync_file(os.path.join(tmp, "_COMPLETE"))
-                    fsync_dir(tmp)
-                    before = snapshot_files(self._data)
-                bands.write.mode("append").parquet(self._data)
-                if tmp is not None:
-                    # appended rows durable BEFORE the seal: a durable
-                    # ledger entry over a lost append would drop the
-                    # batch's bands forever (replay skips the append)
-                    fsync_new_files(self._data, before)
-                    os.rename(tmp, bdir)  # atomic applied marker, LAST
-                    fsync_dir(os.path.dirname(bdir))
+            if not replay:  # ledger says applied: index stays untouched
+                self._apply(batch_id, bands)
             return out
         finally:
             bands.unpersist()
 
-    def _replay_append(self, recording: str) -> None:
-        """Re-append a dead attempt's recorded band rows to the index
-        (crash-window recovery; caller holds the flock). Duplicates
-        with whatever the dead attempt already appended are tolerated
-        by the distinct'd pair output and healed by :meth:`compact`."""
-        before = snapshot_files(self._data)
-        self.spark.read.schema("id long, band int, bucket string").parquet(
-            recording
-        ).write.mode("append").parquet(self._data)
-        fsync_new_files(self._data, before)  # durable before the promotion
-
-    def batch_applied(self, batch_id: str) -> bool:
-        """Has ``batch_id`` been recorded by a completed :meth:`add`?
-        (The replay guard.) Also HEALS the crash window: a complete
-        orphaned recording is finished (re-append + ledger rename) and
-        counts as applied; a torn one is reaped and does not."""
-        bdir = _ledger_dir(self.path, batch_id)
-        if os.path.isdir(bdir):
-            return True
-        if not _ledger_tmps(bdir):
-            return False
-        with self._locked():
-            return _ledger_recover_locked(bdir, self._replay_append)
-
     def batch_bands(self, batch_id: str) -> DataFrame:
         """The band rows a completed batch appended — what a replayed
-        :meth:`add` subtracts from the probe view (by id). Explicit
-        schema: an empty batch's ledger dir holds zero data files."""
-        return self.spark.read.schema(
-            "id long, band int, bucket string"
-        ).parquet(_ledger_dir(self.path, batch_id))
-
-    def _locked(self):
-        """Exclusive flock over the index's mutation window (the same
-        protocol as the database's .compact lock): serializes add()'s
-        append against compact()'s directory swap, so an add landing in
-        the swap window can no longer recreate the data dir between the
-        two renames and fail the second one."""
-        import contextlib
-        import fcntl
-        import os
-
-        @contextlib.contextmanager
-        def hold():
-            fd = os.open(
-                os.path.join(self.path, ".lock"), os.O_CREAT | os.O_RDWR
-            )
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX)
-                yield
-            finally:
-                os.close(fd)
-
-        return hold()
-
-    def compact(self) -> None:
-        """Rewrite the accumulated per-batch band files into one compact
-        file set (the index analogue of the database's minor compaction:
-        many small appends -> one sorted layout, fewer files to open per
-        probe). The rewrite job runs lock-free; only the two-rename swap
-        holds the index flock, so a concurrent add() blocks for the
-        microseconds of the swap instead of the whole rewrite — and an
-        add() landing mid-swap can no longer recreate the data dir
-        between the renames (the failure the pre-lock design documented
-        as a single-writer requirement). An add() whose append lands
-        AFTER the rewrite read its file list but BEFORE the swap would
-        be dropped by the swap — excluded by taking the lock around
-        list+rewrite+swap when the caller interleaves them; since both
-        run in this method, the lock covers the whole sequence."""
-        import os
-        import shutil
-        import time
-
-        with self._locked():
-            # restore-or-reap debris from compactions that died
-            # mid-swap: a backup whose data dir is MISSING is the live
-            # index, not debris (the lock guarantees no live compaction
-            # owns these names)
-            _recover_swap_locked(self._data)
-            # finish-or-reap orphaned ledger recordings BEFORE reading
-            # the rewrite input (finishing one appends to the index)
-            _sweep_ledger_tmps_locked(self.path, self._replay_append)
-            old = self._existing()
-            if old is None:
-                return
-            tmp = self._data + f".compact-{os.getpid()}-{time.time_ns():x}"
-            (
-                # dropDuplicates heals crash-recovery double-appends:
-                # (id, band) is a natural key, so exact-duplicate rows
-                # are always redundant
-                old.dropDuplicates(["id", "band", "bucket"])
-                .repartition("band", "bucket")
-                .sortWithinPartitions("band", "bucket", "id")
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-            # the swap destroys the old layout, so the compacted one
-            # must be durable FIRST (the index is the corpus's dedup
-            # memory — losing it to a power loss silently un-dedups
-            # every future batch); same contract as the db compactor
-            fsync_tree(tmp)
-            back = self._data + f".old-{time.time_ns():x}"
-            os.rename(self._data, back)
-            os.rename(tmp, self._data)
-            fsync_dir(self.path)  # both renames durable before the purge
-            shutil.rmtree(back, ignore_errors=True)
+        :meth:`add` subtracts from the probe view (by id)."""
+        return self._recorded(batch_id)
 
 
-class ExactIndex:
+class ExactIndex(_LedgeredIndex):
     """Persistent content-hash index for INCREMENTAL exact dedup — the
     exact-match sibling of :class:`LshIndex`. A growing corpus dedups
     each arriving batch against everything already ingested WITHOUT
@@ -1017,25 +940,11 @@ class ExactIndex:
     protocol as LshIndex.
     """
 
+    _SCHEMA = "h string, pfx string"
+    _RECORD_SCHEMA = "h string"
+
     def __init__(self, spark, path: str):
-        import os
-
-        self.spark = spark
-        self.path = os.path.abspath(path)
-        os.makedirs(self.path, exist_ok=True)
-        self._data = os.path.join(self.path, "hashes")
-        _heal_index_swap_on_open(self._data, self._locked)
-
-    def _existing(self) -> DataFrame | None:
-        import os
-
-        if not os.path.isdir(self._data):
-            return None
-        return (
-            self.spark.read.schema("h string, pfx string")
-            .option("basePath", self._data)
-            .parquet(self._data)
-        )
+        self._open(spark, path, "hashes")
 
     def add(self, docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
         """Dedup ``docs`` against the index AND within the batch, index
@@ -1097,155 +1006,48 @@ class ExactIndex:
         already indexed and has truncated lineage if the frame derives
         from a read of this index) under the index flock.
 
-        Sized by row count, not shuffle parallelism: a partitionBy
-        write from every shuffle partition emits tasks x 256 tiny
-        files (measured 20 s for a 20k-row batch at 32 tasks); hashing
-        pfx into ceil(rows/250k) tasks bounds the append at ~256 files
-        total while big ingests still fan out.
-
         With ``batch_id``, the append is an idempotence-ledger entry
         (the DdStore pattern at this store's granularity): an id whose
         ledger entry exists is a NO-OP under the same flock, and a new
         id records the appended hash set at ``applied/<id>`` so a
         replayed probe can reconstruct the pre-batch index view
         (:func:`~sonnerie_spark.operators.text.dedup_paragraphs_incremental`).
-        Ordering is recording (marked ``_COMPLETE``) -> index append ->
-        ledger rename: a crash between the last two is HEALED on the
-        next touch of this batch_id — :func:`_ledger_recover_locked`
-        re-appends the completed recording (the fresh set the first
-        run computed against the PRE-batch view; duplicate hash rows
-        in the index are tolerated by every probe, which joins
-        semi/anti on ``h``, and healed by :meth:`compact`) and promotes
-        it to the ledger, so the batch counts as applied with its
-        original fresh set — never recomputed against an index already
-        polluted by the dead attempt."""
-        fresh = hashes.select("h").withColumn("pfx", F.substring("h", 1, 2))
-        n_tasks = min(256, max(1, fresh.count() // 250_000 + 1))
-        with self._locked():
-            bdir = tmp = None
-            if batch_id is not None:
-                bdir = self._batch_dir(batch_id)
-                if _ledger_recover_locked(bdir, self._replay_append):
-                    return  # applied (possibly just now, from a recording)
-                tmp = bdir + f"!tmp-{os.getpid()}-{time.time_ns():x}"
-                fresh.select("h").repartition(1).write.mode(
-                    "overwrite"
-                ).parquet(tmp)
-                # recording durable, then marker, then marker durable —
-                # the recovery ordering must hold under power loss (see
-                # the LshIndex.add ledger block; same barriers)
-                fsync_tree(tmp)
-                open(os.path.join(tmp, "_COMPLETE"), "w").close()
-                fsync_file(os.path.join(tmp, "_COMPLETE"))
-                fsync_dir(tmp)
-                before = snapshot_files(self._data)
-            fresh.select("h", "pfx").repartition(
-                n_tasks, "pfx"
-            ).write.mode("append").partitionBy("pfx").parquet(self._data)
-            if bdir is not None:
-                fsync_new_files(self._data, before)  # rows before seal
-                os.rename(tmp, bdir)  # atomic applied marker, written LAST
-                fsync_dir(os.path.dirname(bdir))
-
-    def _replay_append(self, recording: str) -> None:
-        """Re-append a dead attempt's recorded fresh set to the index
-        (crash-window recovery; caller holds the flock). Duplicates
-        with whatever the dead attempt already appended are tolerated
-        by the semi/anti probes and healed by :meth:`compact`."""
-        fresh = (
-            self.spark.read.schema("h string")
-            .parquet(recording)
-            .withColumn("pfx", F.substring("h", 1, 2))
-        )
-        before = snapshot_files(self._data)
-        fresh.repartition(1, "pfx").write.mode("append").partitionBy(
-            "pfx"
-        ).parquet(self._data)
-        fsync_new_files(self._data, before)  # durable before the promotion
-
-    def _batch_dir(self, batch_id: str) -> str:
-        """Ledger path for a batch id (see :func:`_ledger_dir`)."""
-        return _ledger_dir(self.path, batch_id)
-
-    def batch_applied(self, batch_id: str) -> bool:
-        """Has ``batch_id`` been recorded by a completed
-        :meth:`append_hashes`? (The replay guard.) Also HEALS the
-        crash window: a complete orphaned recording is finished
-        (re-append + ledger rename) and counts as applied; a torn one
-        is reaped and does not — so a caller that crashed between the
-        index append and the ledger rename gets its first run's fresh
-        set back instead of recomputing against a polluted index."""
-        bdir = self._batch_dir(batch_id)
-        if os.path.isdir(bdir):
-            return True
-        if not _ledger_tmps(bdir):
-            return False
-        with self._locked():
-            return _ledger_recover_locked(bdir, self._replay_append)
+        A crash between the append and the seal is HEALED on the next
+        touch of this batch_id from the recording — the fresh set the
+        first run computed against the PRE-batch view (duplicate hash
+        rows are tolerated by every probe, which joins semi/anti on
+        ``h``, and healed by :meth:`compact`) — never recomputed against
+        an index already polluted by the dead attempt."""
+        self._apply(batch_id, hashes.select("h"))
 
     def batch_hashes(self, batch_id: str) -> DataFrame:
         """The hash set a completed batch appended — what a replayed
         probe subtracts from ``seen()`` to reconstruct the pre-batch
-        index view. Explicit schema: an all-duplicate batch appended
-        nothing and its ledger dir holds zero data files."""
-        return self.spark.read.schema("h string").parquet(
-            self._batch_dir(batch_id)
+        index view."""
+        return self._recorded(batch_id)
+
+    def _append(self, df: DataFrame) -> None:
+        """Sized by row count, not shuffle parallelism: a partitionBy
+        write from every shuffle partition emits tasks x 256 tiny
+        files (measured 20 s for a 20k-row batch at 32 tasks); hashing
+        pfx into ceil(rows/250k) tasks bounds the append at ~256 files
+        total while big ingests still fan out."""
+        n_tasks = min(256, max(1, df.count() // 250_000 + 1))
+        df.select("h").withColumn("pfx", F.substring("h", 1, 2)).repartition(
+            n_tasks, "pfx"
+        ).write.mode("append").partitionBy("pfx").parquet(self._data)
+
+    def _rewrite(self, old: DataFrame, tmp: str) -> None:
+        (
+            # the index is a hash SET: crash-recovery double-appends
+            # are redundant rows, healed here
+            old.dropDuplicates(["h"])
+            .repartition("pfx")
+            .sortWithinPartitions("h")
+            .write.partitionBy("pfx")
+            .parquet(tmp)
         )
 
-    def compact(self) -> None:
-        """Coalesce the per-batch file accumulation into one sorted file
-        per prefix partition (row-group stats then prune within a
-        partition probe too). Same lock protocol as LshIndex.compact."""
-        import os
-        import shutil
-        import time
-
-        with self._locked():
-            # restore-or-reap (see LshIndex.compact: a backup with no
-            # data dir is the live index a dead swap stranded)
-            _recover_swap_locked(self._data)
-            # finish-or-reap orphaned ledger recordings BEFORE reading
-            # the rewrite input (finishing one appends to the index)
-            _sweep_ledger_tmps_locked(self.path, self._replay_append)
-            old = self._existing()
-            if old is None:
-                return
-            tmp = self._data + f".compact-{os.getpid()}-{time.time_ns():x}"
-            (
-                # the index is a hash SET: crash-recovery double-appends
-                # are redundant rows, healed here
-                old.dropDuplicates(["h"])
-                .repartition("pfx")
-                .sortWithinPartitions("h")
-                .write.partitionBy("pfx")
-                .parquet(tmp)
-            )
-            # compacted layout durable before the old one is destroyed
-            # (same reasoning as LshIndex.compact)
-            fsync_tree(tmp)
-            back = self._data + f".old-{time.time_ns():x}"
-            os.rename(self._data, back)
-            os.rename(tmp, self._data)
-            fsync_dir(self.path)  # both renames durable before the purge
-            shutil.rmtree(back, ignore_errors=True)
-
-    def _locked(self):
-        import contextlib
-        import fcntl
-        import os
-
-        @contextlib.contextmanager
-        def hold():
-            fd = os.open(
-                os.path.join(self.path, ".lock"), os.O_CREAT | os.O_RDWR
-            )
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX)
-                yield
-            finally:
-                os.close(fd)
-
-        return hold()
 
 def _chunk_ranges(bits: int, chunks: int) -> list[tuple[int, int]]:
     """Partition ``bits`` into exactly ``chunks`` contiguous

@@ -19,6 +19,8 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from sonnerie_spark.fsutil import write_json_atomic
+
 
 def dot(a: Column, b: Column) -> Column:
     """Ordered float64 dot product of two array columns."""
@@ -1033,9 +1035,6 @@ class IvfIndex:
         iters: int = 1,
     ) -> DataFrame:
         """Train centroids on ``df`` and index it. Returns assignments."""
-        import json
-        import os
-
         cvs, cids = ivf_train(
             df,
             id_col=id_col,
@@ -1043,10 +1042,7 @@ class IvfIndex:
             num_centroids=num_centroids,
             iters=iters,
         )
-        tmp = self._meta + f".tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"vectors": cvs, "ids": cids}, f)
-        os.replace(tmp, self._meta)
+        write_json_atomic(self._meta, {"vectors": cvs, "ids": cids})
         return self.add(df, id_col, vec_col)
 
     def add(
@@ -1185,9 +1181,6 @@ class IvfPqIndex:
         scale: int = 10**7,
     ) -> DataFrame:
         """Train centroids + codebooks on ``df`` and index it."""
-        import json
-        import os
-
         cvs, cids = ivf_train(
             df,
             id_col=id_col,
@@ -1209,18 +1202,15 @@ class IvfPqIndex:
             books = pq_codebook_data(
                 df, id_col=id_col, vec_col=vec_col, m=pq_m, ksub=pq_ksub
             )
-        tmp = self._meta + f".tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "centroid_vectors": cvs,
-                    "centroid_ids": cids,
-                    "codebooks": books,
-                    "scale": scale,
-                },
-                f,
-            )
-        os.replace(tmp, self._meta)
+        write_json_atomic(
+            self._meta,
+            {
+                "centroid_vectors": cvs,
+                "centroid_ids": cids,
+                "codebooks": books,
+                "scale": scale,
+            },
+        )
         return self.add(df, id_col, vec_col)
 
     def add(

@@ -16,8 +16,18 @@ sketch — bounded dimension data, same class as IVF centroids.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import Column, DataFrame, functions as F
 
+from sonnerie_spark.fsutil import (
+    load_generation,
+    publish_generation,
+    store_lock,
+    tmp_name,
+    write_json_atomic,
+)
 from sonnerie_spark.functions.portable_hash import HASH_BITS, phash, phash_sql
 
 __all__ = [
@@ -998,149 +1008,78 @@ def hll_estimates_grouped(
     )
 
 
-def _init_store_params(
-    meta_path: str, asked: dict, defaults: dict, store: str
-) -> dict:
-    """Read-or-create a store's ``params.json`` (caller HOLDS the store
-    lock) — BloomStore's pattern, shared so HllStore and DdStore get
-    the same guarantee: reopening adopts the persisted parameter set
-    and REFUSES an explicit mismatch instead of silently merging
-    sketches built in incompatible bucket spaces (a bucket_bits or
-    relative_accuracy change between opens corrupts every estimate
-    with no error anywhere downstream). ``asked`` values of None mean
-    "adopt persisted, else the default"."""
-    import json
-    import os
+class _GenerationStore:
+    """What HllStore, BloomStore and DdStore share: a store root with a
+    ``params.json`` and one data generation, published and loaded
+    through the :mod:`sonnerie_spark.fsutil` generation protocol (one
+    retained backup), every access under the store flock."""
 
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-        _require_params_match(
-            store,
-            {k: v for k, v in asked.items() if v is not None},
-            meta,
+    def _open(
+        self, spark, path: str, data: str, asked: dict, defaults: dict
+    ) -> dict:
+        """Bind the store and read-or-create its ``params.json`` under
+        the lock, so two processes opening a fresh store agree on one
+        parameter set. Reopening adopts the persisted set and REFUSES
+        an explicit mismatch instead of silently merging sketches built
+        in incompatible bucket spaces (a bucket_bits or
+        relative_accuracy change between opens corrupts every estimate
+        with no error anywhere downstream). ``asked`` values of None
+        mean "adopt persisted, else the default"."""
+        self.spark = spark
+        self.path = os.path.abspath(path)
+        os.makedirs(self.path, exist_ok=True)
+        self._data = os.path.join(self.path, data)
+        meta_path = os.path.join(self.path, "params.json")
+        with self._locked():
+            if os.path.exists(meta_path):
+                with open(meta_path) as f:
+                    meta = json.load(f)
+                _require_params_match(
+                    type(self).__name__,
+                    {k: v for k, v in asked.items() if v is not None},
+                    meta,
+                )
+                return meta
+            meta = {
+                k: (v if v is not None else defaults[k])
+                for k, v in asked.items()
+            }
+            write_json_atomic(meta_path, meta)
+            return meta
+
+    def _locked(self):
+        return store_lock(self.path)
+
+    def _load(self, read):
+        """``read(dir)`` of the current generation, or None before the
+        first publish (caller holds the lock)."""
+        return load_generation(
+            self._data, read, f"{type(self).__name__} at {self.path}"
         )
-        return meta
-    final = {
-        k: (v if v is not None else defaults[k]) for k, v in asked.items()
-    }
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(final, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, meta_path)
-    return final
+
+    def _publish(self, write) -> None:
+        """``write(tmp)`` a whole new generation, then publish it
+        (caller holds the lock)."""
+        tmp = tmp_name(self._data)
+        write(tmp)
+        publish_generation(self._data, tmp, keep_backup=True)
 
 
-def _store_lock(root: str):
-    """Exclusive flock on ``root/.lock`` (context manager)."""
-    import contextlib
-    import fcntl
-    import os
-
-    @contextlib.contextmanager
-    def hold():
-        fd = os.open(os.path.join(root, ".lock"), os.O_CREAT | os.O_RDWR)
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            yield
-        finally:
-            os.close(fd)
-
-    return hold()
-
-
-def _recover_data_dir(data: str) -> None:
-    """Crash recovery for the two-rename swap (call under the lock):
-    a crash between ``rename(data -> back)`` and ``rename(tmp -> data)``
-    leaves no ``data`` — restore the newest ``.old-*`` backup (the
-    pre-swap generation: the interrupted write never committed, so the
-    caller's retry re-applies it cleanly). Abandoned ``.tmp-*`` dirs
-    and all but the newest ``.old-*`` backup are removed (any live
-    writer holds the lock we hold); the newest backup is RETAINED as
-    torn-write insurance — see :func:`_restore_backup`."""
-    import glob
-    import os
-    import shutil
-
-    backs = sorted(glob.glob(glob.escape(data) + ".old-*"))
-    if not os.path.isdir(data) and backs:
-        os.rename(backs.pop(), data)
-    for stale in (backs[:-1] if backs else []) + glob.glob(glob.escape(data) + ".tmp-*"):
-        shutil.rmtree(stale, ignore_errors=True)
-
-
-def _restore_backup(data: str) -> bool:
-    """Replace a PRESENT-but-unreadable generation with the retained
-    backup (call under the lock): a power loss after the swap's rename
-    can surface the new directory with torn contents (rename without
-    fsync); the backup is the last durable generation, and the write
-    it replaces was never acknowledged durable, so the caller's retry
-    re-applies it — the same exactly-once argument as the missing-dir
-    recovery. Returns False if no backup exists."""
-    import glob
-    import os
-    import shutil
-
-    backs = sorted(glob.glob(glob.escape(data) + ".old-*"))
-    if not backs:
-        return False
-    if os.path.isdir(data):
-        shutil.rmtree(data, ignore_errors=True)
-    os.rename(backs.pop(), data)
-    for stale in backs:
-        shutil.rmtree(stale, ignore_errors=True)
-    return True
-
-
-def _swap_data_dir(data: str, tmp: str) -> None:
-    """Atomically-recoverable generation swap (call under the lock):
-    the new generation in ``tmp`` — fsynced file-by-file first — is
-    renamed over ``data``, and the parent directory is fsynced so the
-    rename itself is durable; the replaced generation is RETAINED as
-    the single ``.old-*`` backup (older backups deleted) so a torn
-    post-swap directory can still be rolled back
-    (:func:`_restore_backup`). The two renames leave a crash window in
-    which ``data`` is missing — closed by :func:`_recover_data_dir` on
-    the next locked access."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    from sonnerie_spark.fsutil import fsync_tree
-
-    fsync_tree(tmp)
-    if os.path.isdir(data):
-        back = data + f".old-{time.time_ns():x}"
-        os.rename(data, back)
-        os.rename(tmp, data)
-        for stale in sorted(glob.glob(glob.escape(data) + ".old-*"))[:-1]:
-            shutil.rmtree(stale, ignore_errors=True)
-    else:
-        os.rename(tmp, data)
-    fd = os.open(os.path.dirname(data) or ".", os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
-
-
-class HllStore:
+class HllStore(_GenerationStore):
     """Persistent, incrementally-merged per-group HLL sketches — the
     streaming/multi-run face of :func:`hll_sketch`: "distinct users per
     day", "distinct tokens per source" maintained forever without ever
     rescanning history.
 
     ``add()`` sketches the arriving batch per group and max-merges it
-    into the stored table under a file lock with an atomic
-    tmp+rename swap. Because per-bucket max is idempotent, associative,
-    and commutative, replaying a batch (at-least-once streaming
-    delivery, foreachBatch retries) leaves the store EXACTLY unchanged
-    — no transactional sink is needed for correctness, only the swap's
-    atomicity. The store is ≤ groups·2^b integer rows: rewriting it per
-    add is a bounded dimension-table write, not a corpus cost.
+    into the stored table as a new generation (crash contract:
+    :mod:`sonnerie_spark.fsutil`). Because per-bucket max is
+    idempotent, associative, and commutative, replaying a batch
+    (at-least-once streaming delivery, foreachBatch retries) leaves the
+    store EXACTLY unchanged — no transactional sink is needed for
+    correctness, only the publish's atomicity. The store is ≤
+    groups·2^b integer rows: rewriting it per add is a bounded
+    dimension-table write, not a corpus cost.
 
     SIZE CONTRACT: reads materialize driver-side under the store lock
     (what closes the swap races) and writes coalesce to one file, so
@@ -1150,24 +1089,10 @@ class HllStore:
     """
 
     def __init__(self, spark, path: str, *, bucket_bits: int | None = None):
-        import os
-
-        self.spark = spark
-        self.path = os.path.abspath(path)
-        os.makedirs(self.path, exist_ok=True)
-        self._data = os.path.join(self.path, "sketches")
-        # persisted at creation, validated on reopen (BloomStore's
-        # params.json rule): a store reopened with different
-        # bucket_bits would max-merge sketches from incompatible
-        # bucket spaces with no error anywhere — None adopts the
-        # persisted value (default 8 on a fresh store)
-        with self._locked():
-            meta = _init_store_params(
-                os.path.join(self.path, "params.json"),
-                {"bucket_bits": bucket_bits},
-                {"bucket_bits": 8},
-                "HllStore",
-            )
+        meta = self._open(
+            spark, path, "sketches",
+            {"bucket_bits": bucket_bits}, {"bucket_bits": 8},
+        )
         self.bucket_bits = int(meta["bucket_bits"])
 
     def sketches(self) -> DataFrame:
@@ -1179,59 +1104,27 @@ class HllStore:
         is a tiny pyarrow read, and it means a concurrent ``add()``'s
         directory swap can neither expose the between-renames
         missing-dir window nor delete parquet files under a lazy
-        distributed scan (ADVICE r6: other persistent paths bracket
-        reads with fingerprint+retry; here the read is small enough to
-        simply serialize under the same flock the writer holds)."""
+        distributed scan."""
         with self._locked():
             return self._sketches_unlocked()
 
     def _sketches_unlocked(self) -> DataFrame:
-        import os
+        import pyarrow.parquet as pq
 
-        import pyarrow as pa
-
-        _recover_data_dir(self._data)
-        if not os.path.isdir(self._data):
+        tbl = self._load(pq.read_table)
+        if tbl is None:
             return self.spark.createDataFrame(
                 [], "grp string, bucket int, max_rho int"
             )
-        import pyarrow.parquet as pq
-
-        try:
-            tbl = pq.read_table(self._data)
-        except (FileNotFoundError, pa.ArrowInvalid):
-            # torn post-crash generation (rename surfaced without its
-            # contents being durable): roll back to the retained
-            # backup — the torn write was never acknowledged, so the
-            # producer's retry re-applies it (max-merge: idempotent).
-            # ONLY corruption signals trigger the destructive rollback;
-            # transient errors (EMFILE/EACCES/EIO arrive as other
-            # OSErrors) must raise, not destroy a healthy generation.
-            if not _restore_backup(self._data):
-                raise
-            try:
-                tbl = pq.read_table(self._data)
-            except (FileNotFoundError, pa.ArrowInvalid) as e:
-                raise RuntimeError(
-                    f"HllStore at {self.path}: current generation was "
-                    "corrupt and the restored backup is ALSO unreadable "
-                    f"({type(e).__name__}: {e}); the store cannot "
-                    "recover — rebuild it by replaying the source "
-                    "batches into a fresh path"
-                ) from e
         # Arrow table -> DataFrame directly: to_pandas() here would put
         # a groups x 2^b-row pandas conversion on the driver in EVERY
-        # add()/read (ADVICE r7) — the Arrow path keeps it zero-copy.
+        # add()/read — the Arrow path keeps it zero-copy.
         return self.spark.createDataFrame(
             tbl, schema="grp string, bucket int, max_rho int"
         )
 
     def add(self, df: DataFrame, group: Column | str, value: Column | str) -> None:
         """Sketch the batch per group and merge into the store."""
-        import os
-        import shutil
-        import time
-
         g = F.col(group) if isinstance(group, str) else group
         batch = hll_sketch_grouped(
             df, g.cast("string"), value, bucket_bits=self.bucket_bits
@@ -1245,9 +1138,7 @@ class HllStore:
                 .groupBy("grp", "bucket")
                 .agg(F.max("max_rho").alias("max_rho"))
             )
-            tmp = self._data + f".tmp-{os.getpid()}-{time.time_ns():x}"
-            merged.coalesce(1).write.parquet(tmp)
-            _swap_data_dir(self._data, tmp)
+            self._publish(lambda tmp: merged.coalesce(1).write.parquet(tmp))
 
     def estimates(self) -> DataFrame:
         """Per-group cardinality estimates ``(grp, est)``."""
@@ -1255,25 +1146,22 @@ class HllStore:
             self.sketches(), bucket_bits=self.bucket_bits
         )
 
-    def _locked(self):
-        return _store_lock(self.path)
 
-
-class BloomStore:
+class BloomStore(_GenerationStore):
     """Persistent, incrementally-OR-merged Bloom filter — the streaming
     face of :func:`bloom_sketch`: a blocklist/decontamination filter
     that accumulates forever ("every URL ever crawled", "every eval-set
     shingle ever registered") without rescanning history.
 
     ``add()`` sketches the arriving batch and bit_or-merges it into the
-    stored word table under the family's flock + atomic tmp+rename
-    swap. Per-word OR is idempotent, associative, and commutative —
-    exactly HllStore's replay argument — so at-least-once delivery
-    (foreachBatch retries) leaves the store EXACTLY unchanged and no
-    ledger is needed (contrast DdStore, whose sum-merge is not
-    replay-idempotent). The store is ≤ num_bits/63 integer rows
-    regardless of how many values were ever added: rewriting it per
-    add is a fixed-size dimension-table write.
+    stored word table as a new generation (crash contract:
+    :mod:`sonnerie_spark.fsutil`). Per-word OR is idempotent,
+    associative, and commutative — exactly HllStore's replay argument —
+    so at-least-once delivery (foreachBatch retries) leaves the store
+    EXACTLY unchanged and no ledger is needed (contrast DdStore, whose
+    sum-merge is not replay-idempotent). The store is ≤ num_bits/63
+    integer rows regardless of how many values were ever added:
+    rewriting it per add is a fixed-size dimension-table write.
 
     ``num_bits``/``num_hashes`` are fixed at creation and persisted in
     ``params.json`` beside the word table (flock-initialized so two
@@ -1295,58 +1183,23 @@ class BloomStore:
         num_bits: int | None = None,
         num_hashes: int | None = None,
     ):
-        import json
-        import os
-
-        self.spark = spark
-        self.path = os.path.abspath(path)
-        os.makedirs(self.path, exist_ok=True)
-        self._data = os.path.join(self.path, "words")
-        self._meta = os.path.join(self.path, "params.json")
-        with self._locked():
-            self._init_params(num_bits, num_hashes)
-
-    def _init_params(
-        self, num_bits: int | None, num_hashes: int | None
-    ) -> None:
-        """Read-or-create params.json UNDER THE STORE LOCK — two
-        processes opening a fresh store concurrently must agree on one
-        parameter set, not last-rename-wins."""
-        import json
-        import os
-
-        if os.path.exists(self._meta):
-            # reopening: parameters come from the store; EXPLICIT args
-            # must match (None = adopt whatever was persisted)
-            with open(self._meta) as f:
-                meta = json.load(f)
-            asked = {
-                k: v
-                for k, v in (("num_bits", num_bits),
-                             ("num_hashes", num_hashes))
-                if v is not None
-            }
-            _require_params_match("BloomStore", asked, meta)
-            self.num_bits = int(meta["num_bits"])
-            self.num_hashes = int(meta["num_hashes"])
-        else:
-            self.num_bits = int(num_bits if num_bits is not None else 1 << 20)
-            self.num_hashes = int(num_hashes if num_hashes is not None else 4)
-            if self.num_bits <= 1 or self.num_hashes < 1:
-                raise ValueError(
-                    f"invalid Bloom parameters num_bits={self.num_bits} "
-                    f"num_hashes={self.num_hashes}"
-                )
-            tmp = self._meta + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"num_bits": self.num_bits,
-                     "num_hashes": self.num_hashes},
-                    f,
-                )
-                f.flush()
-                os.fsync(f.fileno())
-            os.rename(tmp, self._meta)
+        if (num_bits is not None and num_bits <= 1) or (
+            num_hashes is not None and num_hashes < 1
+        ):
+            raise ValueError(
+                f"invalid Bloom parameters num_bits={num_bits} "
+                f"num_hashes={num_hashes}"
+            )
+        meta = self._open(
+            spark, path, "words",
+            {
+                "num_bits": None if num_bits is None else int(num_bits),
+                "num_hashes": None if num_hashes is None else int(num_hashes),
+            },
+            {"num_bits": 1 << 20, "num_hashes": 4},
+        )
+        self.num_bits = int(meta["num_bits"])
+        self.num_hashes = int(meta["num_hashes"])
 
     def sketch(self) -> DataFrame:
         """The current word table ``(word_idx, bits)``, tagged with the
@@ -1355,41 +1208,13 @@ class BloomStore:
             return self._sketch_unlocked()
 
     def _sketch_unlocked(self) -> DataFrame:
-        import os
-
-        import pyarrow as pa
-
-        _recover_data_dir(self._data)
-        if not os.path.isdir(self._data):
-            return _tagged(
-                self.spark.createDataFrame(
-                    [], "word_idx bigint, bits bigint"
-                ),
-                "bits",
-                num_bits=self.num_bits,
-                num_hashes=self.num_hashes,
-            )
         import pyarrow.parquet as pq
 
-        try:
-            tbl = pq.read_table(self._data)
-        except (FileNotFoundError, pa.ArrowInvalid):
-            # same corruption-only rollback contract as HllStore
-            if not _restore_backup(self._data):
-                raise
-            try:
-                tbl = pq.read_table(self._data)
-            except (FileNotFoundError, pa.ArrowInvalid) as e:
-                raise RuntimeError(
-                    f"BloomStore at {self.path}: current generation "
-                    "was corrupt and the restored backup is ALSO "
-                    f"unreadable ({type(e).__name__}: {e}); the store "
-                    "cannot recover — rebuild it by replaying the "
-                    "source batches into a fresh path"
-                ) from e
+        tbl = self._load(pq.read_table)
         return _tagged(
             self.spark.createDataFrame(
-                tbl, schema="word_idx bigint, bits bigint"
+                [] if tbl is None else tbl,
+                schema="word_idx bigint, bits bigint",
             ),
             "bits",
             num_bits=self.num_bits,
@@ -1399,9 +1224,6 @@ class BloomStore:
     def add(self, df: DataFrame, value: Column | str) -> None:
         """Sketch the batch and OR-merge it into the store (replay-
         idempotent: re-adding any batch is a no-op)."""
-        import os
-        import time
-
         batch = bloom_sketch(
             df, value, num_bits=self.num_bits, num_hashes=self.num_hashes
         )
@@ -1412,9 +1234,7 @@ class BloomStore:
                 .groupBy("word_idx")
                 .agg(F.bit_or("bits").alias("bits"))
             )
-            tmp = self._data + f".tmp-{os.getpid()}-{time.time_ns():x}"
-            merged.coalesce(1).write.parquet(tmp)
-            _swap_data_dir(self._data, tmp)
+            self._publish(lambda tmp: merged.coalesce(1).write.parquet(tmp))
 
     def might_contain(
         self, candidates: DataFrame, value: Column | str
@@ -1434,28 +1254,19 @@ class BloomStore:
         the operational answer to Bloom's structural no-delete (bits
         only ever set): when the blocklist legitimately SHRINKS (URLs
         un-banned, an eval set retired), re-sketch the current source
-        of truth and swap it in as a new generation under the same
-        flock + atomic-rename protocol add() uses. Parameters are
-        kept (probes in flight against the old generation stay valid;
-        a parameter change is a new store, not a rebuild). Unlike
-        add(), rebuild is NOT replay-idempotent against concurrent
-        add()s — adds that land between the source snapshot and the
-        swap are lost by design (the caller declared ``df`` the
-        complete membership); run it from the single owner the flock
-        already implies for writers."""
-        import os
-        import time
-
+        of truth and publish it as a new generation under the same
+        lock add() uses. Parameters are kept (probes in flight against
+        the old generation stay valid; a parameter change is a new
+        store, not a rebuild). Unlike add(), rebuild is NOT
+        replay-idempotent against concurrent add()s — adds that land
+        between the source snapshot and the publish are lost by design
+        (the caller declared ``df`` the complete membership); run it
+        from the single owner the flock already implies for writers."""
         fresh = bloom_sketch(
             df, value, num_bits=self.num_bits, num_hashes=self.num_hashes
         )
         with self._locked():
-            tmp = self._data + f".tmp-{os.getpid()}-{time.time_ns():x}"
-            fresh.coalesce(1).write.parquet(tmp)
-            _swap_data_dir(self._data, tmp)
-
-    def _locked(self):
-        return _store_lock(self.path)
+            self._publish(lambda tmp: fresh.coalesce(1).write.parquet(tmp))
 
 
 def _ledger_parse(raw) -> tuple[int, set[int]]:
@@ -1480,7 +1291,7 @@ def _ledger_dump(upto: int, extras: set[int]) -> dict:
     return {"upto": upto, "extras": sorted(extras)}
 
 
-class DdStore:
+class DdStore(_GenerationStore):
     """Persistent per-group DDSketch under streaming ingest — the
     quantile sibling of :class:`HllStore` ("p99 per key maintained
     forever without rescanning history").
@@ -1489,12 +1300,11 @@ class DdStore:
     is NOT idempotent: an at-least-once replay (a foreachBatch retry)
     would double-count. ``add()`` therefore takes the micro-batch's
     ``batch_id`` (Spark's epoch id) and keeps the applied-id LEDGER
-    INSIDE the swapped generation directory, so "counts merged" and
+    INSIDE the published generation directory, so "counts merged" and
     "id recorded" commit in the same atomic rename: a replayed id is a
-    no-op, and a crash mid-add restores the pre-add generation
-    (:func:`_recover_data_dir` — the interrupted batch was never
-    recorded, so its retry applies cleanly). Exactly-once semantics on
-    top of at-least-once delivery.
+    no-op, and a crash mid-add leaves the pre-add generation (the
+    interrupted batch was never recorded, so its retry applies
+    cleanly). Exactly-once semantics on top of at-least-once delivery.
 
     SIZE CONTRACT (shared with HllStore): the store is O(groups ·
     buckets) integer rows and is treated as BOUNDED DIMENSION DATA —
@@ -1505,6 +1315,8 @@ class DdStore:
     needs a partitioned store design, not this class.
     """
 
+    _SCHEMA = "grp string, sgn int, bucket long, n long"
+
     def __init__(
         self,
         spark,
@@ -1513,32 +1325,17 @@ class DdStore:
         relative_accuracy: float | None = None,
         min_value: float | None = None,
     ):
-        import os
-
-        self.spark = spark
-        self.path = os.path.abspath(path)
-        os.makedirs(self.path, exist_ok=True)
-        self._data = os.path.join(self.path, "gen")
-        # persisted at creation, validated on reopen (BloomStore's
-        # params.json rule): buckets computed under a different gamma
-        # would sum-merge into silently wrong quantiles — None adopts
-        # the persisted values (0.01 / 1e-9 on a fresh store)
-        with self._locked():
-            meta = _init_store_params(
-                os.path.join(self.path, "params.json"),
-                {
-                    "relative_accuracy": (
-                        None
-                        if relative_accuracy is None
-                        else float(relative_accuracy)
-                    ),
-                    "min_value": (
-                        None if min_value is None else float(min_value)
-                    ),
-                },
-                {"relative_accuracy": 0.01, "min_value": 1e-9},
-                "DdStore",
-            )
+        meta = self._open(
+            spark, path, "gen",
+            {
+                "relative_accuracy": (
+                    None if relative_accuracy is None
+                    else float(relative_accuracy)
+                ),
+                "min_value": None if min_value is None else float(min_value),
+            },
+            {"relative_accuracy": 0.01, "min_value": 1e-9},
+        )
         self.relative_accuracy = float(meta["relative_accuracy"])
         self.min_value = float(meta["min_value"])
 
@@ -1547,102 +1344,36 @@ class DdStore:
     def sketches(self) -> DataFrame:
         """Current merged table ``(grp, sgn, bucket, n)``."""
         with self._locked():
-            return self._data_unlocked()
+            return self._frame(self._state_unlocked()[1])
 
     def applied(self) -> set[int]:
-        """Batch ids already merged (the exactly-once ledger) — reads
-        only the ledger file, not the bucket table."""
+        """Batch ids already merged (the exactly-once ledger)."""
         with self._locked():
-            return self._ledger_unlocked()
-
-    def _recovered(self):
-        """Recover/validate the current generation (call under the
-        lock): restores the missing-dir crash window, and rolls a
-        PRESENT-but-torn generation (unreadable ledger or parquet —
-        rename without fsync after a power loss) back to the retained
-        backup; the torn write was never recorded in a durable ledger,
-        so the producer's retry re-applies it exactly once. Returns
-        True if a generation exists."""
-        import json
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        _recover_data_dir(self._data)
-        if not os.path.isdir(self._data):
-            return False
-        def _valid() -> None:
-            with open(os.path.join(self._data, "applied.json")) as f:
-                json.load(f)
-            pq.ParquetDataset(os.path.join(self._data, "data"))
-
-        try:
-            _valid()
-        except (FileNotFoundError, ValueError, pa.ArrowInvalid):
-            # corruption signals only (missing/truncated file, torn
-            # parquet footer); transient OSErrors raise instead of
-            # destroying a healthy acknowledged generation
-            if not _restore_backup(self._data):
-                raise
-            # a doubly-torn state (backup ALSO unreadable) must surface
-            # as a clear recovery error here, not as a raw
-            # JSONDecodeError/ArrowInvalid from a later read
-            try:
-                _valid()
-            except (FileNotFoundError, ValueError, pa.ArrowInvalid) as e:
-                raise RuntimeError(
-                    f"DdStore at {self.path}: current generation was "
-                    "corrupt and the restored backup is ALSO unreadable "
-                    f"({type(e).__name__}: {e}); the store cannot "
-                    "recover — rebuild it by replaying the source "
-                    "batches into a fresh path"
-                ) from e
-        return os.path.isdir(self._data)
-
-    _SCHEMA = "grp string, sgn int, bucket long, n long"
-
-    def _ledger_unlocked(self) -> set[int]:
-        import json
-        import os
-
-        if not self._recovered():
-            return set()
-        with open(os.path.join(self._data, "applied.json")) as f:
-            upto, extras = _ledger_parse(json.load(f))
+            upto, extras = self._state_unlocked()[0]
         # materializes the full id set -- a test/debug surface; the
         # persisted form stays O(gaps) however long the stream runs
         return set(range(upto + 1)) | extras
 
-    def _data_unlocked(self) -> DataFrame:
-        import os
-
+    def _state_unlocked(self):
+        """``((upto, extras), arrow table or None)`` — ledger AND bucket
+        table read from ONE generation, so a rollback between two
+        separate reads can never pair generation G's ledger with G-1's
+        counts (a lying ledger that refuses the missing batch's retry
+        forever)."""
         import pyarrow.parquet as pq
 
-        if not self._recovered():
-            return self.spark.createDataFrame([], self._SCHEMA)
-        tbl = pq.read_table(os.path.join(self._data, "data"))
+        def read(gen: str):
+            with open(os.path.join(gen, "applied.json")) as f:
+                led = _ledger_parse(json.load(f))
+            return led, pq.read_table(os.path.join(gen, "data"))
+
+        return self._load(read) or ((-1, set()), None)
+
+    def _frame(self, tbl) -> DataFrame:
         # Arrow -> DataFrame directly (no driver pandas round-trip)
-        return self.spark.createDataFrame(tbl, schema=self._SCHEMA)
-
-    def _state_unlocked(self) -> tuple[tuple[int, set[int]], DataFrame]:
-        """Ledger AND bucket table from ONE validated generation — the
-        writer's read path: two separate recovery passes could observe
-        different generations if the second validation rolls back,
-        writing generation G's ledger over G-1's counts (a lying
-        ledger that refuses the missing batch's retry forever)."""
-        import json
-        import os
-
-        import pyarrow.parquet as pq
-
-        if not self._recovered():
-            return (-1, set()), self.spark.createDataFrame([], self._SCHEMA)
-        with open(os.path.join(self._data, "applied.json")) as f:
-            led = _ledger_parse(json.load(f))
-        tbl = pq.read_table(os.path.join(self._data, "data"))
-        # Arrow -> DataFrame directly (no driver pandas round-trip)
-        return led, self.spark.createDataFrame(tbl, schema=self._SCHEMA)
+        return self.spark.createDataFrame(
+            [] if tbl is None else tbl, schema=self._SCHEMA
+        )
 
     # -- writes ---------------------------------------------------------
 
@@ -1655,10 +1386,6 @@ class DdStore:
     ) -> bool:
         """Sketch the batch per group and sum-merge it into the store;
         returns False (no-op) if ``batch_id`` was already applied."""
-        import json
-        import os
-        import time
-
         if int(batch_id) < 0:
             raise ValueError(
                 f"batch_id must be >= 0 (got {batch_id}): the compressed "
@@ -1675,30 +1402,27 @@ class DdStore:
             min_value=self.min_value,
         )
         with self._locked():
-            (upto, extras), current = self._state_unlocked()
+            (upto, extras), tbl = self._state_unlocked()
             bid = int(batch_id)
             if bid <= upto or bid in extras:
                 return False
             merged = (
-                current.unionByName(batch)
+                self._frame(tbl).unionByName(batch)
                 .groupBy("grp", "sgn", "bucket")
                 .agg(F.sum("n").alias("n"))
             )
-            tmp = self._data + f".tmp-{os.getpid()}-{time.time_ns():x}"
-            os.makedirs(tmp)
-            merged.coalesce(1).write.parquet(os.path.join(tmp, "data"))
-            # the whole tmp generation is fsynced file-by-file and the
-            # parent directory fsynced after the rename (_swap_data_dir)
-            # — the standard rename-durability recipe; a crash that
-            # still tears the rename is detected by _recovered and
-            # rolled back to the backup
             extras.add(bid)
             while upto + 1 in extras:
                 upto += 1
                 extras.discard(upto)
-            with open(os.path.join(tmp, "applied.json"), "w") as f:
-                json.dump(_ledger_dump(upto, extras), f)
-            _swap_data_dir(self._data, tmp)
+
+            def write(tmp: str) -> None:
+                os.makedirs(tmp)
+                merged.coalesce(1).write.parquet(os.path.join(tmp, "data"))
+                with open(os.path.join(tmp, "applied.json"), "w") as f:
+                    json.dump(_ledger_dump(upto, extras), f)
+
+            self._publish(write)
             return True
 
     # -- quantiles --------------------------------------------------------
@@ -1709,9 +1433,6 @@ class DdStore:
         return dd_group_quantile(
             self.sketches(), q, relative_accuracy=self.relative_accuracy
         )
-
-    def _locked(self):
-        return _store_lock(self.path)
 
 
 def hll_estimate(sketch: DataFrame, *, bucket_bits: int = 8) -> float:

@@ -43,6 +43,7 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from sonnerie_spark.db import RECORD_SCHEMA, Database
+from sonnerie_spark.fsutil import write_json_atomic
 
 CURSOR_FILE = "rollup.cursor.json"
 
@@ -148,17 +149,15 @@ class ContinuousRollup:
         return cur
 
     def _store_cursor(self, last_tx: str) -> None:
-        tmp = self._cursor_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "last_tx": last_tx,
-                    "interval_ns": self.interval_ns,
-                    "num_values": self.num_values,
-                },
-                f,
-            )
-        os.replace(tmp, self._cursor_path)
+        write_json_atomic(
+            self._cursor_path,
+            {
+                "last_tx": last_tx,
+                "interval_ns": self.interval_ns,
+                "num_values": self.num_values,
+            },
+            durable=self.dst.durable,
+        )
 
     # -- refresh -----------------------------------------------------------
 

@@ -715,7 +715,7 @@ def test_ledger_fsync_barrier_ordering(spark, tmp_path, monkeypatch):
     over a lost append would drop the batch's hashes forever)."""
     import os as _os
 
-    from sonnerie_spark.operators import dedup as dmod
+    from sonnerie_spark import fsutil
     from pyspark.sql import functions as F
 
     events = []
@@ -728,7 +728,7 @@ def test_ledger_fsync_barrier_ordering(spark, tmp_path, monkeypatch):
 
     real_rename = _os.rename
     for fn in ("fsync_tree", "fsync_file", "fsync_new_files", "fsync_dir"):
-        monkeypatch.setattr(dmod, fn, wrap(fn, getattr(dmod, fn)))
+        monkeypatch.setattr(fsutil, fn, wrap(fn, getattr(fsutil, fn)))
     monkeypatch.setattr(
         _os, "rename",
         lambda s, d: (events.append(("rename", d)), real_rename(s, d))[1],
@@ -742,7 +742,7 @@ def test_ledger_fsync_barrier_ordering(spark, tmp_path, monkeypatch):
     )
     ex.append_hashes(h, batch_id="b1")
 
-    bdir = ex._batch_dir("b1")
+    bdir = dedup._ledger_dir(ex.path, "b1")
     idx = {
         "tree": next(i for i, e in enumerate(events)
                      if e[0] == "fsync_tree" and "!tmp-" in str(e[1])),
@@ -814,7 +814,7 @@ def test_index_swap_recovery_with_glob_metachar_path(tmp_path):
     quirk.)"""
     import os as _os
 
-    from sonnerie_spark.operators.dedup import _recover_swap_locked
+    from sonnerie_spark.fsutil import recover_generation
 
     root = tmp_path / "corpus[v2]"
     root.mkdir()
@@ -823,8 +823,36 @@ def test_index_swap_recovery_with_glob_metachar_path(tmp_path):
     _os.makedirs(data + ".old-dead")
     (root / "bands.old-dead" / "part-0.parquet").write_bytes(b"x")
     _os.makedirs(data + ".compact-1-2")  # dead rewrite: debris
-    _recover_swap_locked(data)
+    recover_generation(data, keep_backup=False)
     assert _os.path.isdir(data)
     assert _os.path.exists(_os.path.join(data, "part-0.parquet"))
     assert not _os.path.exists(data + ".old-dead")
     assert not _os.path.exists(data + ".compact-1-2")
+
+
+def test_lsh_index_meta_write_is_atomic(spark, tmp_path, monkeypatch):
+    """A crash mid-write of ``lsh_index.json`` must not leave a
+    truncated file that fails every later open with JSONDecodeError:
+    the metadata is written under a tmp name and renamed into place,
+    so a reopen finds no file and creates it."""
+    import json as _json
+    import os as _os
+
+    real_dumps = _json.dumps
+
+    def torn_dump(obj, f, *a, **k):
+        s = real_dumps(obj)
+        f.write(s[: len(s) // 2])
+        f.flush()
+        raise RuntimeError("simulated crash mid-write")
+
+    path = str(tmp_path / "lsh")
+    monkeypatch.setattr(_json, "dump", torn_dump)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        dedup.LshIndex(spark, path)
+    monkeypatch.undo()
+
+    idx = dedup.LshIndex(spark, path)
+    with open(_os.path.join(idx.path, "lsh_index.json")) as f:
+        assert _json.load(f) == {"k": 3, "num_hashes": 16, "band_size": 4}
+    assert [n for n in _os.listdir(idx.path) if ".tmp-" in n] == []

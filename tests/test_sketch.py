@@ -314,7 +314,7 @@ def test_dd_store_exactly_once_and_crash_recovery(spark, tmp_path):
     import os
     import shutil
 
-    from sonnerie_spark.operators.sketch import DdStore, _recover_data_dir
+    from sonnerie_spark.operators.sketch import DdStore
 
     rows = [(f"g{i % 3}", float((i % 17) + 0.5)) for i in range(300)]
     df = spark.createDataFrame(rows, ["g", "x"])
@@ -949,3 +949,63 @@ def test_stores_persist_and_validate_params(spark, tmp_path):
         DdStore(spark, str(tmp_path / "d"), relative_accuracy=0.01)
     with pytest.raises(ValueError, match="min_value"):
         DdStore(spark, str(tmp_path / "d"), min_value=1e-6)
+
+
+def test_transient_read_error_never_destroys_a_generation(
+    spark, tmp_path, monkeypatch
+):
+    """Only corruption signals roll a store back to its backup: a
+    transient read error (EACCES here; EMFILE/EIO likewise arrive as
+    other OSErrors) propagates, leaves the current generation and its
+    backup byte-for-byte untouched, and the next read succeeds."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from sonnerie_spark.operators.sketch import BloomStore, DdStore, HllStore
+
+    df = spark.createDataFrame(
+        [(f"g{i % 3}", float(i % 7 + 1), f"v{i}") for i in range(40)],
+        "g string, x double, v string",
+    )
+    a, b = df.filter("x <= 3"), df.filter("x > 3")
+    hll = HllStore(spark, str(tmp_path / "hll"))
+    bf = BloomStore(spark, str(tmp_path / "bf"), num_bits=1024)
+    dd = DdStore(spark, str(tmp_path / "dd"))
+    cases = [
+        (hll, lambda: (hll.add(a, "g", "v"), hll.add(b, "g", "v")),
+         lambda: sorted(map(tuple, hll.sketches().collect()))),
+        (bf, lambda: (bf.add(a, "v"), bf.add(b, "v")),
+         lambda: sorted(map(tuple, bf.sketch().collect()))),
+        (dd, lambda: (dd.add(0, a, "g", "x"), dd.add(1, b, "g", "x")),
+         lambda: (dd.applied(), sorted(map(tuple, dd.sketches().collect())))),
+    ]
+
+    def snapshot(root):
+        out = {}
+        for r, _dirs, files in os.walk(root):
+            for f in files:
+                if f != ".lock":
+                    with open(os.path.join(r, f), "rb") as fh:
+                        out[os.path.relpath(os.path.join(r, f), root)] = fh.read()
+        return out
+
+    real = pq.read_table
+    for store, fill, read in cases:
+        fill()  # two generations: the current one plus a backup
+        assert any(".old-" in n for n in os.listdir(store.path))
+        want, before = read(), snapshot(store.path)
+        failed = []
+
+        def flaky(*a, **k):
+            if not failed:
+                failed.append(1)
+                raise PermissionError(13, "simulated transient EACCES")
+            return real(*a, **k)
+
+        monkeypatch.setattr(pq, "read_table", flaky)
+        with pytest.raises(PermissionError):
+            read()
+        monkeypatch.setattr(pq, "read_table", real)
+        assert snapshot(store.path) == before, type(store).__name__
+        assert read() == want
