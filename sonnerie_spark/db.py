@@ -46,6 +46,7 @@ Scale notes (local[N] here, 1000 executors in production):
 
 from __future__ import annotations
 
+import glob
 import os
 import re
 import shutil
@@ -55,7 +56,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from sonnerie_spark import rowformat
-from sonnerie_spark.fsutil import fsync_dir, fsync_tree
+from sonnerie_spark.fsutil import (
+    fsync_dir,
+    fsync_tree,
+    store_lock,
+    tmp_name,
+    write_json_atomic,
+)
 from sonnerie_spark.bucketing import (
     BUCKETS_FILE,
     bucket_file_name,
@@ -209,19 +216,9 @@ class Database:
         compactor owns the plan and will clear it."""
         if not os.path.exists(os.path.join(self.path, COMPACT_PLAN)):
             return
-        import fcntl
-
-        lock_fd = os.open(
-            os.path.join(self.path, ".compact"), os.O_CREAT | os.O_RDWR
-        )
-        try:
-            try:
-                fcntl.flock(lock_fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            except OSError:
-                return  # a live compactor holds the lock and the plan
-            self._recover_compact_plan()
-        finally:
-            os.close(lock_fd)
+        with store_lock(self.path, ".compact", wait=False) as held:
+            if held:  # else a live compactor holds the lock and the plan
+                self._recover_compact_plan()
 
     def _resolve_buckets(self, requested: int | None) -> int:
         """Fixed database-wide bucket count B (bucketing.py rationale).
@@ -230,27 +227,65 @@ class Database:
         — Spark jobs and the driver-side pyarrow path — uses the same
         bucket function forever; a later ``buckets=`` argument is
         ignored for an existing database (like the reference's immutable
-        file-format parameters)."""
-        meta = os.path.join(self.path, BUCKETS_FILE)
-        try:
-            with open(meta) as f:
-                return max(1, int(f.read().strip()))
-        except (OSError, ValueError):
-            pass
-        b = requested
+        file-format parameters).
+
+        Read-or-create under the commit lock, which serializes every
+        BUCKETS writer: the file appears whole (write_json_atomic), so
+        a concurrent opener reads nothing or the winner's B. An
+        unparseable file is a torn create of an older release and is
+        replaced like a missing one."""
+        b = self._stored_buckets()
         if b is None:
-            b = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        b = max(1, int(b))
+            with store_lock(self.path, ".commitlock"):
+                b = self._stored_buckets()
+                if b is None:
+                    if requested is None:
+                        requested = self.spark.conf.get(
+                            "spark.sql.shuffle.partitions", "32"
+                        )
+                    b = max(1, int(requested))
+                    self._write_json(BUCKETS_FILE, b)
+        return b
+
+    def _stored_buckets(self) -> int | None:
         try:
-            fd = os.open(meta, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            with os.fdopen(fd, "w") as f:
-                f.write(str(b))
-            return b
-        except FileExistsError:  # concurrent creator won: adopt its B
-            with open(meta) as f:
-                return max(1, int(f.read().strip()))
+            with open(os.path.join(self.path, BUCKETS_FILE)) as f:
+                return max(1, int(f.read()))
+        except (FileNotFoundError, ValueError):
+            return None
+
+    def _write_json(self, name: str, obj) -> None:
+        """``write_json_atomic`` of ``name`` in the database directory,
+        first reaping the tmp files of a writer killed before its
+        rename. The caller holds the lock that serializes ``name``'s
+        writers: the commit lock for BUCKETS, the compaction lock for
+        the swap plan."""
+        path = os.path.join(self.path, name)
+        for stale in glob.glob(glob.escape(path) + ".tmp-*"):
+            os.remove(stale)
+        write_json_atomic(path, obj, durable=self.durable)
 
     # -- manifest ----------------------------------------------------------
+
+    def _root_entries(self) -> list[os.DirEntry]:
+        """The database directory's entries. A dead compactor's
+        unresolved swap could list ZERO visible runs (data hidden under
+        .tmp-old-*) — a long-lived handle (serve) must not serve that
+        view, nor may a commit take its name floor from it — so a plan
+        in the listing is healed and the directory listed again.
+        Non-blocking: if the compaction lock is held, a LIVE compactor
+        owns the plan and the swap is mid-flight (microseconds), the
+        normal reader race."""
+
+        def scan() -> list[os.DirEntry]:
+            with os.scandir(self.path) as it:
+                return list(it)
+
+        entries = scan()
+        if any(e.name == COMPACT_PLAN for e in entries):
+            self._heal_compact_crash()
+            entries = scan()
+        return entries
 
     def runs(self) -> list[RunInfo]:
         """Enumerate committed runs in txid (lexical) order.
@@ -258,18 +293,8 @@ class Database:
         Skips in-flight ``.tmp-*`` dirs and warns-equivalent skips empty
         dirs, like the reference's readdir (database_reader.rs:60-131).
         """
-        listing = sorted(os.listdir(self.path))
-        if COMPACT_PLAN in listing:
-            # a dead compactor's unresolved swap: until healed, this
-            # listing could show ZERO visible runs (data hidden under
-            # .tmp-old-*) — a long-lived handle (serve) must not serve
-            # that view. Non-blocking: if the compaction lock is held,
-            # a LIVE compactor owns the plan and the swap is mid-flight
-            # (microseconds), the normal reader race.
-            self._heal_compact_crash()
-            listing = sorted(os.listdir(self.path))
         out: list[RunInfo] = []
-        for name in listing:
+        for name in sorted(e.name for e in self._root_entries()):
             if not _TX_NAME_RE.match(name):
                 continue
             p = os.path.join(self.path, name)
@@ -297,17 +322,10 @@ class Database:
         compaction swap — the point reader's consistency probe.
         ``DirEntry.is_dir()`` answers from the readdir d_type (following
         symlinks like ``os.path.isdir``), so no entry is stat'ed."""
-
-        def scan() -> list[os.DirEntry]:
-            with os.scandir(self.path) as it:
-                return list(it)
-
-        entries = scan()
-        if any(e.name == COMPACT_PLAN for e in entries):
-            self._heal_compact_crash()  # see runs(): never serve the
-            entries = scan()  # mid-swap zero-run view
         return sorted(
-            e.name for e in entries if _TX_NAME_RE.match(e.name) and e.is_dir()
+            e.name
+            for e in self._root_entries()
+            if _TX_NAME_RE.match(e.name) and e.is_dir()
         )
 
     def data_runs(self) -> list[RunInfo]:
@@ -381,7 +399,7 @@ class Database:
         for _ in range(3):
             if not os.path.isdir(view):
                 os.makedirs(cache, exist_ok=True)
-                tmp = os.path.join(cache, f".build-{os.getpid()}-{time.time_ns():x}")
+                tmp = os.path.join(cache, tmp_name("", ".build-"))
                 os.makedirs(tmp)
                 by_run = {r.name: r.path for r in runs}
                 for rn, fn in files:
@@ -599,7 +617,10 @@ class Database:
         if len(runs) > 1 or (runs and not read_run_unique(runs[0].path)):
             df = _lww_dedup(df)
 
-        df = self._apply_delete_markers(df, as_of=as_of)
+        markers = self.delete_markers()
+        if as_of is not None:
+            markers = [m for m in markers if m["_txname"] <= as_of]
+        df = self._apply_delete_markers(df, markers)
         if not include_txname:
             df = df.drop("_txname")
         return df
@@ -641,7 +662,7 @@ class Database:
         if before_ns is not None:
             df = df.filter(F.col("ts") < F.lit(int(before_ns)))
         df = df.withColumn("_txname", txcol)
-        df = self._apply_delete_markers(df)
+        df = self._apply_delete_markers(df, self.delete_markers())
         return df.select("key").distinct().orderBy("key")
 
     def export_bucketed(
@@ -907,10 +928,9 @@ class Database:
             df = df.filter(F.col("key") <= F.lit(before_key_incl))
         return df
 
-    def _apply_delete_markers(self, df: DataFrame, *, as_of: str | None = None) -> DataFrame:
-        markers = self.delete_markers()
-        if as_of is not None:
-            markers = [m for m in markers if m["_txname"] <= as_of]
+    def _apply_delete_markers(self, df: DataFrame, markers: list[dict]) -> DataFrame:
+        """Suppress the records of ``df`` (which carries ``_txname``)
+        that an older-tx ``markers`` entry deletes."""
         if not markers:
             return df
         if len(markers) <= MAX_INLINE_DELETES:
@@ -1149,7 +1169,7 @@ class Database:
         path gets the same durability. On a shared filesystem this is
         the same commit protocol a minimal table format uses.
         """
-        tmp = os.path.join(self.path, f".tmp-{os.getpid()}-{time.time_ns():x}")
+        tmp = os.path.join(self.path, tmp_name(""))
         try:
             write_fn(tmp)
         except BaseException:
@@ -1160,10 +1180,10 @@ class Database:
     def _atomic_rename(self, tmp: str) -> str:
         """Publish an already-written ``.tmp-*`` dir as a transaction.
 
-        Serialized by an flock so published names are strictly monotonic
-        even under concurrent/preempted writers: without it, a writer
-        preempted between ``time_ns()`` and ``rename`` could publish a
-        name OLDER than one already observed, and txname-cursor
+        Serialized by the commit lock so published names are strictly
+        monotonic even under concurrent/preempted writers: without it, a
+        writer preempted between ``time_ns()`` and ``rename`` could
+        publish a name OLDER than one already observed, and txname-cursor
         consumers (``changes(since=...)``, ``ContinuousRollup.refresh``)
         would skip that transaction forever. The name floor is the max
         existing tx name, so NTP clock steps backwards can't regress
@@ -1175,30 +1195,22 @@ class Database:
         module docstring; the reference's create_tx.rs:210-264
         contract), so a power loss can never leave a published ``tx.*``
         whose data blocks were not durable. The tree fsync runs outside
-        the flock (the tmp is complete and private), the dir fsync
+        the lock (the tmp is complete and private), the dir fsync
         after release (fsyncing a directory that has since gained
         entries is harmless) — the serialized window stays tiny.
         ``durable=False`` skips both fsyncs (constructor docstring)."""
         if self.durable:
             fsync_tree(tmp)  # data durable before the rename publishes it
-        lock_fd = os.open(os.path.join(self.path, ".commitlock"), os.O_CREAT | os.O_RDWR)
-        try:
-            import fcntl
-
-            fcntl.flock(lock_fd, fcntl.LOCK_EX)
-            listing = os.listdir(self.path)
-            if COMPACT_PLAN in listing:
-                # resolve a dead compactor's swap BEFORE computing the
-                # name floor: hidden runs are invisible to the listing,
-                # so publishing now could take a name OLDER than a run
-                # the rollback later restores — and a changes(since=)
-                # cursor that advanced past it would skip that run
-                # forever. (No deadlock: compaction never takes the
-                # commit lock; the probe is non-blocking anyway.)
-                self._heal_compact_crash()
-                listing = os.listdir(self.path)
+        with store_lock(self.path, ".commitlock"):
+            # The listing heals a dead compactor's swap first: hidden
+            # runs are invisible to it, so publishing now could take a
+            # name OLDER than a run the rollback later restores — and a
+            # changes(since=) cursor that advanced past it would skip
+            # that run forever. (No deadlock: compaction never takes
+            # the commit lock; the heal's probe is non-blocking anyway.)
             floor = 0
-            for name in listing:
+            for e in self._root_entries():
+                name = e.name
                 if name.startswith("tx.") and _TX_NAME_RE.match(name):
                     floor = max(floor, int(name[3:], 16))
             while True:
@@ -1212,8 +1224,6 @@ class Database:
                     if not os.path.exists(final):
                         raise
                     floor = nanos  # collision: bump past it
-        finally:
-            os.close(lock_fd)
         if self.durable:
             fsync_dir(self.path)  # the rename itself durable
         return txname
@@ -1243,11 +1253,8 @@ class Database:
     def _set_buckets(self, new_buckets: int) -> None:
         """Atomically swap the database-wide B (rebucket step 1)."""
         new_buckets = max(1, int(new_buckets))
-        meta = os.path.join(self.path, BUCKETS_FILE)
-        tmp = meta + f".tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(str(new_buckets))
-        os.replace(tmp, meta)
+        with store_lock(self.path, ".commitlock"):
+            self._write_json(BUCKETS_FILE, new_buckets)
         self.buckets = new_buckets
         self._point_reader = None  # cached reader carries the old B
 
@@ -1270,12 +1277,7 @@ class Database:
         ``transform`` is applied exactly once, on the final pass, so
         gegnum semantics hold even when batching loops first.
         """
-        lock = os.path.join(self.path, ".compact")
-        lock_fd = os.open(lock, os.O_CREAT | os.O_RDWR)
-        try:
-            import fcntl
-
-            fcntl.flock(lock_fd, fcntl.LOCK_EX)
+        with store_lock(self.path, ".compact"):
             # resolve a dead compactor's interrupted swap BEFORE the
             # janitor runs: an unresolved plan's .tmp-old-* dirs are
             # the live data, not reapable debris
@@ -1300,8 +1302,6 @@ class Database:
                     major=major, transform=transform, max_runs=max_runs
                 )
                 return final_pass if final_pass is not None else last
-        finally:
-            os.close(lock_fd)
         return last
 
     # Leftover .tmp-* dirs older than this are crash debris (a live
@@ -1398,10 +1398,7 @@ class Database:
         if not data:
             return None  # nothing to merge (deletes-only DBs stay as-is)
 
-        # Build the merged view of exactly the runs being compacted.
-        sub = _SubsetView(self, data, dels)
-        df = sub.read()
-        aligned = sub.bucket_aligned
+        df, aligned = self._merged_view(data, dels)
         if transform is not None:
             df = transform(df)
             aligned = False  # a transform may change keys / partitioning
@@ -1470,9 +1467,12 @@ class Database:
                 hides.append(
                     (os.path.basename(p), f".tmp-old-{time.time_ns():016x}-{i}")
                 )
-        self._write_compact_plan(
+        # durable BEFORE the first hide rename: recovery must be able
+        # to trust that a hide implies a readable plan
+        self._write_json(
+            COMPACT_PLAN,
             {"tmp": os.path.basename(tmp), "final": target_name,
-             "hides": hides}
+             "hides": hides},
         )
         hidden = []
         for orig, h in hides:
@@ -1488,32 +1488,18 @@ class Database:
         self._clear_compact_plan()
         return target_name
 
-    def _write_compact_plan(self, plan: dict) -> None:
-        """Persist the swap plan before executing it (caller holds the
-        compaction lock). Durable BEFORE the first hide rename when the
-        database is durable — recovery must be able to trust that a
-        hide implies a readable plan."""
-        import glob
-        import json
-
-        p = os.path.join(self.path, COMPACT_PLAN)
-        # reap write-temp debris from plan writers that died before
-        # their rename (we hold the compaction lock: no live writer);
-        # the janitor skips these names (not .tmp-*, and files anyway)
-        for stale in glob.glob(glob.escape(p) + ".w-*"):
-            try:
-                os.remove(stale)
-            except OSError:
-                pass
-        t = p + f".w-{os.getpid()}"
-        with open(t, "w") as f:
-            json.dump(plan, f)
-            f.flush()
-            if self.durable:
-                os.fsync(f.fileno())
-        os.rename(t, p)
-        if self.durable:
-            fsync_dir(self.path)
+    def _merged_view(
+        self, data: list[RunInfo], dels: list[RunInfo]
+    ) -> tuple[DataFrame, bool]:
+        """Compaction's input: the LWW-merged view of exactly ``data``
+        with the markers of ``dels`` applied, and whether its scan is
+        bucket aligned."""
+        df, aligned, txcol = self._scan_data_runs(data)
+        df = df.withColumn("_txname", txcol)
+        if len(data) > 1 or not read_run_unique(data[0].path):
+            df = _lww_dedup(df)
+        df = self._apply_delete_markers(df, self.delete_markers(dels))
+        return df.drop("_txname"), aligned
 
     def _clear_compact_plan(self) -> None:
         try:
@@ -1563,37 +1549,6 @@ class Database:
         if self.durable:
             fsync_dir(self.path)
         os.remove(p)
-
-
-class _SubsetView:
-    """Read plan over an explicit subset of runs (used by compaction)."""
-
-    def __init__(self, db: Database, data: list[RunInfo], dels: list[RunInfo]):
-        self.db = db
-        self.data = data
-        self.dels = dels
-        self.bucket_aligned = False  # set by read()
-
-    def read(self) -> DataFrame:
-        spark = self.db.spark
-        if not self.data:
-            return spark.createDataFrame([], RECORD_SCHEMA)
-        df, self.bucket_aligned, txcol = self.db._scan_data_runs(self.data)
-        df = df.withColumn("_txname", txcol)
-        if len(self.data) > 1 or not read_run_unique(self.data[0].path):
-            df = _lww_dedup(df)
-        if self.dels:
-            names = {r.name for r in self.dels}
-            markers = [m for m in self.db.delete_markers() if m["_txname"] in names]
-            db2 = self.db
-            # reuse Database's predicate builder on the restricted set
-            saved = db2.delete_markers
-            try:
-                db2.delete_markers = lambda: markers  # type: ignore[assignment]
-                df = db2._apply_delete_markers(df)
-            finally:
-                db2.delete_markers = saved  # type: ignore[assignment]
-        return df.drop("_txname")
 
 
 def _tmp_owner_pid(name: str) -> int | None:
@@ -1803,9 +1758,7 @@ class Transaction:
         import pyarrow.parquet as pq
 
         if self._spill_dir is None:
-            self._spill_dir = os.path.join(
-                self.db.path, f".tmp-{os.getpid()}-{time.time_ns():x}"
-            )
+            self._spill_dir = os.path.join(self.db.path, tmp_name(""))
             os.makedirs(self._spill_dir)
             self._spill_nonce = f"{time.time_ns():016x}"
             # Pin B for the life of this tx: a concurrent rebucket()

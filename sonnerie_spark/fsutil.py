@@ -12,12 +12,17 @@ flushes and ``sync_all``s the transaction file before the rename — so
 the Spark engine does the same: fsync what is being published, rename,
 then fsync the parent directory that now holds the new entry.
 
-The database (``db.py``) applies that rule with its own multi-run
-hide -> publish -> purge plan. Every other persistent store — the dedup
-indexes (``LshIndex``, ``ExactIndex``), the sketch stores (``HllStore``,
+Every persistent store — the database (``db.py``), the dedup indexes
+(``LshIndex``, ``ExactIndex``), the sketch stores (``HllStore``,
 ``BloomStore``, ``DdStore``), the IVF index metadata and the rollup
-cursor — uses only the functions below, always under
-:func:`store_lock` when it mutates:
+cursor — takes its locks, writes its JSON and names its temps with the
+functions below, always under :func:`store_lock` when it mutates. The
+database holds two named locks (``.commitlock`` for run publishes and
+``BUCKETS``, ``.compact`` for compaction); only its multi-run
+hide -> publish -> purge compaction plan, and that plan's roll-back /
+roll-forward recovery, is specific to ``db.py``; a commit publishes a
+fully written, fsynced ``tmp_name`` run directory with one rename under
+the commit lock. The primitives:
 
 - **JSON** (:func:`write_json_atomic`): params, index metadata and
   cursors are written under a unique tmp name, fsynced, renamed over
@@ -141,15 +146,20 @@ def fsync_new_files(root: str, before: set[str]) -> None:
 
 
 @contextlib.contextmanager
-def store_lock(root: str):
-    """Exclusive flock on ``root/.lock`` for the block. The kernel
+def store_lock(root: str, name: str = ".lock", *, wait: bool = True):
+    """Exclusive flock on ``root/<name>`` for the block; yields whether
+    it is held (always, unless ``wait=False`` found it busy). The kernel
     drops it with the holder's fd, so a dead holder never wedges the
     store. Not reentrant: a second acquisition on a fresh fd in the
     same process deadlocks."""
-    fd = os.open(os.path.join(root, ".lock"), os.O_CREAT | os.O_RDWR)
+    fd = os.open(os.path.join(root, name), os.O_CREAT | os.O_RDWR)
     try:
-        fcntl.flock(fd, fcntl.LOCK_EX)
-        yield
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | (0 if wait else fcntl.LOCK_NB))
+        except BlockingIOError:
+            yield False
+        else:
+            yield True
     finally:
         os.close(fd)
 

@@ -792,3 +792,121 @@ def test_compact_crash_mid_purge_rolls_forward(spark, tmp_path, monkeypatch):
     assert not [
         n for n in _os.listdir(db2.path) if n.startswith(".tmp-old-")
     ]
+
+
+def test_opener_adopts_b_of_a_creator_paused_after_create(tmp_path, monkeypatch):
+    """A second opener that runs while the first creator of BUCKETS is
+    paused right after the file appears must adopt the creator's B. The
+    file used to be created empty (O_EXCL) and written afterwards, so
+    that opener — and every later one, if the creator died there —
+    raised ValueError on the empty file."""
+    import threading
+
+    path = str(tmp_path / "db")
+    meta = os.path.join(path, "BUCKETS")
+    real_open, real_rename = os.open, os.rename
+    adopted, errors = [], []
+
+    def second_opener():
+        def run():
+            try:
+                adopted.append(Database(None, path, buckets=8).buckets)
+            except Exception as e:  # re-raised below
+                errors.append(e)
+
+        t = threading.Thread(target=run, daemon=True)
+        t.start()
+        t.join(30)
+        assert not t.is_alive(), "second opener blocked on the creator"
+
+    def pause_after(real, target):
+        def inner(*a, **k):
+            out = real(*a, **k)
+            if os.fspath(target(a)) == meta and not adopted and not errors:
+                second_opener()
+            return out
+
+        return inner
+
+    monkeypatch.setattr(os, "open", pause_after(real_open, lambda a: a[0]))
+    monkeypatch.setattr(os, "rename", pause_after(real_rename, lambda a: a[1]))
+    assert Database(None, path, buckets=4).buckets == 4
+    monkeypatch.undo()
+    if errors:
+        raise errors[0]
+    assert adopted == [4]
+    assert Database(None, path, buckets=16).buckets == 4
+
+    # an empty BUCKETS left by a creator killed before its write
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    open(os.path.join(empty, "BUCKETS"), "w").close()
+    assert Database(None, empty, buckets=4).buckets == 4
+    assert Database(None, empty, buckets=16).buckets == 4
+
+
+def test_set_buckets_fsyncs_file_then_renames_then_fsyncs_dir(tmp_path, monkeypatch):
+    """rebucket's BUCKETS swap keeps the power-loss contract of every
+    other published file: the new file's fsync, then the rename, then
+    the directory's fsync."""
+    from sonnerie_spark import fsutil
+
+    db = Database(None, str(tmp_path / "db"), buckets=4)
+    events = []
+
+    def log(name, real, at):
+        def inner(*a, **k):
+            events.append((name, os.fspath(a[at]), os.fspath(a[0])))
+            return real(*a, **k)
+
+        return inner
+
+    for fn in ("fsync_file", "fsync_dir"):
+        monkeypatch.setattr(fsutil, fn, log(fn, getattr(fsutil, fn), 0))
+    monkeypatch.setattr(os, "rename", log("rename", os.rename, 1))
+    monkeypatch.setattr(os, "replace", log("rename", os.replace, 1))
+    db._set_buckets(8)
+    monkeypatch.undo()
+
+    meta = os.path.join(db.path, "BUCKETS")
+    i_ren = next(i for i, e in enumerate(events) if e[:2] == ("rename", meta))
+    tmp = events[i_ren][2]
+    i_file = next(i for i, e in enumerate(events) if e[:2] == ("fsync_file", tmp))
+    i_dir = next(
+        i for i, e in enumerate(events)
+        if i > i_ren and e[:2] == ("fsync_dir", db.path)
+    )
+    assert i_file < i_ren < i_dir
+    assert Database(None, db.path).buckets == 8
+
+
+def test_get_on_a_cold_reader_during_compaction_planning(spark, tmp_path, monkeypatch):
+    """Compaction used to rebind ``delete_markers`` on the shared handle
+    to a zero-argument lambda while it planned the merge; a get() on
+    that handle whose point reader missed its marker cache then called
+    ``delete_markers([run])`` and raised TypeError (an HTTP 500 through
+    serve). The get must answer normally inside that window."""
+    path = str(tmp_path / "db")
+    db = Database(spark, path)
+    for i in range(2):
+        db.commit_rows(
+            [{"key": f"k{i}", "ts": 100 + i, "fmt": "u", "v_long": [i],
+              "v_double": [], "v_str": [], "v_bin": []}]
+        )
+    db.commit_deletes([{"first_key": "k1", "last_key": "k2"}])
+    want = [Database(spark, path).get(k) for k in ("k0", "k1")]
+    assert len(want[0]) == 1 and want[1] == []
+
+    db = Database(spark, path)  # cold point reader
+    real = Database._apply_delete_markers
+    got = []
+
+    def planning(self, *a, **k):
+        got.append([self.get(k) for k in ("k0", "k1")])
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(Database, "_apply_delete_markers", planning)
+    db.compact()
+    monkeypatch.undo()
+    assert got == [want]
+    assert [db.get(k) for k in ("k0", "k1")] == want

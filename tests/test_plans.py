@@ -171,17 +171,14 @@ def test_compaction_of_bucketed_runs_adds_no_exchange(spark, tmp_path):
     """Compaction reads bucketed runs and writes bucket-aligned: the
     merge rewrite is a zero-shuffle plan (read k files per bucket ->
     dedup in place -> write one file per bucket)."""
-    from sonnerie_spark.db import _SubsetView
-
     db = Database(spark, str(tmp_path / "db"))
     for r in range(3):
         tx = db.create_tx()
         for i in range(50):
             tx.add_record(f"key{i:03d}", 1000 + r, "u", [i])
         tx.commit()
-    sub = _SubsetView(db, db.data_runs(), [])
-    df = sub.read()
-    assert sub.bucket_aligned
+    df, bucket_aligned = db._merged_view(db.data_runs(), [])
+    assert bucket_aligned
     assert "Exchange" not in plan_of(df)
     db.compact()
     assert len(db.data_runs()) == 1

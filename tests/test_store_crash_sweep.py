@@ -1,8 +1,9 @@
 """Enumerated crash sweep over every persistent-store mutation.
 
-Every store outside the database commits through
-:mod:`sonnerie_spark.fsutil`, so its step functions — each rename,
-replace, fsync, fsync_tree, fsync_dir and rmtree — are the complete set
+Every persistent store, the Database included, commits through
+:mod:`sonnerie_spark.fsutil` (the Database calls its fsyncs through the
+names ``db.py`` imports), so the step functions — each rename, replace,
+remove, fsync, fsync_tree, fsync_dir and rmtree — are the complete set
 of points where a crash can land between two durable states. For each
 operation a dry run on a copy of the pre-op store counts those steps
 (that copy is the clean twin). Then, for every k, the operation runs on
@@ -10,12 +11,22 @@ a fresh copy with a crash injected at its k-th step: a fresh handle
 must see the old state or the new one, and retrying the operation must
 reach the twin's final state. Each recovery action must fire somewhere
 in the sweep.
+
+Database operations crash as a dead process: once the k-th step has
+raised, every later step and unlink under the root raises too, so no
+cleanup handler runs. The other stores keep their handlers, since a
+killed JSON writer's tmp file is never reaped by their recovery.
+
+``os.rename`` calls in ``db.py`` that no operation here crashes, with
+the reason, are listed in :data:`DB_RENAMES_NOT_SWEPT`.
 """
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import hashlib
+import inspect
 import json
 import os
 import re
@@ -26,8 +37,8 @@ from typing import Callable
 import pyarrow.parquet as pq
 import pytest
 
-from sonnerie_spark import fsutil
-from sonnerie_spark.db import Database
+from sonnerie_spark import db as sdb, fsutil
+from sonnerie_spark.db import Database, Transaction
 from sonnerie_spark.operators import dedup, similarity
 from sonnerie_spark.operators.sketch import BloomStore, DdStore, HllStore
 from sonnerie_spark.streaming.rollup import ContinuousRollup
@@ -44,8 +55,19 @@ _STEPS = [
     (fsutil, "fsync_dir"),
     (fsutil, "fsync_tree"),
     (fsutil, "fsync_new_files"),
+    (sdb, "fsync_tree"),
+    (sdb, "fsync_dir"),
+    (os, "remove"),
+    (os, "unlink"),  # only on failure paths: the dead process's cleanup
 ]
-ACTIONS = {"restore", "reap_debris", "promote", "reap_torn"}
+DB_ACTIONS = {"roll_back", "roll_forward", "reap_plan_debris"}
+ACTIONS = {"restore", "reap_debris", "promote", "reap_torn"} | DB_ACTIONS
+# os.rename calls in db.py by enclosing function: swept, or why not
+DB_RENAMES_NOT_SWEPT = {
+    "_bucketed_table": "publishes a view cache of hard links, rebuilt "
+    "by the next read if missing; no database state",
+}
+DB_RENAMES_SWEPT = {"_atomic_rename", "_compact_locked", "_recover_compact_plan"}
 LSH_COLS = ["id", "band", "bucket"]
 
 
@@ -60,9 +82,10 @@ class Steps:
     steps are numbered and the ``crash_at``-th raises :class:`Crash`
     instead of running; while watching, they are logged."""
 
-    def __init__(self, monkeypatch):
+    def __init__(self, monkeypatch, dead=False):
         self.root = None
         self.armed = False
+        self.dead = dead  # after the crash, every step raises too
         self.crash_at = None
         self.count = 0
         self.log = None
@@ -81,6 +104,8 @@ class Steps:
                 and (self.inside or not self.scoped)
             )
             if mine and self.armed:
+                if self.dead and self.crash_at and self.count >= self.crash_at:
+                    raise Crash(f"after step {self.crash_at}: {name}{a[:2]}")
                 self.count += 1
                 if self.count == self.crash_at:
                     raise Crash(f"step {self.count}: {name}{a[:2]}")
@@ -107,10 +132,11 @@ class Steps:
     @contextlib.contextmanager
     def arm(self, root, crash_at=None):
         self.root, self.armed, self.crash_at, self.count = root, True, crash_at, 0
+        self.log = []
         try:
-            yield
+            yield self.log
         finally:
-            self.root, self.armed = None, False
+            self.root, self.armed, self.log = None, False, None
 
     @contextlib.contextmanager
     def watch(self, root):
@@ -126,7 +152,14 @@ def _recovery_actions(log) -> set[str]:
     out = set()
     for name, path in log:
         base = os.path.basename(path)
-        if name in ("rename", "replace"):
+        if base.startswith(".tmp-old-"):  # a run hidden by a compaction
+            if name == "rename":
+                out.add("roll_back")
+            elif name == "rmtree":
+                out.add("roll_forward")
+        elif name == "remove" and base.startswith(sdb.COMPACT_PLAN + ".tmp-"):
+            out.add("reap_plan_debris")
+        elif name in ("rename", "replace"):
             if "!tmp-" in base:
                 out.add("promote")  # a complete ledger recording sealed
             elif ".old-" in base:
@@ -152,6 +185,22 @@ def _layout(root: str) -> list[str]:
         if os.path.isdir(d):
             out += [_SUFFIX.sub(r"\1*", os.path.join(sub, n)) for n in os.listdir(d)]
     return sorted(out)
+
+
+_DB_MASK = re.compile(r"^(tx\.|\.tmp-old-|.*\.tmp-)[0-9a-f-]+$")
+
+
+def _db_layout(root: str) -> list[str]:
+    """A database's top-level names, unique suffixes masked. Left out:
+    the view cache (rebuilt on demand) and unpublished run writes — a
+    commit's ``.tmp-<pid>-*`` spool and compaction's ``.tmp-compact-*``
+    output — which the janitor reaps only once their owner is dead and
+    they are an hour old; the sweep's owner is alive."""
+    return sorted(
+        _DB_MASK.sub(r"\1*", n)
+        for n in os.listdir(root)
+        if n != ".cache" and not re.match(r"\.tmp-(\d|compact-)", n)
+    )
 
 
 def _json(path: str):
@@ -189,6 +238,11 @@ class Case:
     final: Callable | None = None  # after the retry; default state + layout
     expect: set = field(default_factory=set)  # recovery actions to fire
     scope: tuple | None = None  # (class, method): count steps only in it
+    dead: bool = False  # no cleanup handler runs after the crash
+    # False: retried only when the crash left the old state. A Database
+    # commit carries no idempotency token, so its caller re-sends only
+    # a commit it cannot see; a blind re-send adds a second run.
+    idempotent: bool = True
 
 
 # -- inputs (every frame <= 50 rows) ----------------------------------------
@@ -221,6 +275,37 @@ def _values(spark, lo, hi):
         [(f"g{i % 3}", float(i % 11 + 1), f"v{i}") for i in range(lo, hi)],
         "g string, x double, v string",
     )
+
+
+def _row(key, ts, v):
+    return {"key": key, "ts": T0 + ts, "fmt": "u", "v_long": [v],
+            "v_double": [], "v_str": [], "v_bin": []}
+
+
+DB_KEYS = [f"k{i}" for i in range(10)]
+
+
+def _db_prepare(s, r):
+    """Two overlapping data runs (LWW) and a delete marker run."""
+    db = Database(s, r, buckets=4)
+    db.commit_rows([_row(f"k{i}", t, i) for i in range(6) for t in range(3)])
+    db.commit_rows([_row(f"k{i}", 1, 100 + i) for i in range(2, 8)])
+    db.commit_deletes([
+        {"first_key": "k1", "last_key": "k2"},
+        {"first_key": "k4", "last_key": "k5", "after_ns": T0 + 2},
+    ])
+
+
+def _db_state(s, r):
+    """The snapshot a fresh handle sees: run kinds, the merged rows
+    through Spark, and every key through the Spark-free point read."""
+    db = Database(s, r)
+    runs = [(_DB_MASK.sub(r"\1*", x.name), x.is_delete) for x in db.runs()]
+    return runs, _rows(db.read()), [db.get(k) for k in DB_KEYS]
+
+
+def _db_final(s, r):
+    return _db_state(s, r), _db_layout(r)
 
 
 def _cases(spark, sf_dir) -> dict[str, Case]:
@@ -349,6 +434,22 @@ def _cases(spark, sf_dir) -> dict[str, Case]:
             state=lambda s, r: _json(os.path.join(r, meta)),
         )
 
+    # -- Database ------------------------------------------------------------
+    def db_spill(s, r):
+        tx = Transaction(Database(s, r), strict_order=True, spill_threshold=4)
+        for i in range(10):
+            tx.add_record(f"k{i}", T0 + 5, "u", [200 + i])
+        assert tx._spill_dir is not None, "never spilled"
+        return tx.commit()
+
+    def db_case(op, **kw):
+        return Case(_db_prepare, op, _db_state, final=_db_final, dead=True, **kw)
+
+    def db_commit(op):
+        return db_case(lambda s, r: op(s, r) and None, idempotent=False)
+
+    db_recovered = set(DB_ACTIONS)
+
     sketch_state = {
         "hll": lambda s, r: _rows(hll(r).sketches()),
         "bloom": lambda s, r: _rows(bloom(r).sketch()),
@@ -418,6 +519,40 @@ def _cases(spark, sf_dir) -> dict[str, Case]:
         "bloom_open": Case(**first_open(bloom, "params.json")),
         "dd_open": Case(**first_open(dd, "params.json")),
         "lsh_open": Case(**first_open(lsh, "lsh_index.json")),
+        "db_open": Case(
+            lambda s, r: os.makedirs(r),
+            lambda s, r: Database(s, r, buckets=4) and None,
+            lambda s, r: _json(os.path.join(r, "BUCKETS")),
+            final=lambda s, r: (_json(os.path.join(r, "BUCKETS")), _db_layout(r)),
+            dead=True,
+        ),
+        "db_commit_rows": db_commit(
+            lambda s, r: Database(s, r).commit_rows(
+                [_row("k0", 0, 300), _row("k8", 0, 8)]
+            )
+        ),
+        "db_commit_deletes": db_commit(
+            lambda s, r: Database(s, r).commit_deletes(
+                [{"first_key": "k3", "last_key": "k4"}]
+            )
+        ),
+        "db_spill_commit": db_commit(db_spill),
+        "db_commit_dataframe": db_commit(
+            lambda s, r: Database(s, r).commit_dataframe(
+                s.createDataFrame(
+                    [_row("k2", 1, 400), _row("k9", 3, 9)], sdb.RECORD_SCHEMA
+                )
+            )
+        ),
+        "db_compact_minor": db_case(
+            lambda s, r: Database(s, r).compact(), expect=db_recovered
+        ),
+        "db_compact_major": db_case(
+            lambda s, r: Database(s, r).compact(major=True), expect=db_recovered
+        ),
+        "db_rebucket": db_case(
+            lambda s, r: Database(s, r).rebucket(8), expect=db_recovered
+        ),
     }
 
 
@@ -426,6 +561,8 @@ CASES = [
     "hll_add", "bloom_add", "bloom_rebuild", "dd_add",
     "ivf_build", "ivfpq_build", "rollup_refresh",
     "hll_open", "bloom_open", "dd_open", "lsh_open",
+    "db_open", "db_commit_rows", "db_commit_deletes", "db_spill_commit",
+    "db_commit_dataframe", "db_compact_minor", "db_compact_major", "db_rebucket",
 ]
 
 
@@ -434,7 +571,7 @@ def test_crash_at_every_step_leaves_old_or_new(
     spark, sf_dir, tmp_path, monkeypatch, name
 ):
     case = _cases(spark, sf_dir)[name]
-    steps = Steps(monkeypatch)
+    steps = Steps(monkeypatch, dead=case.dead)
     if case.scope:
         cls, meth = case.scope
         monkeypatch.setattr(cls, meth, steps.scope(getattr(cls, meth)))
@@ -445,8 +582,9 @@ def test_crash_at_every_step_leaves_old_or_new(
     case.prepare(spark, tpl)
     _copytree(tpl, twin)
     old = case.state(spark, twin)
-    with steps.arm(twin):
+    with steps.arm(twin) as log:
         out = case.op(spark, twin)
+    clean = _recovery_actions(log)  # taken by the op itself: no recovery
     n = steps.count
     assert n >= 3, f"{name}: only {n} steps — the sweep would prove nothing"
     new = case.state(spark, twin)
@@ -463,7 +601,10 @@ def test_crash_at_every_step_leaves_old_or_new(
             got = case.state(spark, d)
         assert got in (old, new), f"{name}: crash at step {k}/{n} left {got!r}"
         fired |= _recovery_actions(log)
-        assert case.op(spark, d) == out, f"{name}: retry after step {k}"
+        if case.idempotent or got == old:
+            with steps.watch(d) as log:
+                assert case.op(spark, d) == out, f"{name}: retry after step {k}"
+            fired |= _recovery_actions(log) - clean
         assert final(spark, d) == want, f"{name}: final state after step {k}"
     assert case.expect <= fired, f"{name}: never fired {case.expect - fired}"
 
@@ -471,7 +612,27 @@ def test_crash_at_every_step_leaves_old_or_new(
 def test_sweep_reaches_every_recovery_action(spark, sf_dir):
     """The per-case expectations together cover every recovery path:
     a missing data dir restored, debris reaped, a complete ledger
-    recording promoted and a torn one reaped."""
+    recording promoted and a torn one reaped; for the Database, an
+    interrupted compaction swap rolled back (hidden runs restored) or
+    forward (hidden runs purged), and a killed plan write's tmp reaped."""
     cases = _cases(spark, sf_dir)
     assert set(cases) == set(CASES)
     assert set().union(*(c.expect for c in cases.values())) == ACTIONS
+
+
+def test_every_db_rename_is_swept_or_named():
+    """A publish point added to db.py must join the sweep (an operation
+    that crashes it) or be named in DB_RENAMES_NOT_SWEPT with a reason."""
+    tree = ast.parse(inspect.getsource(sdb))
+    found = set()
+    for fn in ast.walk(tree):
+        if isinstance(fn, ast.FunctionDef):
+            for call in ast.walk(fn):
+                if (
+                    isinstance(call, ast.Call)
+                    and isinstance(call.func, ast.Attribute)
+                    and call.func.attr in ("rename", "replace")
+                    and getattr(call.func.value, "id", None) == "os"
+                ):
+                    found.add(fn.name)
+    assert found == DB_RENAMES_SWEPT | set(DB_RENAMES_NOT_SWEPT)
