@@ -82,6 +82,7 @@ def read_run_buckets(run_path: str) -> int | None:
 # the marker (check_duplicates=False commit that actually contained
 # duplicates, legacy layout, gegnum transform output) stays readable —
 # its single-run read plans the same LWW dedup a multi-run read would.
+# ``Database.runs()`` records its presence as ``RunInfo.unique``.
 RUN_UNIQUE_FILE = "_U"
 
 
@@ -92,12 +93,6 @@ def write_run_unique(run_path: str) -> None:
     with open(os.path.join(run_path, RUN_UNIQUE_FILE), "w") as f:
         f.write("1")
 
-
-def read_run_unique(run_path: str) -> bool:
-    """Whether the run was verified duplicate-free at write time."""
-    import os
-
-    return os.path.exists(os.path.join(run_path, RUN_UNIQUE_FILE))
 
 # Spark BucketingUtils.getBucketId file-name convention: the bucket id
 # is the last _<digits> group before the (optional) extensions.

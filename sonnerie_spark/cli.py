@@ -248,7 +248,8 @@ def cmd_add(db: Database, args) -> int:
     if args.unsorted:
         # serve-PUT semantics (sonnerie-serve.rs:114-186): accept unsorted
         # lines, sort at commit. Duplicate (key, ts) within the batch is
-        # still an error (write.rs:181-197 rule).
+        # still an error (write.rs:181-197 rule): commit_rows raises
+        # DuplicateRecordError before anything is written.
         rows = [
             rowformat.parse_line(
                 line, default_fmt=args.fmt, ts_format=args.ts_format
@@ -256,12 +257,6 @@ def cmd_add(db: Database, args) -> int:
             for line in sys.stdin
             if line.strip()
         ]
-        seen = set()
-        for r in rows:
-            kt = (r["key"], r["ts"])
-            if kt in seen:
-                raise rowformat.FormatError(f"duplicate (key, ts) in batch: {kt}")
-            seen.add(kt)
         if rows:
             db.commit_rows(rows)
         return 0

@@ -65,11 +65,11 @@ from sonnerie_spark.fsutil import (
 )
 from sonnerie_spark.bucketing import (
     BUCKETS_FILE,
+    RUN_UNIQUE_FILE,
     bucket_file_name,
     bucket_of,
     parse_bucket_id,
     read_run_buckets,
-    read_run_unique,
     write_run_buckets,
     write_run_unique,
 )
@@ -175,9 +175,15 @@ class DuplicateRecordError(CommitError):
 
 @dataclass(frozen=True)
 class RunInfo:
+    """One committed run as ``Database.runs()`` listed it. ``files``
+    and ``unique`` come from that same listing, so a consumer never
+    reads the run directory's layout again."""
+
     name: str  # 'main' or 'tx.<016x>'
     path: str
     is_delete: bool
+    files: tuple[str, ...] = ()  # sorted .parquet names
+    unique: bool = False  # the _U duplicate-free marker is present
 
 
 class Database:
@@ -292,6 +298,9 @@ class Database:
 
         Skips in-flight ``.tmp-*`` dirs and warns-equivalent skips empty
         dirs, like the reference's readdir (database_reader.rs:60-131).
+        This is the only reader of a run directory's layout: its one
+        ``listdir`` per run classifies the run and records its file
+        names and uniqueness marker on the ``RunInfo``.
         """
         out: list[RunInfo] = []
         for name in sorted(e.name for e in self._root_entries()):
@@ -299,19 +308,18 @@ class Database:
                 continue
             p = os.path.join(self.path, name)
             try:
-                entries = os.listdir(p)  # one pass: classify + data check
-            except (NotADirectoryError, OSError):
+                entries = os.listdir(p)
+            except OSError:
                 continue
-            is_delete = False
-            has_data = False
-            for f in entries:
-                if f == DELETE_SENTINEL:
-                    is_delete = True
-                elif f == "_SUCCESS" or f.endswith(".parquet"):
-                    has_data = True
-            if not has_data:
+            files = tuple(sorted(f for f in entries if f.endswith(".parquet")))
+            if not files and "_SUCCESS" not in entries:
                 continue
-            out.append(RunInfo(name, p, is_delete))
+            out.append(
+                RunInfo(
+                    name, p, DELETE_SENTINEL in entries, files,
+                    RUN_UNIQUE_FILE in entries,
+                )
+            )
         return out
 
     def run_names(self) -> list[str]:
@@ -365,9 +373,7 @@ class Database:
         for r in runs:
             if read_run_buckets(r.path) != self.buckets:
                 return None
-            for name in sorted(os.listdir(r.path)):
-                if not name.endswith(".parquet"):
-                    continue
+            for name in r.files:
                 b = parse_bucket_id(name)
                 if b is None or b >= self.buckets:
                     return None
@@ -584,9 +590,16 @@ class Database:
         COMPACTED state, not the original version — history is
         collapsed, the VACUUM contract.
         """
-        runs = self.data_runs()
+        # ONE listing serves the whole plan, and the markers are loaded
+        # from it BEFORE the scan is planned: the bucketed view's hard
+        # links keep the listed data readable through a concurrent major
+        # compaction, which purges the markers — a second listing could
+        # pair the old rows with no markers and resurrect deleted records.
+        runs = self.runs()
         if as_of is not None:
             runs = [r for r in runs if r.name <= as_of]
+        markers = self.delete_markers(runs)
+        runs = [r for r in runs if not r.is_delete]
         if not runs:
             return self.spark.createDataFrame([], RECORD_SCHEMA)
 
@@ -614,12 +627,9 @@ class Database:
         # run verified duplicate-free at write time (``_U`` marker) —
         # the compacted steady state — so the hot scan stays a plain
         # parquet read.
-        if len(runs) > 1 or (runs and not read_run_unique(runs[0].path)):
+        if len(runs) > 1 or not runs[0].unique:
             df = _lww_dedup(df)
 
-        markers = self.delete_markers()
-        if as_of is not None:
-            markers = [m for m in markers if m["_txname"] <= as_of]
         df = self._apply_delete_markers(df, markers)
         if not include_txname:
             df = df.drop("_txname")
@@ -648,8 +658,11 @@ class Database:
         Cheaper than ``read().select("key")``: LWW overwrites never
         change key EXISTENCE, so the dedup aggregation is skipped
         entirely — the plan is a (key, ts)-pruned scan + delete filter +
-        distinct. ReadSchema carries no value columns (plan-asserted)."""
-        runs = self.data_runs()
+        distinct. ReadSchema carries no value columns (plan-asserted).
+        One listing, markers first, as in :meth:`read`."""
+        runs = self.runs()
+        markers = self.delete_markers(runs)
+        runs = [r for r in runs if not r.is_delete]
         if not runs:
             return self.spark.createDataFrame([], "key string")
         df, _aligned, txcol = self._scan_data_runs(runs)
@@ -662,7 +675,7 @@ class Database:
         if before_ns is not None:
             df = df.filter(F.col("ts") < F.lit(int(before_ns)))
         df = df.withColumn("_txname", txcol)
-        df = self._apply_delete_markers(df, self.delete_markers())
+        df = self._apply_delete_markers(df, markers)
         return df.select("key").distinct().orderBy("key")
 
     def export_bucketed(
@@ -746,11 +759,16 @@ class Database:
         (segment_reader.rs:173-234, ~15 ms random lookup). Wildcards and
         scans still use the Spark plan.
         """
+        return self._reader().get(key, after_ns=after_ns, before_ns=before_ns)
+
+    def _reader(self):
+        """The handle's lazily built ``PointReader`` (its caches live
+        as long as the handle; ``rebucket`` drops it)."""
         if self._point_reader is None:
             from sonnerie_spark.pointread import PointReader
 
             self._point_reader = PointReader(self)
-        return self._point_reader.get(key, after_ns=after_ns, before_ns=before_ns)
+        return self._point_reader
 
     def agg_series(
         self,
@@ -817,11 +835,7 @@ class Database:
         """Batch :meth:`get`: {key: rows} in ONE driver-side merge pass
         (run listing, footers, and delete markers amortized across the
         batch — the point-read analogue of ``read(keys=[...])``)."""
-        if self._point_reader is None:
-            from sonnerie_spark.pointread import PointReader
-
-            self._point_reader = PointReader(self)
-        return self._point_reader.get_many(
+        return self._reader().get_many(
             keys, after_ns=after_ns, before_ns=before_ns
         )
 
@@ -843,16 +857,14 @@ class Database:
             if r.is_delete:
                 n_markers += len(self.delete_markers([r]))
                 continue
-            files = rows = nbytes = 0
-            for name in sorted(os.listdir(r.path)):
-                if not name.endswith(".parquet"):
-                    continue
+            rows = nbytes = 0
+            for name in r.files:
                 p = os.path.join(r.path, name)
-                files += 1
                 nbytes += os.stat(p).st_size
                 rows += pq.ParquetFile(p).metadata.num_rows
             runs.append(
-                {"name": r.name, "files": files, "rows": rows, "bytes": nbytes}
+                {"name": r.name, "files": len(r.files), "rows": rows,
+                 "bytes": nbytes}
             )
             total_rows += rows
             total_bytes += nbytes
@@ -877,11 +889,7 @@ class Database:
         pyarrow like :meth:`get`, bounded by row-group count — returns
         ``None`` when the match is too large, signalling the caller to
         use the distributed :meth:`read` plan instead."""
-        if self._point_reader is None:
-            from sonnerie_spark.pointread import PointReader
-
-            self._point_reader = PointReader(self)
-        return self._point_reader.get_range(
+        return self._reader().get_range(
             prefix,
             prefix_upper_bound(prefix),
             after_ns=after_ns,
@@ -1496,7 +1504,7 @@ class Database:
         bucket aligned."""
         df, aligned, txcol = self._scan_data_runs(data)
         df = df.withColumn("_txname", txcol)
-        if len(data) > 1 or not read_run_unique(data[0].path):
+        if len(data) > 1 or not data[0].unique:
             df = _lww_dedup(df)
         df = self._apply_delete_markers(df, self.delete_markers(dels))
         return df.drop("_txname"), aligned

@@ -14,6 +14,13 @@ lookup is a binary search over mmap'ed segment headers
 analytics keep the Spark plan; only `key == constant` (optionally with a
 time range) takes this path.
 
+Every read here — ``get``, ``get_many``, the prefix read and the Arrow
+``agg_series`` fold — runs inside one bracket (``_consistent``): run-set
+fingerprint, ONE ``Database.runs()`` listing, the attempt, a closing
+fingerprint probe, retried on a race. The attempt reads only what that
+listing names; a cached footer stays valid while its run's listed file
+names are unchanged, so a warm read stats no data run.
+
 Scale note: the fast path reads only footer statistics and delete
 markers (both cached per run) plus the pruned row groups, so its cost is
 O(runs) listing + O(selectivity) data — on a compacted DB that is one
@@ -152,34 +159,78 @@ class _FileMeta:
         ]
 
 
-class _RunFooters:
-    """Cached footer statistics for one immutable run directory."""
+# Lost attempts a read outlasts. The closing probe fails on every plain
+# commit too, and a retry starts right after the commit it lost to, so a
+# writer committing back-to-back (a PUT streak on another serve
+# connection, each PUT about as long as one attempt) beats attempt after
+# attempt; the bound outlasts such a streak. A compaction swap (a handful
+# of renames) costs one retry.
+_MAX_ATTEMPTS = 20
 
-    __slots__ = ("mtime", "files")
 
-    def __init__(self, mtime: float, files: list[_FileMeta]):
-        self.mtime = mtime
-        self.files = files
+def _consistent(db, attempt):
+    """``attempt(runs)`` on one listing of ``db``, bracketed so its result
+    is one committed snapshot — the retry loop every Spark-free read
+    shares (point, batch and prefix GETs, the Arrow fold).
+
+    Each try takes the cheap ``run_names`` fingerprint, then ONE
+    ``runs()`` listing, which the attempt reads from alone (file names,
+    uniqueness marker and delete runs included — no second listing, no
+    stat of a data run), then probes the fingerprint again. Complete
+    run dirs appear and disappear only by atomic renames, so an
+    unchanged fingerprint brackets a window with no commit or compaction
+    swap. Two race shapes retry on a fresh listing:
+
+    - a listed run or file vanishing mid-read (a compaction hide, or a
+      same-name republish whose new files carry new names): the attempt
+      raises OSError;
+    - a listing taken INSIDE a swap window, seeing neither the old runs
+      nor the merged result: the closing probe differs.
+
+    The attempt reads delete markers inside the bracket too: a major
+    compaction purges them while merged rows may still be
+    pre-compaction, so markers read after the probe could resurrect
+    deleted records — a snapshot that never existed."""
+    err = None
+    for _attempt in range(_MAX_ATTEMPTS):
+        fingerprint = db.run_names()
+        runs = db.runs()
+        try:
+            result = attempt(runs)
+        except OSError as e:
+            err = e
+            continue
+        if db.run_names() == fingerprint:
+            return result
+    raise RuntimeError("read kept racing commits and compaction swaps") from err
 
 
 class PointReader:
     """Exact-key reads over a Database without Spark jobs.
 
-    Two per-run caches, both keyed by run directory + mtime: footer
-    statistics of data runs (``_footers``) and the parsed rows of
-    delete-marker runs (``_markers``). Runs are immutable once
-    committed, so an entry stays valid until the run is replaced by
-    compaction (directory disappears or mtime changes). Neither cache
-    holds an open file. Cached marker dicts are shared between reads
-    and must not be mutated.
+    Every read is one ``_consistent`` bracket over one run listing. Two
+    per-run caches, keyed by run path, hold no open file:
+
+    - ``_footers``: footer statistics of a data run, valid while the
+      cached file names equal the listed ``RunInfo.files``. A run
+      republished under the same name (compaction keeps ``main`` and the
+      newest tx name) always carries new file names — a Spark write gets
+      a fresh job UUID, the Spark-free writers a fresh ``time_ns``
+      nonce — so the listing alone decides a hit, without a stat.
+    - ``_markers``: the parsed rows of a delete run, valid per mtime. A
+      delete run's file is always ``deletes.parquet``, so its name
+      proves nothing and the stat stays.
+
+    Cached marker dicts are shared between reads and must not be
+    mutated.
     """
 
     def __init__(self, db):
         self.db = db
-        self._footers: dict[str, _RunFooters] = {}
+        self._footers: dict[str, tuple[tuple[str, ...], list[_FileMeta]]] = {}
         self._markers: dict[str, tuple[int, list[dict]]] = {}
 
-    # -- footer cache ------------------------------------------------------
+    # -- caches ------------------------------------------------------------
 
     def _evict_stale_footers(self, all_runs) -> None:
         """Evict footer- and marker-cache entries for runs no longer
@@ -198,33 +249,24 @@ class PointReader:
             for stale in [p for p in list(cache) if p not in live]:
                 cache.pop(stale, None)
 
-    def _run_footers(self, run) -> _RunFooters | None:
-        # The whole stat/list/open sequence can race a compaction swap
-        # hiding the run dir; ANY OSError here means "run replaced under
-        # us" and the caller retries on a fresh listing.
-        try:
-            mtime = os.stat(run.path).st_mtime_ns
-            cached = self._footers.get(run.path)
-            if cached is not None and cached.mtime == mtime:
-                return cached
-            run_b = read_run_buckets(run.path)
-            files = []
-            for name in sorted(os.listdir(run.path)):
-                if not name.endswith(".parquet"):
-                    continue
-                p = os.path.join(run.path, name)
-                files.append(_FileMeta(p, pq.read_metadata(p), run_b))
-        except OSError:
-            self._footers.pop(run.path, None)
-            return None
-        entry = _RunFooters(mtime, files)
-        self._footers[run.path] = entry
-        return entry
+    def _run_footers(self, run) -> list[_FileMeta]:
+        """Footer statistics of one listed data run, one ``_FileMeta``
+        per file. OSError propagates: the run was replaced under us."""
+        cached = self._footers.get(run.path)
+        if cached is not None and cached[0] == run.files:
+            return cached[1]
+        run_b = read_run_buckets(run.path)
+        metas = []
+        for name in run.files:
+            p = os.path.join(run.path, name)
+            metas.append(_FileMeta(p, pq.read_metadata(p), run_b))
+        self._footers[run.path] = (run.files, metas)
+        return metas
 
     def _run_markers(self, run) -> list[dict]:
         """The delete markers of one delete run, parsed once per
         (path, mtime) through ``Database.delete_markers``. OSError
-        propagates: the run was purged under us, the caller retries."""
+        propagates: the run was purged under us."""
         mtime = os.stat(run.path).st_mtime_ns
         cached = self._markers.get(run.path)
         if cached is not None and cached[0] == mtime:
@@ -332,19 +374,6 @@ class PointReader:
         bounds driver memory AND keeps this path's latency in the
         point-read class regardless of the pattern a client sends.
         """
-        total = 0
-        all_runs = self.db.runs()
-        self._evict_stale_footers(all_runs)
-        for run in all_runs:
-            if run.is_delete:
-                continue
-            footers = self._run_footers(run)
-            if footers is None:
-                continue
-            for fm in footers.files:
-                total += len(fm.groups_for_range(lo, hi, after_ns, before_ns))
-                if total > max_groups:
-                    return None
 
         def flt(tbl):
             keep = pc.greater_equal(tbl.column("key"), lo)
@@ -357,26 +386,22 @@ class PointReader:
             flt,
             after_ns=after_ns,
             before_ns=before_ns,
+            max_groups=max_groups,
         )
 
-    def _merge(self, groups_fn, filter_fn, *, after_ns, before_ns, file_ok=None) -> list[dict]:
-        # A concurrent compaction swap can hide a run between the
-        # directory listing and the footer read; proceeding would
-        # silently drop that run's records, so restart the merge on a
-        # fresh listing. Retries are bounded, but not by swaps alone: the
-        # closing fingerprint probe also fails on every plain commit, and
-        # a retry starts right after the commit it lost to — so a writer
-        # committing back-to-back (a PUT streak on another serve
-        # connection, each PUT about as long as one attempt) beats
-        # attempt after attempt. The bound outlasts such a streak; a
-        # swap (a handful of renames) costs one retry.
-        for _attempt in range(20):
-            merged = self._merge_once(groups_fn, filter_fn, file_ok)
-            if merged is not None:
-                tables, markers = merged
-                break
-        else:
-            raise RuntimeError("point read kept racing commits and compaction swaps")
+    def _merge(
+        self, groups_fn, filter_fn, *, after_ns, before_ns, file_ok=None,
+        max_groups=None,
+    ) -> list[dict] | None:
+        merged = _consistent(
+            self.db,
+            lambda runs: self._read_once(
+                runs, groups_fn, filter_fn, file_ok, max_groups
+            ),
+        )
+        if merged is None:
+            return None  # more than max_groups row groups match
+        tables, markers = merged
 
         # Vectorized fast path for the compacted steady state: a single
         # data run USUALLY holds no (key, ts) conflict (transactions
@@ -435,66 +460,36 @@ class PointReader:
         out.sort(key=itemgetter("key", "ts"))
         return out
 
-    def _merge_once(self, groups_fn, filter_fn, file_ok=None):
-        """One merge attempt; None when the run set changed mid-read.
-        On success returns ``(tables, markers)`` — the per-run filtered
-        arrow tables (commit order) AND the delete markers read inside
-        the same race window; _merge resolves LWW/deletes on top.
-
-        Two race shapes with compaction's swap (db.py _compact_locked):
-        a listed run vanishing mid-read (stat/open fails -> retry), and
-        a listing taken INSIDE the swap window seeing neither the old
-        runs nor the merged result — caught by re-listing after the
-        merge and comparing; the window is a handful of renames, so the
-        retry's fresh listing sees the merged replacement. Delete
-        markers are loaded here, BEFORE the final listing comparison,
-        and the comparison covers the FULL run list (data runs and
-        delete-marker runs): a major compaction purges markers from disk
-        while merged rows may still be pre-compaction, so fetching
-        markers after the guard could resurrect deleted records — a
-        snapshot that never existed. The probe is the cheap
-        ``run_names`` fingerprint (top-level names only — complete run
-        dirs appear/disappear solely via atomic renames), taken BEFORE
-        the full listing so the bracket covers every read this attempt
-        makes."""
-        fingerprint = self.db.run_names()
-        all_runs = self.db.runs()
-        self._evict_stale_footers(all_runs)
-        runs = [r for r in all_runs if not r.is_delete]
-        tables: list[tuple[str, object]] = []  # (run name, filtered table)
+    def _read_once(self, runs, groups_fn, filter_fn, file_ok, max_groups):
+        """One attempt over the listed ``runs``: ``(tables, markers)`` —
+        the per-run filtered arrow tables in commit order and the delete
+        markers — or None when more than ``max_groups`` row groups
+        match. Every row group is picked from the footers before any is
+        read, so an over-budget prefix read decodes nothing and stops
+        at the first footer past the budget."""
+        self._evict_stale_footers(runs)
+        budget = float("inf") if max_groups is None else max_groups
+        plan = []  # (run name, file path, row groups), commit order
         for run in runs:  # lexical order == commit order
-            footers = self._run_footers(run)
-            if footers is None:
-                return None  # run replaced under us: caller re-lists
-            try:
-                for fm in footers.files:
-                    if file_ok is not None and not file_ok(fm):
-                        continue
+            if run.is_delete:
+                continue
+            for fm in self._run_footers(run):
+                if file_ok is None or file_ok(fm):
                     groups = groups_fn(fm)
-                    if not groups:
-                        continue
-                    with pq.ParquetFile(fm.path) as pf:
-                        tbl = filter_fn(pf.read_row_groups(groups))
-                    if tbl.num_rows == 0:
-                        continue
-                    tables.append((run.name, tbl))
-            except OSError:
-                self._footers.pop(run.path, None)
-                return None  # file deleted mid-read: retry fresh
-        try:
-            # Read markers from the attempt's own listing: one consistent
-            # snapshot per attempt, no second readdir, and an unrelated
-            # delete commit landing mid-attempt can't consume a retry.
-            markers = [
-                m
-                for run in all_runs
-                if run.is_delete
-                for m in self._run_markers(run)
-            ]
-        except OSError:
-            return None  # marker run purged mid-read: retry fresh
-        if self.db.run_names() != fingerprint:
-            return None  # listing raced a commit/compaction swap: retry
+                    if groups:
+                        budget -= len(groups)
+                        if budget < 0:
+                            return None
+                        plan.append((run.name, fm.path, groups))
+        tables = []
+        for name, path, groups in plan:
+            with pq.ParquetFile(path) as pf:
+                tbl = filter_fn(pf.read_row_groups(groups))
+            if tbl.num_rows:
+                tables.append((name, tbl))
+        markers = [
+            m for run in runs if run.is_delete for m in self._run_markers(run)
+        ]
         return tables, markers
 
 
@@ -557,225 +552,210 @@ def arrow_agg_series(
     value folded is `_value_at` semantics: position ``value_index`` of
     v_double if present else v_long, as double.
 
-    Like every driver-side path, brackets its reads with the run-set
-    fingerprint and retries if a commit/compaction swaps the listing
-    mid-read.
+    Like every driver-side path, reads inside the ``_consistent``
+    bracket: a commit or compaction swap mid-read retries it.
     """
     import pyarrow as pa
     import pyarrow.dataset as ds
 
-    from sonnerie_spark.bucketing import read_run_unique
     from sonnerie_spark.plans.keyfilter import analyze_wildcard
 
-    for _attempt in range(5):
-        fingerprint = db.run_names()
-        runs = db.runs()
-        data = [r for r in runs if not r.is_delete]
-        if len(data) != 1 or any(r.is_delete for r in runs):
-            return None
-        run = data[0]
-        if not read_run_unique(run.path):
-            return None
+    filt = None
 
-        filt = None
+    def conj(c):
+        nonlocal filt
+        filt = c if filt is None else (filt & c)
 
-        def conj(c):
-            nonlocal filt
-            filt = c if filt is None else (filt & c)
+    if key is not None:
+        conj(ds.field("key") == key)
+    if wildcard is not None:
+        info = analyze_wildcard(wildcard)
+        if info.exact is not None:
+            conj(ds.field("key") == info.exact)
+        elif info.prefix and not info.needs_like:
+            from sonnerie_spark.plans.keyfilter import prefix_upper_bound
 
-        if key is not None:
-            conj(ds.field("key") == key)
-        if wildcard is not None:
-            info = analyze_wildcard(wildcard)
-            if info.exact is not None:
-                conj(ds.field("key") == info.exact)
-            elif info.prefix and not info.needs_like:
-                from sonnerie_spark.plans.keyfilter import prefix_upper_bound
-
-                conj(ds.field("key") >= info.prefix)
-                ub = prefix_upper_bound(info.prefix)
-                if ub is not None:
-                    conj(ds.field("key") < ub)
-            else:
-                return None  # mid-pattern wildcards: Spark plan
-        if after_ns is not None:
-            conj(ds.field("ts") >= int(after_ns))
-        if before_ns is not None:
-            conj(ds.field("ts") < int(before_ns))
-
-        try:
-            # Read the key column DICTIONARY-ENCODED: a compacted run's
-            # key column is a few thousand distinct series repeated
-            # millions of times, and parquet already stores it as
-            # dictionary pages — materializing to plain strings was
-            # ~40% of the r7 fold profile's 1.36 s scan term. Reading
-            # it as dictionary<string> halves the scan and feeds the
-            # hash agg integer codes (micro A/B at 20 M rows x 1000
-            # keys, 1 thread: scan 0.55 -> 0.30 s, agg 0.47 -> 0.40 s).
-            fmt = ds.ParquetFileFormat(
-                read_options=ds.ParquetReadOptions(
-                    dictionary_columns=["key"]
-                )
-            )
-            dset = ds.dataset(run.path, format=fmt)
-            # Value-lane elision: decoding a 20 M-row all-empty list
-            # column costs ~25% of the whole fold (offsets decode is
-            # per-row even when no values exist), and a compacted
-            # homogeneous-format run uses exactly one numeric lane.
-            # Parquet leaf statistics prove emptiness for free
-            # (stats.num_values == 0 in every row group <=> the lane
-            # holds no values anywhere). A lane is elided ONLY on
-            # positive proof: its leaf path must be SEEN in every row
-            # group with zero values — a path that never appears (a
-            # writer naming the list child something other than
-            # 'element', e.g. pyarrow<11's 'item') counts as unproven
-            # and is read, never silently dropped (r7 review).
-            lanes = {
-                "v_long.list.element": 0,  # row groups proven empty
-                "v_double.list.element": 0,
-            }
-            total_rgs = 0
-            for frag in dset.get_fragments():
-                md = frag.metadata
-                total_rgs += md.num_row_groups
-                for rgi in range(md.num_row_groups):
-                    rg = md.row_group(rgi)
-                    for ci in range(rg.num_columns):
-                        col = rg.column(ci)
-                        p = col.path_in_schema
-                        if p in lanes:
-                            st = col.statistics
-                            if (
-                                st is not None
-                                and st.num_values is not None
-                                and st.num_values == 0
-                            ):
-                                lanes[p] += 1
-            cols = ["key"]
-            if lanes["v_long.list.element"] < total_rgs or total_rgs == 0:
-                cols.append("v_long")
-            if lanes["v_double.list.element"] < total_rgs or total_rgs == 0:
-                cols.append("v_double")
-            if filt is None:
-                # Unfiltered whole-run fold: bypass the Acero scanner
-                # and read the explicit file list directly — the
-                # dataset machinery costs ~20% of the scan at 20 M
-                # rows (fragment plumbing + expression projection the
-                # fold doesn't need). Filtered folds keep the dataset
-                # path: row-group pruning there dwarfs the overhead.
-                import pyarrow.parquet as pq
-
-                tbl = pq.read_table(
-                    sorted(dset.files),
-                    columns=cols,
-                    read_dictionary=["key"],
-                    pre_buffer=True,
-                )
-            else:
-                tbl = dset.to_table(columns=cols, filter=filt)
-        except (OSError, pa.ArrowInvalid):
-            continue  # run swapped mid-read: retry on a fresh listing
-        if db.run_names() != fingerprint:
-            continue
-
-        if len(cols) == 2 and value_index == 0:
-            # Single surviving value lane at index 0 — the compacted
-            # homogeneous-format steady state (the shape every
-            # SCALE.md fold number is quoted for): fold each chunk
-            # directly off the parquet list column (flatten + astype
-            # per chunk) instead of building the whole-column
-            # row-aligned lane first. The whole-column pc.cast + slice
-            # machinery this skips was 0.45 s of the 1.61 s r9 fold at
-            # 20 M rows (1 thread); with this path the tail is 0.18 s.
-            # Any chunk outside the clean shape (nulls, ragged lists,
-            # NaN) bails to the general path below.
-            out = _segmented_fold_single_lane(
-                tbl.column("key"), tbl.column(cols[1])
-            )
-            if out is not None:
-                return out
-
-        def elem(col, i, typ):
-            # Row-aligned element-at. The generic expression
-            # (list_slice to fixed_size_list<1> + null-pad) costs ~4x
-            # the parquet scan itself at 20M rows, so the shapes a
-            # compacted run actually has get cheap paths first — all
-            # probed with vectorized kernels that work per-chunk (no
-            # combine_chunks copy, no offsets->numpy materialization):
-            #   - every list empty (the unused value lane): all-null;
-            #   - no nulls + uniform list length L > i (homogeneous
-            #     formats): list_flatten IS the row-aligned value
-            #     stream for L == 1; stride-take for L > 1.
-            import numpy as np
-
-            n = len(col)
-            lens = pc.list_value_length(col)
-            mm = pc.min_max(lens)
-            mx = mm["max"].as_py()
-            if not mx:  # every list empty/null
-                return pa.nulls(n, typ)
-            mn = mm["min"].as_py()
-            if col.null_count == 0 and mn == mx and mn > i:
-                flat = pc.list_flatten(col)
-                if mn == 1:
-                    return flat
-                if isinstance(flat, pa.ChunkedArray):
-                    flat = flat.combine_chunks()
-                return flat.take(
-                    pa.array(np.arange(i, n * mn, mn, dtype=np.int64))
-                )
-            # general: short/ragged lists or parent nulls -> slice + pad
-            ca = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-            sl = pc.list_slice(ca, i, i + 1, return_fixed_size_list=True)
-            return pc.if_else(
-                pc.is_valid(sl), sl.values, pa.nulls(len(sl), typ)
-            )
-
-        d = (
-            elem(tbl.column("v_double"), value_index, pa.float64())
-            if "v_double" in cols
-            else pa.nulls(len(tbl), pa.float64())
-        )
-        l = (
-            elem(tbl.column("v_long"), value_index, pa.int64())
-            if "v_long" in cols
-            else pa.nulls(len(tbl), pa.int64())
-        )
-        if l.null_count == len(l):
-            v = d
+            conj(ds.field("key") >= info.prefix)
+            ub = prefix_upper_bound(info.prefix)
+            if ub is not None:
+                conj(ds.field("key") < ub)
         else:
-            lf = pc.cast(l, pa.float64())
-            v = lf if d.null_count == len(d) else pc.coalesce(d, lf)
-        out = _segmented_fold(tbl.column("key"), v)
+            return None  # mid-pattern wildcards: Spark plan
+    if after_ns is not None:
+        conj(ds.field("ts") >= int(after_ns))
+    if before_ns is not None:
+        conj(ds.field("ts") < int(before_ns))
+
+    def scan(runs):
+        run = runs[0] if len(runs) == 1 else None
+        if run is None or run.is_delete or not run.unique or not run.files:
+            return None  # not the compacted steady state: Spark plan
+        paths = [os.path.join(run.path, f) for f in run.files]
+        # Read the key column DICTIONARY-ENCODED: a compacted run's
+        # key column is a few thousand distinct series repeated
+        # millions of times, and parquet already stores it as
+        # dictionary pages — materializing to plain strings was
+        # ~40% of the r7 fold profile's 1.36 s scan term. Reading
+        # it as dictionary<string> halves the scan and feeds the
+        # hash agg integer codes (micro A/B at 20 M rows x 1000
+        # keys, 1 thread: scan 0.55 -> 0.30 s, agg 0.47 -> 0.40 s).
+        fmt = ds.ParquetFileFormat(
+            read_options=ds.ParquetReadOptions(dictionary_columns=["key"])
+        )
+        dset = ds.dataset(paths, format=fmt)
+        # Value-lane elision: decoding a 20 M-row all-empty list
+        # column costs ~25% of the whole fold (offsets decode is
+        # per-row even when no values exist), and a compacted
+        # homogeneous-format run uses exactly one numeric lane.
+        # Parquet leaf statistics prove emptiness for free
+        # (stats.num_values == 0 in every row group <=> the lane
+        # holds no values anywhere). A lane is elided ONLY on
+        # positive proof: its leaf path must be SEEN in every row
+        # group with zero values — a path that never appears (a
+        # writer naming the list child something other than
+        # 'element', e.g. pyarrow<11's 'item') counts as unproven
+        # and is read, never silently dropped (r7 review).
+        lanes = {
+            "v_long.list.element": 0,  # row groups proven empty
+            "v_double.list.element": 0,
+        }
+        total_rgs = 0
+        for frag in dset.get_fragments():
+            md = frag.metadata
+            total_rgs += md.num_row_groups
+            for rgi in range(md.num_row_groups):
+                rg = md.row_group(rgi)
+                for ci in range(rg.num_columns):
+                    col = rg.column(ci)
+                    p = col.path_in_schema
+                    if p in lanes:
+                        st = col.statistics
+                        if (
+                            st is not None
+                            and st.num_values is not None
+                            and st.num_values == 0
+                        ):
+                            lanes[p] += 1
+        cols = ["key"]
+        if lanes["v_long.list.element"] < total_rgs or total_rgs == 0:
+            cols.append("v_long")
+        if lanes["v_double.list.element"] < total_rgs or total_rgs == 0:
+            cols.append("v_double")
+        if filt is not None:
+            # Filtered folds keep the dataset path: row-group pruning
+            # there dwarfs the scanner's overhead.
+            return dset.to_table(columns=cols, filter=filt), cols
+        # Unfiltered whole-run fold: bypass the Acero scanner and read
+        # the file list directly — the dataset machinery costs ~20% of
+        # the scan at 20 M rows (fragment plumbing + expression
+        # projection the fold doesn't need).
+        tbl = pq.read_table(
+            paths, columns=cols, read_dictionary=["key"], pre_buffer=True
+        )
+        return tbl, cols
+
+    read = _consistent(db, scan)
+    if read is None:
+        return None
+    tbl, cols = read
+
+    if len(cols) == 2 and value_index == 0:
+        # Single surviving value lane at index 0 — the compacted
+        # homogeneous-format steady state (the shape every
+        # SCALE.md fold number is quoted for): fold each chunk
+        # directly off the parquet list column (flatten + astype
+        # per chunk) instead of building the whole-column
+        # row-aligned lane first. The whole-column pc.cast + slice
+        # machinery this skips was 0.45 s of the 1.61 s r9 fold at
+        # 20 M rows (1 thread); with this path the tail is 0.18 s.
+        # Any chunk outside the clean shape (nulls, ragged lists,
+        # NaN) bails to the general path below.
+        out = _segmented_fold_single_lane(
+            tbl.column("key"), tbl.column(cols[1])
+        )
         if out is not None:
             return out
-        # Fallback (non-dictionary key chunks or genuine NaN payloads,
-        # whose min/max semantics the hash agg defines): the generic
-        # pyarrow hash aggregation over unified dictionary codes.
-        keyed = tbl.select(["key"]).append_column("v", v)
-        keyed = keyed.unify_dictionaries()
-        g = keyed.group_by("key").aggregate(
-            [("v", "count"), ("v", "sum"), ("v", "min"), ("v", "max")]
+
+    def elem(col, i, typ):
+        # Row-aligned element-at. The generic expression
+        # (list_slice to fixed_size_list<1> + null-pad) costs ~4x
+        # the parquet scan itself at 20M rows, so the shapes a
+        # compacted run actually has get cheap paths first — all
+        # probed with vectorized kernels that work per-chunk (no
+        # combine_chunks copy, no offsets->numpy materialization):
+        #   - every list empty (the unused value lane): all-null;
+        #   - no nulls + uniform list length L > i (homogeneous
+        #     formats): list_flatten IS the row-aligned value
+        #     stream for L == 1; stride-take for L > 1.
+        import numpy as np
+
+        n = len(col)
+        lens = pc.list_value_length(col)
+        mm = pc.min_max(lens)
+        mx = mm["max"].as_py()
+        if not mx:  # every list empty/null
+            return pa.nulls(n, typ)
+        mn = mm["min"].as_py()
+        if col.null_count == 0 and mn == mx and mn > i:
+            flat = pc.list_flatten(col)
+            if mn == 1:
+                return flat
+            if isinstance(flat, pa.ChunkedArray):
+                flat = flat.combine_chunks()
+            return flat.take(
+                pa.array(np.arange(i, n * mn, mn, dtype=np.int64))
+            )
+        # general: short/ragged lists or parent nulls -> slice + pad
+        ca = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+        sl = pc.list_slice(ca, i, i + 1, return_fixed_size_list=True)
+        return pc.if_else(
+            pc.is_valid(sl), sl.values, pa.nulls(len(sl), typ)
         )
-        # decode AFTER the agg: only #groups rows pay the string
-        # materialization (sort_by has no dictionary kernel anyway)
-        g = g.set_column(
-            g.schema.get_field_index("key"),
-            "key",
-            pc.cast(g.column("key"), pa.string()),
-        )
-        out = [
-            {
-                "key": r["key"],
-                "n": r["v_count"],
-                "sum": r["v_sum"],
-                "min": r["v_min"],
-                "max": r["v_max"],
-            }
-            for r in g.sort_by("key").to_pylist()
-        ]
+
+    d = (
+        elem(tbl.column("v_double"), value_index, pa.float64())
+        if "v_double" in cols
+        else pa.nulls(len(tbl), pa.float64())
+    )
+    l = (
+        elem(tbl.column("v_long"), value_index, pa.int64())
+        if "v_long" in cols
+        else pa.nulls(len(tbl), pa.int64())
+    )
+    if l.null_count == len(l):
+        v = d
+    else:
+        lf = pc.cast(l, pa.float64())
+        v = lf if d.null_count == len(d) else pc.coalesce(d, lf)
+    out = _segmented_fold(tbl.column("key"), v)
+    if out is not None:
         return out
-    raise RuntimeError("agg_series kept racing compaction swaps")
+    # Fallback (non-dictionary key chunks or genuine NaN payloads,
+    # whose min/max semantics the hash agg defines): the generic
+    # pyarrow hash aggregation over unified dictionary codes.
+    keyed = tbl.select(["key"]).append_column("v", v)
+    keyed = keyed.unify_dictionaries()
+    g = keyed.group_by("key").aggregate(
+        [("v", "count"), ("v", "sum"), ("v", "min"), ("v", "max")]
+    )
+    # decode AFTER the agg: only #groups rows pay the string
+    # materialization (sort_by has no dictionary kernel anyway)
+    g = g.set_column(
+        g.schema.get_field_index("key"),
+        "key",
+        pc.cast(g.column("key"), pa.string()),
+    )
+    out = [
+        {
+            "key": r["key"],
+            "n": r["v_count"],
+            "sum": r["v_sum"],
+            "min": r["v_min"],
+            "max": r["v_max"],
+        }
+        for r in g.sort_by("key").to_pylist()
+    ]
+    return out
 
 
 def _segmented_fold(kcol, v) -> list[dict] | None:

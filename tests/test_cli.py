@@ -478,3 +478,17 @@ def test_jsonl_roundtrip(db, tmp_path):
         )
 
     assert snap(db2) == snap(db) and snap(db)
+
+
+def test_unsorted_add_rejects_duplicate_key_ts(db):
+    """A duplicate (key, ts) in an --unsorted batch is refused by the
+    commit itself (the reference writer's rule, write.rs:181-197), and
+    no run is published."""
+    from sonnerie_spark.db import CommitError
+
+    with pytest.raises(CommitError, match="duplicate"):
+        run_cli(
+            db, ["add", "--format", "u", "--unsorted"],
+            stdin="a 1000000000 1\nb 1000000000 2\na 1000000000 3\n",
+        )
+    assert db.runs() == []

@@ -910,3 +910,43 @@ def test_get_on_a_cold_reader_during_compaction_planning(spark, tmp_path, monkey
     monkeypatch.undo()
     assert got == [want]
     assert [db.get(k) for k in ("k0", "k1")] == want
+
+
+def _u(key, ts, v):
+    return {"key": key, "ts": ts, "fmt": "u", "v_long": [v],
+            "v_double": [], "v_str": [], "v_bin": []}
+
+
+def test_read_and_keys_during_major_compaction_keep_deletes(spark, tmp_path, monkeypatch):
+    """read() and keys() take ONE run listing and load its delete markers
+    before planning the scan. A major compaction landing right after the
+    plan purges the marker run, while the bucketed view's hard links keep
+    the planned rows readable; markers taken from a second listing would
+    be gone and the deleted key would come back."""
+    path = str(tmp_path / "db")
+    db = Database(spark, path, buckets=2)
+    db.commit_rows([_u("a", 1, 1), _u("k", 1, 1)])
+    db.commit_rows([_u("a", 2, 2), _u("k", 2, 2)])
+    db.commit_deletes([{"wildcard": "k"}])
+    real = Database._scan_data_runs
+    compactions = []
+
+    def compact_after_plan(self, runs):
+        planned = real(self, runs)
+        if self is db and len(compactions) < 2:
+            compactions.append(Database(spark, path).compact(major=True))
+        return planned
+
+    monkeypatch.setattr(Database, "_scan_data_runs", compact_after_plan)
+    rows = [(r.key, r.ts) for r in db.read_sorted().collect()]
+    # refill: the first compaction left one run, the race needs two
+    db.commit_rows([_u("a", 3, 3), _u("k", 3, 3)])
+    db.commit_deletes([{"wildcard": "k"}])
+    keys = [r.key for r in db.keys().collect()]
+    monkeypatch.undo()
+    assert compactions == ["main", "main"]
+    assert rows == [("a", 1), ("a", 2)]
+    assert keys == ["a"]
+    assert [(r.key, r.ts) for r in db.read_sorted().collect()] == [
+        ("a", 1), ("a", 2), ("a", 3)
+    ]

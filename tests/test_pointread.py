@@ -367,7 +367,7 @@ def test_point_read_prunes_row_groups_by_ts(spark, tmp_path):
     assert [r["ts"] for r in got] == list(range(5000, 5100))
 
     pr = db._point_reader
-    fm = pr._run_footers(db.data_runs()[0]).files[0]
+    fm = pr._run_footers(db.data_runs()[0])[0]
     assert fm.num_row_groups >= 20
     pruned = fm.groups_for("k", 5000, 5100)
     assert len(pruned) <= 2  # the window spans at most 2 of 20 groups
@@ -531,6 +531,23 @@ def test_agg_series_arrow_fold_matches_spark(spark, tmp_path):
     assert db.agg_series(wildcard="s%0") == _spark_fold(db, wildcard="s%0")
 
 
+def test_agg_series_after_a_major_compaction_deleted_everything(spark, tmp_path):
+    """A major compaction that deletes every record publishes a ``_U``
+    ``main`` holding no parquet file. The Arrow fold declines it (the
+    listed run has no file to scan) and the Spark plan answers [],
+    instead of failing every attempt on an empty dataset."""
+    from sonnerie_spark.pointread import arrow_agg_series
+
+    db = Database(spark, str(tmp_path / "db"), buckets=2)
+    db.commit_rows([_u_row("a", T0, 1)])
+    db.commit_deletes([{"wildcard": "%"}])
+    db.compact(major=True)
+    assert db.agg_series() == []
+    assert arrow_agg_series(db) is None
+    (run,) = db.runs()
+    assert run.unique and run.files == ()
+
+
 def test_agg_series_lane_elision_matches_spark(spark, tmp_path):
     """Homogeneous-format runs engage the value-lane elision (the
     footer proves the unused lane empty, so it is never decoded — the
@@ -644,3 +661,82 @@ def test_segmented_fold_matches_hash_agg():
         + vchunks[1:]
     )
     assert _segmented_fold(kcol, nan_v) is None
+
+
+def test_same_name_republish_is_seen_without_a_stat(spark, tmp_path):
+    """A minor compaction of a lone tx run republishes it under the SAME
+    name with new files. The footer cache is keyed by the run's listed
+    file names, so the next reads see the new content and the cache
+    holds only the new names."""
+    from pyspark.sql import functions as F
+
+    db = Database(spark, str(tmp_path / "db"), buckets=2)
+    db.commit_rows(
+        [_u_row(k, T0 + i * NS, i) for k in ("keep", "drop") for i in range(3)]
+    )
+    (old,) = db.runs()
+    assert len(db.get("drop")) == 3  # warm
+    assert len(db.get_prefix("")) == 6
+    db.compact(transform=lambda df: df.filter(F.col("key") != "drop"))
+    (new,) = db.runs()
+    assert new.name == old.name and new.files and set(new.files).isdisjoint(old.files)
+    assert db.get("drop") == []
+    assert [r["key"] for r in db.get_prefix("")] == ["keep"] * 3
+    pr = db._point_reader
+    assert list(pr._footers) == [new.path]
+    assert pr._footers[new.path][0] == new.files
+
+
+def test_each_read_lists_once(tmp_path, monkeypatch):
+    """A warm GET reads the run set from ONE Database.runs() listing per
+    attempt: no data-run directory is stat'ed or listed again, and a
+    prefix GET does not list the runs a second time for its row-group
+    budget."""
+    import os
+
+    db = _local_db(tmp_path)
+    for i in range(24):
+        db.commit_rows([_u_row(f"k{i % 5}", T0 + i * NS, i)])
+    for i in range(3):
+        db.commit_deletes(
+            [{"wildcard": "k1", "after_ns": T0 + i * NS, "before_ns": T0 + i * NS + 1}]
+        )
+    runs = db.runs()
+    data_dirs = {r.path for r in runs if not r.is_delete}
+    assert len(data_dirs) >= 20
+    want_get = db.get("k1")
+    want_prefix = db.get_prefix("k")  # warm both paths
+
+    calls = {"runs": 0, "run_names": 0, "stat": [], "listdir": []}
+    real_runs, real_names = Database.runs, Database.run_names
+    real_stat, real_listdir = os.stat, os.listdir
+
+    def counted(name, fn):
+        def wrapper(*a, **k):
+            calls[name] += 1
+            return fn(*a, **k)
+        return wrapper
+
+    def stat(p, *a, **k):
+        calls["stat"].append(os.fspath(p))
+        return real_stat(p, *a, **k)
+
+    def listdir(p=".", *a, **k):
+        calls["listdir"].append(os.fspath(p))
+        return real_listdir(p, *a, **k)
+
+    monkeypatch.setattr(Database, "runs", counted("runs", real_runs))
+    monkeypatch.setattr(Database, "run_names", counted("run_names", real_names))
+    monkeypatch.setattr(os, "stat", stat)
+    monkeypatch.setattr(os, "listdir", listdir)
+
+    assert db.get("k1") == want_get
+    assert data_dirs.isdisjoint(calls["stat"])
+    assert sorted(calls["listdir"]) == sorted(r.path for r in runs)
+    assert calls["runs"] == 1 and calls["run_names"] == 2
+
+    calls.update(runs=0, run_names=0, stat=[], listdir=[])
+    assert db.get_prefix("k") == want_prefix
+    assert calls["runs"] == 1 and calls["run_names"] == 2  # one attempt
+    assert data_dirs.isdisjoint(calls["stat"])
+    assert sorted(calls["listdir"]) == sorted(r.path for r in runs)
