@@ -31,7 +31,8 @@ changed (SCALE.md).
 
 This module holds the engine-portable pieces: a pure-Python
 reimplementation of Spark's Murmur3 (seed 42) so the driver-side
-pyarrow writer (``Database.commit_rows``) and point reader
+pyarrow writer (``db.Transaction``, which ``commit_rows`` feeds) and
+point reader
 (``pointread.py``) can compute the same bucket id Spark's JVM writer
 does, plus Spark's bucket-file-name convention.
 """

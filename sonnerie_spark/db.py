@@ -46,6 +46,7 @@ Scale notes (local[N] here, 1000 executors in production):
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import os
 import re
@@ -57,8 +58,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from sonnerie_spark import rowformat
 from sonnerie_spark.fsutil import (
+    OwnedDir,
     fsync_dir,
     fsync_tree,
+    reap_unowned,
     store_lock,
     tmp_name,
     write_json_atomic,
@@ -103,8 +106,9 @@ DELETE_SCHEMA = T.StructType(
 
 def arrow_record_schema():
     """RECORD_SCHEMA's pyarrow twin, for driver-side parquet writers
-    (commit_rows, the whole-stream gegnum spool) — files written with it
-    are indistinguishable from Spark-written run files."""
+    (the Spark-free run writer, ``Transaction``; the whole-stream gegnum
+    spool) — files written with it are indistinguishable from
+    Spark-written run files."""
     import pyarrow as pa
 
     return pa.schema(
@@ -129,6 +133,9 @@ DELETE_SENTINEL = "DELETE_MARKER"
 # or forward. The name is NOT under .tmp-* on purpose: the janitor must
 # never reap it.
 COMPACT_PLAN = ".compact-plan.json"
+# A run is written at <owned .tmp-* dir>/RUN_SUBDIR and published by
+# renaming that subdir (fsutil "Own").
+RUN_SUBDIR = "run"
 # Above this many live delete markers, switch from an inlined literal
 # predicate to a broadcast anti-join.
 MAX_INLINE_DELETES = 64
@@ -380,6 +387,15 @@ class Database:
                 out.append((r.name, name))
         return out or None
 
+    def _view_sig(self, files: list[tuple[str, str]]) -> str:
+        """The view signature of a run set: ``_bucketed_table`` names
+        its view by it and ``_gc_stale_views`` spares the current one."""
+        import hashlib
+
+        return hashlib.sha1(
+            ("\n".join(f"{rn}/{fn}" for rn, fn in files) + f"#{self.buckets}").encode()
+        ).hexdigest()[:12]
+
     def _bucketed_table(self, runs: list[RunInfo], files: list[tuple[str, str]]) -> DataFrame:
         """Expose the given runs as ONE external bucketed table.
 
@@ -397,9 +413,7 @@ class Database:
         """
         import hashlib
 
-        sig = hashlib.sha1(
-            ("\n".join(f"{rn}/{fn}" for rn, fn in files) + f"#{self.buckets}").encode()
-        ).hexdigest()[:12]
+        sig = self._view_sig(files)
         cache = os.path.join(self.path, ".cache")
         view = os.path.join(cache, f"view-{sig}")
         for _ in range(3):
@@ -492,10 +506,7 @@ class Database:
             runs = self.data_runs()
             files = self._bucketed_files(runs) if len(runs) > 1 else None
             if files is not None:
-                current_sig = hashlib.sha1(
-                    ("\n".join(f"{rn}/{fn}" for rn, fn in files)
-                     + f"#{self.buckets}").encode()
-                ).hexdigest()[:12]
+                current_sig = self._view_sig(files)
         except OSError:
             pass
         for name in names:
@@ -1085,53 +1096,23 @@ class Database:
         )
         return observed.drop("_dup"), obs
 
-    def commit_rows(self, rows: list[dict]) -> str:
+    def commit_rows(self, rows: list[dict]) -> str | None:
         """Commit a driver-side row buffer as one run, without a Spark job.
 
         The reference's CLI ``add`` path is likewise a single-threaded
         writer (write.rs); for driver-resident batches a direct pyarrow
         write of the (key, ts)-sorted buffer is strictly faster than
-        round-tripping through a 1-partition Spark job. The resulting run
-        is indistinguishable from a Spark-written one.
+        round-tripping through a 1-partition Spark job. The buffer is
+        sorted and fed to the one Spark-free run writer
+        (``Transaction``), which raises ``DuplicateRecordError`` on a
+        repeated (key, ts) — the reference's writer rule
+        (write.rs:181-197) that serve PUT relies on
+        (sonnerie-serve.rs:114-186). An empty buffer commits nothing
+        and returns None.
         """
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        rows = sorted(rows, key=lambda r: (r["key"], r["ts"]))
-        # Duplicate (key, ts) within one transaction is an error — the
-        # reference's writer rejects non-increasing timestamps per key
-        # after the external sort (write.rs:181-197), which serve PUT
-        # relies on (sonnerie-serve.rs:114-186).
-        for prev, cur in zip(rows, rows[1:]):
-            if prev["key"] == cur["key"] and prev["ts"] == cur["ts"]:
-                raise DuplicateRecordError(
-                    f"duplicate (key, ts) within one transaction: "
-                    f"({cur['key']!r}, {cur['ts']})"
-                )
-        arrow_schema = arrow_record_schema()
-        # Same bucket layout as the Spark writer (bucketing.py): one
-        # (key, ts)-sorted file per non-empty bucket, bucket id computed
-        # with the Python mirror of Spark's murmur3 and encoded in the
-        # file name, so driver-written runs participate in the
-        # exchange-free bucketed multi-run read like any other run.
-        by_bucket: dict[int, list[dict]] = {}
-        for r in rows:  # rows already (key, ts)-sorted; stable split
-            by_bucket.setdefault(bucket_of(r["key"], self.buckets), []).append(r)
-
-        def write(p):
-            os.makedirs(p, exist_ok=True)
-            nonce = f"{time.time_ns():016x}"
-            for b, brows in by_bucket.items():
-                tbl = pa.Table.from_pylist(brows, schema=arrow_schema)
-                pq.write_table(
-                    tbl,
-                    os.path.join(p, bucket_file_name(b, nonce)),
-                    compression=RUN_COMPRESSION,
-                )
-            write_run_buckets(p, self.buckets)
-            write_run_unique(p)  # dup scan above raised on any conflict
-
-        return self._atomic_commit(write)
+        tx = Transaction(self)
+        tx.rows = rows  # commit sorts a copy
+        return tx.commit()
 
     def commit_deletes(self, markers: list[dict]) -> str:
         """Commit a delete-marker transaction (create_tx.rs:115-174).
@@ -1167,26 +1148,27 @@ class Database:
         return self._atomic_commit(write)
 
     def _atomic_commit(self, write_fn) -> str:
-        """Write under .tmp-*, then fsync, then atomically rename to
-        tx.<016x-nanos>.
+        """``write_fn(path)`` writes a run at ``path`` inside a fresh
+        owned tmp dir (fsutil ``OwnedDir``), then :meth:`_atomic_rename`
+        publishes it as tx.<016x-nanos>; on any error the tmp dir is
+        removed. The Spark writers (``commit_dataframe``, which the
+        streaming ingest commits through) and ``commit_deletes`` commit
+        here; the Spark-free ``Transaction`` owns its tmp dir across
+        calls and publishes through :meth:`_atomic_rename` directly.
 
         Mirrors the reference's tempfile + fsync + atomic-rename with
         collision backoff (create_tx.rs:180-264; its commit() flushes +
-        sync_all()s before publishing, create_tx.rs:210-264) — the
-        fsync lives in :meth:`_atomic_rename` so the streaming ingest
-        path gets the same durability. On a shared filesystem this is
-        the same commit protocol a minimal table format uses.
+        sync_all()s before publishing, create_tx.rs:210-264). On a
+        shared filesystem this is the same commit protocol a minimal
+        table format uses.
         """
-        tmp = os.path.join(self.path, tmp_name(""))
-        try:
-            write_fn(tmp)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        return self._atomic_rename(tmp)
+        with OwnedDir(self.path) as owner:
+            write_fn(os.path.join(owner.path, RUN_SUBDIR))
+            return self._atomic_rename(owner.path)
 
-    def _atomic_rename(self, tmp: str) -> str:
-        """Publish an already-written ``.tmp-*`` dir as a transaction.
+    def _atomic_rename(self, owner: str) -> str:
+        """Publish the run written at ``<owner>/RUN_SUBDIR`` as a
+        transaction; the caller then closes the emptied owned dir.
 
         Serialized by the commit lock so published names are strictly
         monotonic even under concurrent/preempted writers: without it, a
@@ -1207,6 +1189,7 @@ class Database:
         after release (fsyncing a directory that has since gained
         entries is harmless) — the serialized window stays tiny.
         ``durable=False`` skips both fsyncs (constructor docstring)."""
+        tmp = os.path.join(owner, RUN_SUBDIR)
         if self.durable:
             fsync_tree(tmp)  # data durable before the rename publishes it
         with store_lock(self.path, ".commitlock"):
@@ -1312,70 +1295,24 @@ class Database:
                 return final_pass if final_pass is not None else last
         return last
 
-    # Leftover .tmp-* dirs older than this are crash debris (a live
-    # writer renames within its commit call; an hour-old tmp has no
-    # owner). Readers always ignore .tmp-*, so cleanup is cosmetic for
-    # correctness but keeps directory listings O(runs) after crashes.
+    # An unlocked .tmp-* dir older than this is crash debris (fsutil
+    # "Own": every live writer holds its dir's flock). Readers always
+    # ignore .tmp-*, so cleanup is cosmetic for correctness but keeps
+    # directory listings O(runs) after crashes.
     STALE_TMP_SECONDS = 3600.0
 
     def _purge_stale_tmp(self) -> None:
-        """Janitor for crashed commits; called under the compaction lock.
+        """Janitor for crashed writers; called under the compaction lock.
 
-        A ``.tmp-*`` dir is purged only when BOTH hold: the owner pid
-        embedded in its name (``.tmp-<pid>-*`` / ``.tmp-put-<pid>-*``)
-        is not alive on this host, and the NEWEST mtime among the dir
-        and its direct children is older than STALE_TMP_SECONDS. Both
-        guards exist for the same failure: a >1h streaming Transaction
-        spill (this class explicitly advertises billion-record add
-        streams) stops updating its DIRECTORY mtime once every bucket
-        writer file exists — appends touch file mtimes, not the parent
-        dir — so the old dir-mtime-only rule could rmtree a LIVE
-        transaction out from under its writer. Names without a pid
-        token (``.tmp-compact-*``, ``.tmp-old-*``) rely on the mtime
-        rule alone; a live compaction is already excluded because the
-        janitor runs under the compaction lock it holds."""
-        now = time.time()
+        A ``.tmp-*`` dir is removed only when a non-blocking flock on it
+        succeeds (no live ``OwnedDir`` holder: a commit, a ``Transaction``
+        spill, a serve PUT spool) and its own mtime is older than
+        STALE_TMP_SECONDS. Compaction's ``.tmp-compact-*`` /
+        ``.tmp-old-*`` dirs are never locked; a live compaction is
+        excluded because the janitor runs under the compaction lock."""
         for name in os.listdir(self.path):
-            if not name.startswith(".tmp-"):
-                continue
-            p = os.path.join(self.path, name)
-            pid = _tmp_owner_pid(name)
-            started = None
-            if pid is not None and _pid_alive(pid):
-                # Pid-reuse detection: a process that STARTED after the
-                # debris last moved cannot be the writer that produced
-                # it — the kernel recycled a dead writer's pid. Spare
-                # only a pid plausibly alive since the last write
-                # (1 s margin for clock-tick rounding); unknown start
-                # time (non-/proc host) falls back to sparing.
-                started = _pid_start_time(pid)
-                if started is None:
-                    continue
-            try:
-                newest = os.stat(p).st_mtime
-                # a live owner is proven by ANY write at/after its
-                # start — usually the dir mtime alone, so a live
-                # writer's (possibly huge) spool is spared without
-                # statting every child; dead/reused pids need the full
-                # newest-mtime scan for the staleness rule
-                spared = started is not None and started <= newest + 1.0
-                if not spared:
-                    for child in os.listdir(p):
-                        try:
-                            m = os.stat(os.path.join(p, child)).st_mtime
-                        except OSError:
-                            continue
-                        if m > newest:
-                            newest = m
-                        if started is not None and started <= newest + 1.0:
-                            spared = True
-                            break
-                if spared:
-                    continue
-                if now - newest > self.STALE_TMP_SECONDS:
-                    shutil.rmtree(p, ignore_errors=True)
-            except OSError:
-                pass
+            if name.startswith(".tmp-"):
+                reap_unowned(os.path.join(self.path, name), self.STALE_TMP_SECONDS)
 
     def _compact_locked(self, *, major, transform, max_runs):
         """One compaction pass over at most ``max_runs`` tx runs.
@@ -1559,82 +1496,6 @@ class Database:
         os.remove(p)
 
 
-def _tmp_owner_pid(name: str) -> int | None:
-    """Owner pid embedded in a ``.tmp-*`` dir name, or None. Accepts
-    both writer forms — ``.tmp-<pid>-<ns>`` (Transaction spill /
-    commit) and ``.tmp-put-<pid>-<ns>`` (serve spool); compaction's
-    ``.tmp-compact-*`` / ``.tmp-old-*`` carry no pid on purpose (their
-    liveness is the compaction lock the janitor already holds)."""
-    parts = name.split("-")
-    # Positional parse ONLY: the pid is parts[1] for the plain form and
-    # parts[2] for the serve form. Scanning parts[1:3] for "any all-digit
-    # token" mis-parsed pid-less names (.tmp-compact-<hex ns>, .tmp-old-*)
-    # whose hex time_ns token happened to be all decimal digits (~0.1% of
-    # timestamps) as a huge bogus pid.
-    tok = parts[2] if len(parts) > 2 and parts[1] == "put" else (
-        parts[1] if len(parts) > 1 else ""
-    )
-    if tok.isdigit():
-        pid = int(tok)
-        # a real pid fits the kernel's pid space; a hex-timestamp that
-        # parsed as decimal does not — treat it as "no pid" so the
-        # janitor falls back to the mtime rule
-        if 0 < pid < (1 << 31):
-            return pid
-    return None
-
-
-def _pid_start_time(pid: int) -> float | None:
-    """Start time (epoch seconds) of a live process via /proc, or None
-    when unavailable (non-Linux host, racing exit, unreadable stat).
-    The janitor uses it to detect pid REUSE: a process that started
-    AFTER a tmp dir's last write cannot be the writer that created it,
-    so the recycled pid must not spare the debris."""
-    try:
-        with open(f"/proc/{pid}/stat", "rb") as f:
-            stat = f.read()
-        btime = None
-        with open("/proc/stat", "rb") as f:
-            for line in f:
-                if line.startswith(b"btime "):
-                    btime = int(line.split()[1])
-                    break
-        if btime is None:
-            return None
-        # starttime is field 22 (1-indexed); split AFTER the ')' that
-        # ends comm, which may itself contain spaces or parens ->
-        # state is index 0 of the tail, starttime index 19
-        fields = stat.rsplit(b")", 1)[1].split()
-        return btime + int(fields[19]) / os.sysconf("SC_CLK_TCK")
-    except (OSError, ValueError, IndexError):
-        return None
-
-
-def _pid_alive(pid: int) -> bool:
-    """Is ``pid`` a live process on THIS host? (The engine's writers
-    are same-host by design — serve workers and CLI share the node.)
-
-    Pid-reuse edge: if the kernel recycles a dead writer's pid onto an
-    unrelated process this alone would spare the debris; the janitor
-    therefore pairs it with ``_pid_start_time`` — a pid born after the
-    debris last moved is treated as dead for sparing purposes. A LIVE
-    writer can still only be spared, never killed: its own start time
-    necessarily precedes every write it made."""
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    except (OSError, OverflowError, ValueError):
-        # OverflowError/ValueError: an out-of-range or negative value
-        # reached os.kill — not a live process; fall back to the mtime
-        # rule rather than failing every compact() until the debris dir
-        # is removed by hand.
-        return False
-    return True
-
-
 def _lww_dedup(df: DataFrame) -> DataFrame:
     """Last-writer-wins on (key, ts): keep the row from the newest run.
 
@@ -1678,24 +1539,29 @@ def _lww_dedup(df: DataFrame) -> DataFrame:
 
 
 class Transaction:
-    """Buffered record writer with the reference's per-tx invariants.
+    """Buffered record writer with the reference's per-tx invariants,
+    and the only Spark-free run writer (``commit_rows`` feeds it too).
 
     ``add_record`` enforces strictly-increasing timestamps per key and
     (in strict mode) sorted key arrival, mirroring KeyOrderingViolation /
     TimeOrderingViolation (write.rs:174-197). ``commit`` turns the
     buffer into one sorted Parquet run atomically.
 
-    Strict-order transactions stream with BOUNDED memory, like the
-    reference's segment writer (write.rs cuts ~1 MiB segments to disk as
-    they fill): sorted arrival means each bucket's file can be appended
-    in row-group increments, so every ``spill_threshold`` rows the
-    buffer flushes to per-bucket Parquet writers under a ``.tmp-*`` dir
-    and commit is just the close + atomic rename. A billion-record
-    ``cli add`` stream holds at most ``spill_threshold`` rows in driver
-    memory. (Unsorted transactions still buffer: they need the global
-    sort at commit.) Strict mode also keeps O(1) ordering state — the
-    sorted-arrival check needs only the current key and its last ts, not
-    a per-key map.
+    Every run takes one path: a (key, ts)-sorted row stream
+    (:meth:`_push`, the one ordering and duplicate rule) is cut every
+    ``spill_threshold`` rows into per-bucket Parquet writers
+    (:meth:`_spill`) under an owned ``.tmp-*`` dir (fsutil "Own"), and
+    commit is the close + atomic rename. Strict-order transactions
+    stream with BOUNDED memory, like the reference's segment writer
+    (write.rs cuts ~1 MiB segments to disk as they fill): a
+    billion-record ``cli add`` stream holds at most ``spill_threshold``
+    rows in driver memory, and the ordering state is O(1) — the current
+    key and its last ts. An unsorted transaction checks per-key ts order
+    on arrival, buffers, and at commit sorts and streams the same way.
+
+    A write error (ENOSPC, EIO, ...) or a failed commit aborts the
+    transaction: its tmp dir is removed and every later ``add_*`` or
+    ``commit`` raises, so no buffered row is ever written twice.
     """
 
     SPILL_THRESHOLD = 1_000_000
@@ -1710,39 +1576,19 @@ class Transaction:
             spill_threshold if spill_threshold is not None else self.SPILL_THRESHOLD
         )
         self.rows: list[dict] = []
-        self._last_key: str | None = None
-        self._last_ts: int | None = None  # strict mode: current key only
-        self._last_ts_per_key: dict[str, int] = {}
+        self._last_key: str | None = None  # the sorted stream's last (key, ts)
+        self._last_ts: int | None = None
+        self._last_ts_per_key: dict[str, int] = {}  # unsorted arrival order
+        self._owner: OwnedDir | None = None
         self._spill_dir: str | None = None
         self._spill_writers: dict[int, object] = {}
-        self._spilled = 0
+        self._error: BaseException | None = None
 
     def add_record(self, key: str, ts: int, fmt: str, values: list) -> None:
         rowformat.validate_format(fmt)
         rowformat.check_timestamp(ts)
-        if self.strict_order:
-            if self._last_key is not None and key < self._last_key:
-                raise CommitError(f"key ordering violation: {key!r} after {self._last_key!r}")
-            # Sorted arrival makes any non-adjacent reappearance a
-            # key-ordering violation above, so only the CURRENT key's
-            # last ts is needed — O(1) state however many keys stream by.
-            if key != self._last_key:
-                self._last_ts = None
-            if self._last_ts is not None and ts <= self._last_ts:
-                raise CommitError(
-                    f"time ordering violation for key {key!r}: {ts} after {self._last_ts}"
-                )
-            self._last_ts = ts
-        else:
-            last_ts = self._last_ts_per_key.get(key)
-            if last_ts is not None and ts <= last_ts:
-                raise CommitError(
-                    f"time ordering violation for key {key!r}: {ts} after {last_ts}"
-                )
-            self._last_ts_per_key[key] = ts
-        self._last_key = key
         v_long, v_double, v_str, v_bin = rowformat.values_to_columns(fmt, values)
-        self.rows.append(
+        self._add(
             {
                 "key": key,
                 "ts": ts,
@@ -1753,49 +1599,6 @@ class Transaction:
                 "v_bin": v_bin,
             }
         )
-        if self.strict_order and len(self.rows) >= self.spill_threshold:
-            self._spill()
-
-    def _spill(self) -> None:
-        """Append the buffer to per-bucket Parquet writers and clear it.
-
-        Sorted arrival (strict mode) means each bucket receives its rows
-        in (key, ts) order across spills, so appended row groups keep
-        the non-overlapping sorted stats the point reader bisects."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        if self._spill_dir is None:
-            self._spill_dir = os.path.join(self.db.path, tmp_name(""))
-            os.makedirs(self._spill_dir)
-            self._spill_nonce = f"{time.time_ns():016x}"
-            # Pin B for the life of this tx: a concurrent rebucket()
-            # changing db.buckets mid-stream must not split one run
-            # across two bucket functions (the recorded marker stays
-            # truthful for every file in the dir).
-            self._spill_b = self.db.buckets
-            write_run_buckets(self._spill_dir, self._spill_b)
-            # add_record enforces strictly-increasing ts per key, so a
-            # spilled run is duplicate-free by construction.
-            write_run_unique(self._spill_dir)
-        schema = arrow_record_schema()
-        by_bucket: dict[int, list[dict]] = {}
-        for r in self.rows:
-            by_bucket.setdefault(bucket_of(r["key"], self._spill_b), []).append(r)
-        for b in sorted(by_bucket):
-            w = self._spill_writers.get(b)
-            if w is None:
-                w = pq.ParquetWriter(
-                    os.path.join(
-                        self._spill_dir, bucket_file_name(b, self._spill_nonce)
-                    ),
-                    schema,
-                    compression=RUN_COMPRESSION,
-                )
-                self._spill_writers[b] = w
-            w.write_table(pa.Table.from_pylist(by_bucket[b], schema=schema))
-        self._spilled += len(self.rows)
-        self.rows = []
 
     def add_line(
         self,
@@ -1803,22 +1606,140 @@ class Transaction:
         default_fmt: str | None = None,
         ts_format: str | None = None,
     ) -> None:
-        rec = rowformat.parse_line(line, default_fmt, ts_format=ts_format)
-        self.add_record(rec.key, rec.ts, rec.fmt, rowformat.columns_to_values(
-            rec.fmt, rec.v_long, rec.v_double, rec.v_str, rec.v_bin
-        ))
+        self._add(
+            rowformat.parse_line(line, default_fmt, ts_format=ts_format).as_row()
+        )
+
+    def _check_alive(self) -> None:
+        if self._error is not None:
+            raise CommitError(
+                "transaction aborted by an earlier write error"
+            ) from self._error
+
+    def _add(self, row: dict) -> None:
+        self._check_alive()
+        if self.strict_order:
+            self._push(row)
+            return
+        key, ts = row["key"], row["ts"]
+        last_ts = self._last_ts_per_key.get(key)
+        if last_ts is not None and ts <= last_ts:
+            raise CommitError(
+                f"time ordering violation for key {key!r}: {ts} after {last_ts}"
+            )
+        self._last_ts_per_key[key] = ts
+        self.rows.append(row)
+
+    def _push(self, row: dict) -> None:
+        """Append one row of the (key, ts)-sorted stream, spilling at
+        the threshold. Strictly increasing (key, ts) is the writer's
+        rule (write.rs:174-197), so every run it writes is
+        duplicate-free."""
+        key, ts = row["key"], row["ts"]
+        if key == self._last_key:
+            if ts == self._last_ts:
+                raise DuplicateRecordError(
+                    f"duplicate (key, ts) within one transaction: ({key!r}, {ts})"
+                )
+            if ts < self._last_ts:
+                raise CommitError(
+                    f"time ordering violation for key {key!r}: {ts} after {self._last_ts}"
+                )
+        elif self._last_key is not None and key < self._last_key:
+            raise CommitError(f"key ordering violation: {key!r} after {self._last_key!r}")
+        self._last_key, self._last_ts = key, ts
+        self.rows.append(row)
+        if len(self.rows) >= self.spill_threshold:
+            self._spill()
+
+    def _spill(self) -> None:
+        """Append the buffer to per-bucket Parquet writers and clear it:
+        the one pyarrow writer of record runs.
+
+        The layout is the Spark writer's (bucketing.py): one (key,
+        ts)-sorted file per non-empty bucket, named with its bucket id,
+        so these runs join the exchange-free bucketed multi-run read.
+        The first spill opens the owned tmp dir and writes the run's
+        ``_B``/``_U`` markers. Rows arrive (key, ts)-sorted across
+        spills, so each bucket file's appended row groups keep the
+        non-overlapping sorted stats the point reader bisects, and the
+        bucket hash runs once per key, not once per record."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        try:
+            if self._owner is None:
+                self._owner = OwnedDir(self.db.path)
+                self._spill_dir = os.path.join(self._owner.path, RUN_SUBDIR)
+                os.mkdir(self._spill_dir)
+                self._spill_nonce = f"{time.time_ns():016x}"
+                # Pin B for the life of this tx: a concurrent rebucket()
+                # changing db.buckets mid-stream must not split one run
+                # across two bucket functions (the recorded marker stays
+                # truthful for every file in the dir).
+                self._spill_b = self.db.buckets
+                write_run_buckets(self._spill_dir, self._spill_b)
+                write_run_unique(self._spill_dir)  # _push's rule
+            schema = arrow_record_schema()
+            by_bucket: dict[int, list[dict]] = {}
+            key = None
+            for r in self.rows:
+                if r["key"] != key:
+                    key = r["key"]
+                    dest = by_bucket.setdefault(bucket_of(key, self._spill_b), [])
+                dest.append(r)
+            for b in sorted(by_bucket):
+                w = self._spill_writers.get(b)
+                if w is None:
+                    w = self._spill_writers[b] = pq.ParquetWriter(
+                        os.path.join(
+                            self._spill_dir, bucket_file_name(b, self._spill_nonce)
+                        ),
+                        schema,
+                        compression=RUN_COMPRESSION,
+                    )
+                w.write_table(pa.Table.from_pylist(by_bucket[b], schema=schema))
+        except BaseException as e:
+            self._abort(e)
+            raise
+        self.rows = []
+
+    def _abort(self, err: BaseException) -> None:
+        """Drop what this transaction wrote and buffered; every later
+        ``add_*`` or ``commit`` raises."""
+        self._error = err
+        self.rows = []
+        writers, self._spill_writers = self._spill_writers, {}
+        for w in writers.values():
+            with contextlib.suppress(Exception):
+                w.close()
+        owner, self._owner = self._owner, None
+        if owner is not None:
+            owner.close()
 
     def commit(self) -> str | None:
-        if self._spill_dir is not None:
-            # streaming path: flush the tail, close writers, publish
+        """Publish the buffered records as one run; None if there are
+        none."""
+        self._check_alive()
+        try:
+            if not self.strict_order:
+                rows, self.rows = sorted(self.rows, key=_key_ts), []
+                for r in rows:
+                    self._push(r)
             if self.rows:
                 self._spill()
+            if self._owner is None:
+                return None
             for w in self._spill_writers.values():
                 w.close()
             self._spill_writers = {}
-            tmp, self._spill_dir = self._spill_dir, None
-            return self.db._atomic_rename(tmp)
-        if not self.rows:
-            return None
-        # per-tx duplicate check already enforced incrementally
-        return self.db.commit_rows(self.rows)
+            owner, self._owner = self._owner, None
+            with owner:
+                return self.db._atomic_rename(owner.path)
+        except BaseException as e:
+            self._abort(e)
+            raise
+
+
+def _key_ts(row: dict) -> tuple:
+    return row["key"], row["ts"]

@@ -21,8 +21,20 @@ database holds two named locks (``.commitlock`` for run publishes and
 ``BUCKETS``, ``.compact`` for compaction); only its multi-run
 hide -> publish -> purge compaction plan, and that plan's roll-back /
 roll-forward recovery, is specific to ``db.py``; a commit publishes a
-fully written, fsynced ``tmp_name`` run directory with one rename under
-the commit lock. The primitives:
+fully written, fsynced run directory with one rename under the commit
+lock. The primitives:
+
+- **Own** (:class:`OwnedDir`, :func:`reap_unowned`): every in-flight
+  write under the database root — a run being written, serve's PUT
+  spool — lives in a ``.tmp-*`` directory whose creator holds an
+  exclusive flock on it for as long as it may write. A run is written
+  one level down, at ``<owned dir>/run``, and that subdirectory is what
+  the commit renames: Spark's overwrite write replaces its output
+  directory's inode, so a lock on the output directory itself would not
+  survive the write. The janitor reaps a ``.tmp-*`` dir only when a
+  non-blocking flock on it succeeds and its own mtime is past the
+  horizon. The kernel drops a dead owner's lock, so liveness needs no
+  pid, and a live writer in another pid namespace is seen too.
 
 - **JSON** (:func:`write_json_atomic`): params, index metadata and
   cursors are written under a unique tmp name, fsynced, renamed over
@@ -167,6 +179,53 @@ def store_lock(root: str, name: str = ".lock", *, wait: bool = True):
 def tmp_name(path: str, tag: str = ".tmp-") -> str:
     """A sibling name no other writer can pick: ``<path><tag><pid>-<ns>``."""
     return f"{path}{tag}{os.getpid()}-{time.time_ns():x}"
+
+
+class OwnedDir:
+    """A fresh ``tmp_name`` directory under ``parent``, owned by its
+    creator: an exclusive flock on the directory itself is held from
+    creation until :meth:`close`, which removes the directory with
+    whatever is still in it and then releases the lock. A writer
+    publishes by renaming its output OUT of the directory first."""
+
+    def __init__(self, parent: str, tag: str = ".tmp-"):
+        self.path = os.path.join(parent, tmp_name("", tag))
+        os.mkdir(self.path)
+        self._fd = os.open(self.path, os.O_RDONLY)
+        fcntl.flock(self._fd, fcntl.LOCK_EX)
+
+    def close(self) -> None:
+        if self._fd is None:
+            return
+        try:
+            shutil.rmtree(self.path, ignore_errors=True)
+        finally:
+            os.close(self._fd)
+            self._fd = None
+
+    def __enter__(self) -> "OwnedDir":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+
+def reap_unowned(path: str, horizon: float) -> None:
+    """Remove ``path`` if no :class:`OwnedDir` holder has it locked and
+    its own mtime is more than ``horizon`` seconds old. The age guard
+    covers the instant between an owner's mkdir and its flock."""
+    try:
+        fd = os.open(path, os.O_RDONLY)
+    except OSError:
+        return
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        if time.time() - os.fstat(fd).st_mtime > horizon:
+            shutil.rmtree(path, ignore_errors=True)
+    except BlockingIOError:
+        pass  # a live owner holds it
+    finally:
+        os.close(fd)
 
 
 def rename_durable(src: str, dst: str, *, durable: bool = True) -> None:

@@ -227,25 +227,18 @@ def make_server(
             rule). ``write_body(f)`` copies the request body into the
             spool file — identity or de-chunked framing."""
             import os
-            import shutil
-            import time as _time
 
+            from sonnerie_spark.fsutil import OwnedDir
             from sonnerie_spark.streaming.ingest import parse_lines
 
-            # pid in the name: the database janitor never purges a tmp
-            # dir whose owner process is still alive (db._purge_stale_tmp)
-            spool = os.path.join(
-                db.path, f".tmp-put-{os.getpid()}-{_time.time_ns():x}"
-            )
-            os.makedirs(spool)
-            try:
-                with open(os.path.join(spool, "body.txt"), "wb") as f:
+            # an owned dir: the database janitor never reaps a tmp dir
+            # whose creator still holds its lock (fsutil "Own")
+            with OwnedDir(db.path, ".tmp-put-") as spool:
+                with open(os.path.join(spool.path, "body.txt"), "wb") as f:
                     write_body(f)
-                rows = parse_lines(db.spark.read.text(spool))
+                rows = parse_lines(db.spark.read.text(spool.path))
                 if rows.take(1):
                     db.commit_dataframe(rows)
-            finally:
-                shutil.rmtree(spool, ignore_errors=True)
 
         def _copy_identity(self, f, length: int) -> None:
             remaining = length

@@ -432,6 +432,109 @@ def test_strict_tx_spills_with_bounded_memory(spark, tmp_path):
         tx3.add_record("a", 5, "u", [0])
 
 
+def test_failed_spill_aborts_the_transaction(tmp_path, monkeypatch):
+    """A write error mid-spill (here the second bucket file's append)
+    leaves some buffered rows on disk and some not. Retrying them would
+    publish a duplicate inside a run marked ``_U``, whose single-run
+    reads skip the LWW dedup — so the error aborts the transaction: no
+    run and no tmp dir remain, and every later add or commit raises."""
+    import pyarrow.parquet as pq
+
+    from sonnerie_spark.db import Transaction
+
+    db = Database(None, str(tmp_path / "db"), buckets=4)
+    real = pq.ParquetWriter.write_table
+    calls = []
+
+    def flaky(self, *a, **kw):
+        calls.append(1)
+        if len(calls) == 2:
+            raise OSError(28, "No space left on device")
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(pq.ParquetWriter, "write_table", flaky)
+    tx = Transaction(db, strict_order=True, spill_threshold=8)
+    for i in range(7):
+        tx.add_record(f"k{i}", T0, "u", [i])
+    with pytest.raises(OSError, match="No space"):
+        tx.add_record("k7", T0, "u", [7])  # the 8th row spills
+    with pytest.raises(CommitError, match="aborted"):
+        tx.add_record("k8", T0, "u", [8])
+    with pytest.raises(CommitError, match="aborted"):
+        tx.commit()
+    assert db.runs() == []
+    assert not [n for n in os.listdir(db.path) if n.startswith(".tmp-")]
+
+
+def test_every_spark_free_entry_point_writes_the_same_run(tmp_path):
+    """A spilling strict Transaction, a non-strict Transaction fed out of
+    order, ``add_line`` and ``commit_rows`` all go through the one
+    Spark-free writer: the same records give the same bucket files,
+    row for row, and the same ``_B``/``_U`` markers."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    from sonnerie_spark import rowformat
+    from sonnerie_spark.bucketing import parse_bucket_id
+    from sonnerie_spark.db import Transaction
+
+    lines = [
+        f"key\\ {k:02d} {T0 + t} iUfFsB {k - 7} {2**64 - 1 - t} 0.1 {-t / 3} "
+        f"s\\ {k}\\\\x{t} YWJj"
+        for k in range(15)
+        for t in range(4)
+    ]
+    recs = [rowformat.parse_line(ln) for ln in lines]
+
+    def values(rec):
+        return rowformat.columns_to_values(
+            rec.fmt, rec.v_long, rec.v_double, rec.v_str, rec.v_bin
+        )
+
+    def spilled(db):
+        tx = Transaction(db, strict_order=True, spill_threshold=7)
+        for rec in recs:
+            tx.add_record(rec.key, rec.ts, rec.fmt, values(rec))
+        assert tx._spill_dir is not None, "never spilled"
+        return tx.commit()
+
+    def unsorted(db):
+        tx = Transaction(db)
+        for rec in sorted(recs, key=lambda r: (r.ts, random.Random(r.key).random())):
+            tx.add_record(rec.key, rec.ts, rec.fmt, values(rec))
+        return tx.commit()
+
+    def by_line(db):
+        tx = Transaction(db, strict_order=True)
+        for ln in lines:
+            tx.add_line(ln)
+        return tx.commit()
+
+    def rows(db):
+        return db.commit_rows([rec.as_row() for rec in reversed(recs)])
+
+    def run_content(write):
+        db = Database(None, str(tmp_path / write.__name__), buckets=4)
+        run = os.path.join(db.path, write(db))
+        files = {}
+        for name in os.listdir(run):
+            if name.endswith(".parquet"):
+                files[parse_bucket_id(name)] = pq.read_table(
+                    os.path.join(run, name)
+                ).to_pylist()
+        markers = {
+            m: open(os.path.join(run, m)).read() for m in ("_B", "_U")
+        }
+        return files, markers
+
+    want = run_content(spilled)
+    assert sum(len(v) for v in want[0].values()) == len(recs)
+    assert want[1] == {"_B": "4", "_U": "1"}
+    for write in (unsorted, by_line, rows):
+        assert run_content(write) == want, write.__name__
+
+
 def test_concurrent_writers_all_commit(db):
     """8 threads committing interleaved transactions: the atomic-rename
     protocol with nanos-collision retry must give every tx a distinct

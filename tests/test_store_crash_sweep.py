@@ -193,9 +193,10 @@ _DB_MASK = re.compile(r"^(tx\.|\.tmp-old-|.*\.tmp-)[0-9a-f-]+$")
 def _db_layout(root: str) -> list[str]:
     """A database's top-level names, unique suffixes masked. Left out:
     the view cache (rebuilt on demand) and unpublished run writes — a
-    commit's ``.tmp-<pid>-*`` spool and compaction's ``.tmp-compact-*``
-    output — which the janitor reaps only once their owner is dead and
-    they are an hour old; the sweep's owner is alive."""
+    writer's owned ``.tmp-<pid>-*`` dir and compaction's
+    ``.tmp-compact-*`` output — which the janitor reaps only once no
+    live writer holds their lock and they are an hour old; the sweep's
+    debris is minutes old."""
     return sorted(
         _DB_MASK.sub(r"\1*", n)
         for n in os.listdir(root)

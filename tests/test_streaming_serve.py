@@ -602,116 +602,104 @@ def test_serve_get_with_body_that_500s_still_closes(server, db, monkeypatch):
     assert buf.count(b"HTTP/1.1") == 1  # follow-up was NOT served
 
 
-def test_purge_stale_tmp_spares_live_writers(db):
-    """The crash-debris janitor must never rmtree a LIVE transaction
-    spill: a .tmp dir whose owner pid is alive survives past the
-    staleness horizon (provided its writes postdate the owner's start
-    — true for every genuine owner; see the pid-reuse test for the
-    converse); a dead-owner dir with a fresh child file survives the
-    dir-mtime trap (appends touch file mtimes, not the parent dir);
-    only a dead-owner dir whose newest mtime is stale is purged.
-    The staleness horizon is shrunk below the dirs' ages so ONLY the
-    pid-liveness + start-time guard can spare the live dir — without
-    that guard this test fails."""
+def _age(path, seconds):
     import os
     import time
 
-    from sonnerie_spark.db import _pid_start_time
+    old = time.time() - seconds
+    os.utime(path, (old, old))
 
-    now = time.time()
+
+def test_purge_stale_tmp_spares_live_writers(db):
+    """The crash-debris janitor never removes a LIVE writer's tmp dir,
+    however old: a spilling Transaction holds its dir's flock, whether
+    it runs in this process or in another one. Once the other process
+    exits, the kernel drops its lock and the same dir is debris."""
+    import os
+    import subprocess
+    import sys
+
+    from sonnerie_spark.db import Transaction
+
     db.STALE_TMP_SECONDS = 2.0  # instance shadow; function-scoped db
-    old = now - 30
-    live = os.path.join(db.path, f".tmp-{os.getpid()}-deadbeef")
-    os.makedirs(live)
-    # stale by the 2 s horizon, while honoring the genuine-owner
-    # invariant (a real writer's spool mtimes never precede its start;
-    # the pytest process is comfortably older than 30 s here)
-    start = _pid_start_time(os.getpid())
-    live_old = old if start is None else max(old, start + 2)
-    os.utime(live, (live_old, live_old))
-    assert now - live_old > db.STALE_TMP_SECONDS, (
-        "precondition: the live dir must be stale by mtime so only "
-        "the pid guard can spare it"
+    tx = Transaction(db, strict_order=True, spill_threshold=1)
+    tx.add_record("k", 1, "u", [1])
+    mine = os.path.dirname(tx._spill_dir)
+    _age(mine, 30)
+
+    child = subprocess.Popen(
+        [sys.executable, "-c", (
+            "import os, sys\n"
+            "from sonnerie_spark.db import Database, Transaction\n"
+            "tx = Transaction(Database(None, sys.argv[1]), strict_order=True,"
+            " spill_threshold=1)\n"
+            "tx.add_record('k', 1, 'u', [1])\n"
+            "print(os.path.dirname(tx._spill_dir), flush=True)\n"
+            "sys.stdin.read()\n"
+        ), db.path],
+        stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
-
-    fresh_child = os.path.join(db.path, ".tmp-999999999-cafe")
-    os.makedirs(fresh_child)
-    with open(os.path.join(fresh_child, "spill.parquet"), "w") as f:
-        f.write("x")  # child mtime = now -> not stale
-    os.utime(fresh_child, (old, old))  # dir looks stale, child is fresh
-
-    debris = os.path.join(db.path, ".tmp-999999999-f00d")
-    os.makedirs(debris)
-    with open(os.path.join(debris, "spill.parquet"), "w") as f:
-        f.write("x")
-    os.utime(debris, (old, old))
-    os.utime(os.path.join(debris, "spill.parquet"), (old, old))
-
+    try:
+        theirs = child.stdout.readline().strip()
+        assert theirs.startswith(os.path.join(db.path, ".tmp-")), theirs
+        _age(theirs, 30)
+        db._purge_stale_tmp()
+        assert os.path.isdir(mine), "this process's live spill was reaped"
+        assert os.path.isdir(theirs), "another process's live spill was reaped"
+    finally:
+        child.stdin.close()
+        child.wait(timeout=60)
+    _age(theirs, 30)
     db._purge_stale_tmp()
-    assert os.path.isdir(live), "live-owner tmp dir was purged"
-    assert os.path.isdir(fresh_child), "fresh-child tmp dir was purged"
-    assert not os.path.exists(debris), "stale debris survived"
+    assert not os.path.exists(theirs), "a dead writer's dir survived"
+    assert os.path.isdir(mine)
+    assert tx.commit() is not None
+    assert not os.path.exists(mine)
+    assert [r["v_long"] for r in db.get("k")] == [[1]]
 
 
 def test_purge_stale_tmp_pidless_decimal_token(db):
-    """A pid-less tmp name (.tmp-compact-<hex ns>, .tmp-old-*) whose
-    hex timestamp token is coincidentally all decimal digits (~0.1% of
-    timestamps) must parse as NO pid — positional parse + pid-space
-    bound — and fall back to the mtime rule. Before the fix it parsed
-    as a huge bogus pid, os.kill raised an uncaught OverflowError, and
-    every compact() failed until the debris dir was removed by hand."""
+    """Names carry no liveness: compaction's pid-less ``.tmp-compact-*``
+    / ``.tmp-old-*`` dirs (a live compactor is excluded by the
+    compaction lock the janitor holds) are reaped by age alone, even
+    when their hex timestamp token reads as a decimal number."""
     import os
-    import time
 
-    from sonnerie_spark.db import _pid_alive, _tmp_owner_pid
-
-    assert _tmp_owner_pid(".tmp-compact-1890576123456789") is None
-    assert _tmp_owner_pid(".tmp-old-1890576123456789") is None
-    assert _tmp_owner_pid(f".tmp-{os.getpid()}-deadbeef") == os.getpid()
-    assert _tmp_owner_pid(f".tmp-put-{os.getpid()}-deadbeef") == os.getpid()
-    assert _pid_alive(1890576123456789) is False  # must not raise
-    assert _pid_alive(-1 << 40) is False
-
-    old = time.time() - 7200
     stale = os.path.join(db.path, ".tmp-compact-1890576123456789")
     os.makedirs(stale)
-    os.utime(stale, (old, old))
+    _age(stale, 7200)
+    old = os.path.join(db.path, ".tmp-old-1890576123456789-0")
+    os.makedirs(os.path.join(old, "sub"))
+    _age(old, 7200)
     fresh = os.path.join(db.path, ".tmp-compact-1890576999999999")
     os.makedirs(fresh)
-    db._purge_stale_tmp()  # would raise OverflowError before the fix
+    db._purge_stale_tmp()
     assert not os.path.exists(stale), "stale pid-less debris survived"
+    assert not os.path.exists(old), "stale hidden-run debris survived"
     assert os.path.isdir(fresh), "fresh pid-less tmp dir was purged"
 
 
 def test_purge_stale_tmp_detects_pid_reuse(db):
-    """A LIVE pid must not spare debris it cannot own: if the tmp's
-    newest mtime predates the pid's process START, the kernel recycled
-    a dead writer's pid onto an unrelated process — the janitor treats
-    the owner as dead and purges by the mtime rule (previously such
-    debris survived one extra pass per recycle, indefinitely under a
-    long-lived squatter)."""
+    """An unlocked stale dir is debris even when the pid in its name is
+    alive — the old pid-reuse case, where a recycled pid used to spare
+    a dead writer's dir. Liveness is the dir's own flock, so a fresh
+    child file no longer spares an unlocked dir either; an unlocked dir
+    is spared only while its own mtime is within the horizon (the
+    instant between an owner's mkdir and its flock)."""
     import os
-    import subprocess
-    import time
 
-    from sonnerie_spark.db import _pid_start_time
-
-    now = time.time()
-    start = _pid_start_time(os.getpid())
-    assert start is not None and 0 < start <= now  # /proc path works
-
-    # a process born NOW "owns" debris last written two hours ago
-    squatter = subprocess.Popen(["sleep", "60"])
-    try:
-        old = now - 7200
-        reused = os.path.join(db.path, f".tmp-{squatter.pid}-deadbeef")
-        os.makedirs(reused)
-        with open(os.path.join(reused, "spill.parquet"), "w") as f:
-            f.write("x")
-        os.utime(os.path.join(reused, "spill.parquet"), (old, old))
-        os.utime(reused, (old, old))
-        db._purge_stale_tmp()
-        assert not os.path.exists(reused), "pid-reuse debris survived"
-    finally:
-        squatter.kill()
-        squatter.wait()
+    reused = os.path.join(db.path, f".tmp-{os.getpid()}-deadbeef")
+    os.makedirs(reused)
+    with open(os.path.join(reused, "spill.parquet"), "w") as f:
+        f.write("x")  # fresh child, stale dir
+    _age(reused, 7200)
+    put = os.path.join(db.path, f".tmp-put-{os.getpid()}-cafe")
+    os.makedirs(put)
+    _age(put, 7200)
+    fresh = os.path.join(db.path, f".tmp-{os.getpid()}-f00d")
+    os.makedirs(fresh)
+    db._purge_stale_tmp()
+    assert not os.path.exists(reused), "unlocked stale dir survived"
+    assert not os.path.exists(put), "unlocked stale spool survived"
+    assert os.path.isdir(fresh), "fresh unlocked dir was purged"
