@@ -315,32 +315,19 @@ def cmd_read(db: Database, args) -> int:
          getattr(args, "as_of", None))
     ):
         # pyarrow fast path (no Spark job) for exact keys and bounded
-        # pure-prefix wildcards; None -> too large, use the Spark plan.
-        from types import SimpleNamespace
-
-        from sonnerie_spark.plans.keyfilter import analyze_wildcard
-
-        kf = analyze_wildcard(args.wildcard)
-        bounds = dict(
+        # pure-prefix wildcards, formatted per column; None -> too
+        # large or a mid-pattern wildcard, use the Spark plan.
+        tbl = db.get_table(
+            args.wildcard,
             after_ns=_ts_or(args.after_time, None) if args.after_time else None,
             before_ns=_ts_or(args.before_time, None) if args.before_time else None,
         )
-        rows = None
-        if kf.exact is not None:
-            rows = db.get(kf.exact, **bounds)
-        elif kf.prefix and not kf.needs_like:
-            rows = db.get_prefix(kf.prefix, **bounds)
-        if rows is not None:
-            for r in rows:
-                sys.stdout.write(
-                    record_to_line(
-                        SimpleNamespace(**r),
-                        ts_style=ts_style,
-                        show_fmt=show_fmt,
-                        columns=columns,
-                    )
-                    + "\n"
-                )
+        if tbl is not None:
+            sys.stdout.write(
+                rowformat.format_table(
+                    tbl, ts_style=ts_style, show_fmt=show_fmt, columns=columns
+                ).decode()
+            )
             return 0
 
     df = _read_df(db, args)

@@ -770,7 +770,9 @@ class Database:
         (segment_reader.rs:173-234, ~15 ms random lookup). Wildcards and
         scans still use the Spark plan.
         """
-        return self._reader().get(key, after_ns=after_ns, before_ns=before_ns)
+        return self._reader().get(
+            key, after_ns=after_ns, before_ns=before_ns
+        ).to_pylist()
 
     def _reader(self):
         """The handle's lazily built ``PointReader`` (its caches live
@@ -846,9 +848,11 @@ class Database:
         """Batch :meth:`get`: {key: rows} in ONE driver-side merge pass
         (run listing, footers, and delete markers amortized across the
         batch — the point-read analogue of ``read(keys=[...])``)."""
-        return self._reader().get_many(
-            keys, after_ns=after_ns, before_ns=before_ns
-        )
+        out: dict[str, list[dict]] = {k: [] for k in keys}
+        tbl = self._reader().get_many(keys, after_ns=after_ns, before_ns=before_ns)
+        for r in tbl.to_pylist():
+            out[r["key"]].append(r)
+        return out
 
     def stats(self) -> dict:
         """Operational database report from parquet footers alone — no
@@ -900,13 +904,40 @@ class Database:
         pyarrow like :meth:`get`, bounded by row-group count — returns
         ``None`` when the match is too large, signalling the caller to
         use the distributed :meth:`read` plan instead."""
-        return self._reader().get_range(
+        tbl = self._reader().get_range(
             prefix,
             prefix_upper_bound(prefix),
             after_ns=after_ns,
             before_ns=before_ns,
             max_groups=max_groups,
         )
+        return None if tbl is None else tbl.to_pylist()
+
+    def get_table(
+        self,
+        pattern: str,
+        *,
+        after_ns: int | None = None,
+        before_ns: int | None = None,
+    ):
+        """The Spark-free answer for a wildcard ``pattern`` (serve GET,
+        CLI ``read``) as one (key, ts)-sorted ``pa.Table``: :meth:`get`
+        for an exact key, :meth:`get_prefix` for a pure prefix
+        (``fib%``), without the list-of-dicts conversion. ``None`` when
+        the pattern needs the Spark plan — a mid-pattern wildcard, the
+        match-all ``%``, or a prefix matching more than the row-group
+        budget."""
+        kf = analyze_wildcard(pattern)
+        if kf.exact is not None:
+            return self._reader().get(
+                kf.exact, after_ns=after_ns, before_ns=before_ns
+            )
+        if kf.prefix and not kf.needs_like:
+            return self._reader().get_range(
+                kf.prefix, prefix_upper_bound(kf.prefix),
+                after_ns=after_ns, before_ns=before_ns,
+            )
+        return None
 
     def _apply_key_filter(
         self, df, key, wildcard, after_key, before_key,

@@ -44,13 +44,3 @@ def phash_sql(expr: str) -> str:
 def phash_salted_sql(expr: str, salt: int) -> str:
     return phash_sql(f"'{salt}#' || {expr}")
 
-
-def bit_at(hash_col: Column, bit: Column | int) -> Column:
-    """Extract bit ``bit`` (0-based) of a hash as 0/1 (Spark side)."""
-    b = F.lit(bit) if isinstance(bit, int) else bit
-    return F.shiftrightunsigned(hash_col, b).bitwiseAND(F.lit(1))
-
-
-def bit_at_sql(hash_expr: str, bit_expr: str) -> str:
-    """DuckDB fragment for the same bit extraction."""
-    return f"(({hash_expr} >> {bit_expr}) & 1)"

@@ -75,13 +75,6 @@ def lm_tokens(text: Column) -> Column:
     return F.split(F.trim(F.lower(text)), r"\s+")
 
 
-def lm_tokens_sql(expr: str) -> str:
-    """DuckDB mirror of :func:`lm_tokens` — regex split on ``\\s+``
-    like the Spark side, so runs of spaces/tabs/newlines cannot emit
-    empty-string tokens and diverge from lm_tokens (ADVICE r6)."""
-    return f"regexp_split_to_array(trim(lower({expr})), '\\s+')"
-
-
 def _bigrams(toks: Column) -> Column:
     """Adjacent-token pairs as array<struct<w1,w2>> — array-native
     (slice + zip), so bigram formation is map-only: no posexplode /

@@ -13,35 +13,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def moving_agg(
-    df: DataFrame,
-    key: str,
-    ts: str,
-    value: str,
-    *,
-    window_rows: int = 5,
-    aggs: tuple[str, ...] = ("avg",),
-) -> DataFrame:
-    """Per-series trailing-row-window aggregates (moving average etc.).
-
-    One shuffle on ``key``; the per-partition sort is reused by every
-    windowed column.
-    """
-    w = Window.partitionBy(key).orderBy(ts).rowsBetween(-(window_rows - 1), 0)
-    out = df
-    for a in aggs:
-        fn = getattr(F, a)
-        out = out.withColumn(f"{a}_{value}_w{window_rows}", fn(F.col(value)).over(w))
-    return out
-
-
-def lag_lead(df: DataFrame, key: str, ts: str, value: str, n: int = 1) -> DataFrame:
-    w = Window.partitionBy(key).orderBy(ts)
-    return df.withColumn(f"lag_{value}", F.lag(value, n).over(w)).withColumn(
-        f"lead_{value}", F.lead(value, n).over(w)
-    )
-
-
 def resample(
     df: DataFrame,
     key: str,

@@ -5,14 +5,17 @@ for scans, hopeless against the reference's ~15 ms random key lookup
 (README.md:277-278), which is the serve GET hot path. But an exact-key
 read touches a handful of row groups at most: the run manifest plus
 Parquet footer statistics identify them without any cluster work, so we
-read them directly with pyarrow on the driver and apply the (tiny)
-LWW-dedup + delete-marker semantics in Python.
+read them directly with pyarrow on the driver and apply the LWW-dedup +
+delete-marker semantics in Arrow (``_merge_tables``). Every read returns
+one (key, ts)-sorted ``pa.Table``; serve and the CLI format it per column
+(``rowformat.format_table``), and ``Database.get`` & co. convert it to
+row dicts at their boundary.
 
 This is the same division of labor the reference uses — its point
 lookup is a binary search over mmap'ed segment headers
-(segment_reader.rs:173-234), not a parallel scan. Wildcards, ranges and
-analytics keep the Spark plan; only `key == constant` (optionally with a
-time range) takes this path.
+(segment_reader.rs:173-234), not a parallel scan. Mid-pattern wildcards,
+key ranges and analytics keep the Spark plan; an exact key or a pure
+prefix (optionally with a time range) takes this path.
 
 Every read here — ``get``, ``get_many``, the prefix read and the Arrow
 ``agg_series`` fold — runs inside one bracket (``_consistent``): run-set
@@ -31,14 +34,21 @@ run's full data.
 
 from __future__ import annotations
 
+import bisect
 import os
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from sonnerie_spark.bucketing import bucket_of, parse_bucket_id, read_run_buckets
-from sonnerie_spark.plans.keyfilter import wildcard_regex
+from sonnerie_spark.plans.keyfilter import (
+    analyze_wildcard,
+    prefix_upper_bound,
+    wildcard_regex,
+)
 
 
 class _FileMeta:
@@ -121,8 +131,6 @@ class _FileMeta:
     ) -> list[int]:
         if self.mins is None:
             return list(range(self.num_row_groups))
-        import bisect
-
         # candidate groups: those with min <= key <= max; since groups
         # are key-sorted, they form a contiguous range around the
         # insertion point of `key` in `mins`.
@@ -146,8 +154,6 @@ class _FileMeta:
         """Row groups possibly containing keys in ``[lo, hi)``."""
         if self.mins is None:
             return list(range(self.num_row_groups))
-        import bisect
-
         # groups sorted by key: start at the first whose max >= lo, stop
         # before the first whose min >= hi.
         start = bisect.bisect_left(self.maxs, lo)
@@ -283,8 +289,8 @@ class PointReader:
         *,
         after_ns: int | None = None,
         before_ns: int | None = None,
-    ) -> list[dict]:
-        """All surviving records of one key, ts-ascending, as row dicts.
+    ) -> pa.Table:
+        """All surviving records of one key as a ts-ascending ``pa.Table``.
 
         Semantics identical to ``Database.read(key=...)``: last-writer-
         wins across runs (merge.rs:17-26) then delete-marker suppression
@@ -318,14 +324,12 @@ class PointReader:
         *,
         after_ns: int | None = None,
         before_ns: int | None = None,
-    ) -> dict[str, list[dict]]:
+    ) -> pa.Table:
         """Batch exact-key lookup: one merge pass over the UNION of the
         keys' row groups, amortizing the run listing, footer reads, and
         delete-marker load across the whole batch (a loop over ``get``
-        repeats all three per key). Returns {key: rows}, rows
-        ts-ascending; absent keys map to []."""
-        import pyarrow as pa
-
+        repeats all three per key). Returns one (key, ts)-sorted
+        ``pa.Table``."""
         kset = sorted(set(keys))
         arr = pa.array(kset)
         buckets: dict[int, set[int]] = {}  # run B -> wanted bucket ids
@@ -344,17 +348,13 @@ class PointReader:
                 gs.update(fm.groups_for(k, after_ns, before_ns))
             return sorted(gs)
 
-        rows = self._merge(
+        return self._merge(
             groups,
             lambda tbl: tbl.filter(pc.is_in(tbl.column("key"), value_set=arr)),
             after_ns=after_ns,
             before_ns=before_ns,
             file_ok=file_ok,
         )
-        out: dict[str, list[dict]] = {k: [] for k in keys}
-        for r in rows:
-            out[r["key"]].append(r)
-        return out
 
     def get_range(
         self,
@@ -364,9 +364,10 @@ class PointReader:
         after_ns: int | None = None,
         before_ns: int | None = None,
         max_groups: int = 64,
-    ) -> list[dict] | None:
-        """Surviving records with ``lo <= key < hi``, (key, ts)-ascending
-        — the prefix-wildcard fast path (e.g. serve GET ``fib%``).
+    ) -> pa.Table | None:
+        """Surviving records with ``lo <= key < hi`` as a (key, ts)-sorted
+        ``pa.Table`` — the prefix-wildcard fast path (e.g. serve GET
+        ``fib%``).
 
         Returns ``None`` when more than ``max_groups`` row groups match:
         the result is then large enough that the distributed Spark plan
@@ -392,84 +393,31 @@ class PointReader:
     def _merge(
         self, groups_fn, filter_fn, *, after_ns, before_ns, file_ok=None,
         max_groups=None,
-    ) -> list[dict] | None:
-        merged = _consistent(
+    ) -> pa.Table | None:
+        """Read one snapshot and merge it: a (key, ts)-sorted table of
+        the surviving records, or None when more than ``max_groups`` row
+        groups match."""
+        read = _consistent(
             self.db,
             lambda runs: self._read_once(
                 runs, groups_fn, filter_fn, file_ok, max_groups
             ),
         )
-        if merged is None:
-            return None  # more than max_groups row groups match
-        tables, markers = merged
-
-        # Vectorized fast path for the compacted steady state: a single
-        # data run USUALLY holds no (key, ts) conflict (transactions
-        # written with the duplicate observation + disjoint bucket
-        # files), so with no delete markers the result is just filter +
-        # C-level sort — no per-row Python dict/tuple work. Cuts the
-        # 2000-record warm lookup ~2x. But check_duplicates=False
-        # commits (streaming ingest, rollup internals) can legally put
-        # duplicate (key, ts) rows in ONE run, so the path is guarded by
-        # a vectorized distinct-count probe; on conflict we fall through
-        # to the dict-based LWW resolve (later row in commit/file order
-        # wins — identical to the multi-run semantics).
-        run_names = {rn for rn, _ in tables}
-        if len(run_names) <= 1 and not markers:
-            if not tables:
-                return []
-            import pyarrow as pa
-
-            t = pa.concat_tables([tb for _, tb in tables])
-            if after_ns is not None:
-                t = t.filter(pc.greater_equal(t.column("ts"), after_ns))
-            if before_ns is not None:
-                t = t.filter(pc.less(t.column("ts"), before_ns))
-            distinct = t.select(["key", "ts"]).group_by(["key", "ts"]).aggregate([])
-            if distinct.num_rows == t.num_rows:
-                return t.sort_by(
-                    [("key", "ascending"), ("ts", "ascending")]
-                ).to_pylist()
-
-        from operator import itemgetter
-
-        by_kt: dict[tuple[str, int], tuple[str, dict]] = {}
-        for rn, tb in tables:  # commit order: later runs overwrite
-            for row in tb.to_pylist():
-                kt = (row["key"], row["ts"])
-                prev = by_kt.get(kt)
-                if (
-                    prev is not None
-                    and prev[0] == rn
-                    and _payload_rank(prev[1]) >= _payload_rank(row)
-                ):
-                    # Same-run duplicate (check_duplicates=False commit):
-                    # the Spark plan resolves it by max(struct(payload)),
-                    # so keep the payload-max row, not the later-read one.
-                    continue
-                by_kt[kt] = (rn, row)
-        out = []
-        for (key, ts), (txname, row) in by_kt.items():
-            if after_ns is not None and ts < after_ns:
-                continue
-            if before_ns is not None and ts >= before_ns:
-                continue
-            if any(_marker_hits(m, txname, key, ts) for m in markers):
-                continue
-            out.append(row)
-        out.sort(key=itemgetter("key", "ts"))
-        return out
+        if read is None:
+            return None
+        tables, markers = read
+        return _merge_tables(tables, markers, after_ns, before_ns)
 
     def _read_once(self, runs, groups_fn, filter_fn, file_ok, max_groups):
         """One attempt over the listed ``runs``: ``(tables, markers)`` —
-        the per-run filtered arrow tables in commit order and the delete
-        markers — or None when more than ``max_groups`` row groups
-        match. Every row group is picked from the footers before any is
-        read, so an over-budget prefix read decodes nothing and stops
-        at the first footer past the budget."""
+        ``(run name, run is _U, filtered arrow table)`` per read file in
+        commit order, and the delete markers — or None when more than
+        ``max_groups`` row groups match. Every row group is picked from
+        the footers before any is read, so an over-budget prefix read
+        decodes nothing and stops at the first footer past the budget."""
         self._evict_stale_footers(runs)
         budget = float("inf") if max_groups is None else max_groups
-        plan = []  # (run name, file path, row groups), commit order
+        plan = []  # (run, file path, row groups), commit order
         for run in runs:  # lexical order == commit order
             if run.is_delete:
                 continue
@@ -480,17 +428,156 @@ class PointReader:
                         budget -= len(groups)
                         if budget < 0:
                             return None
-                        plan.append((run.name, fm.path, groups))
+                        plan.append((run, fm.path, groups))
         tables = []
-        for name, path, groups in plan:
+        for run, path, groups in plan:
             with pq.ParquetFile(path) as pf:
                 tbl = filter_fn(pf.read_row_groups(groups))
             if tbl.num_rows:
-                tables.append((name, tbl))
+                tables.append((run.name, run.unique, tbl))
         markers = [
             m for run in runs if run.is_delete for m in self._run_markers(run)
         ]
         return tables, markers
+
+
+def _merge_tables(tables, markers, after_ns, before_ns):
+    """Last-writer-wins + delete markers over one snapshot's tables, in
+    Arrow: the surviving records as one (key, ts)-sorted ``pa.Table``.
+
+    ``tables`` is ``(run name, run is _U, table)`` in commit order (one
+    run may contribute several files). The steps:
+
+    1. concatenate, tagging each row with its run's ordinal in commit
+       order (``_ord``, only when more than one run contributes), and
+       apply the ts window;
+    2. sort by (key, ts, ordinal);
+    3. same-run duplicates — possible only in runs without the ``_U``
+       marker (``check_duplicates=False`` commits): keep the payload-max
+       row, as the Spark plan's ``max(struct(payload))`` does. Ranked
+       in Python over just those rows: Arrow cannot sort by list
+       columns;
+    4. last writer wins: keep the last row of each (key, ts);
+    5. delete markers (database_reader.rs:481-492): a marker's key-side
+       tests run in Python once per distinct key of the result; only
+       its run-ordinal test (the row's run sorts before the marker's
+       txname) and its ts window run as kernels, and only for markers
+       whose keys match.
+    """
+    if not tables:
+        from sonnerie_spark.db import arrow_record_schema
+
+        return arrow_record_schema().empty_table()
+    names: list[str] = []  # contributing runs, commit order
+    ords: list[int] = []
+    schema = tables[0][2].schema
+    parts = []
+    for name, _unique, tbl in tables:
+        if not names or names[-1] != name:
+            names.append(name)
+        ords.append(len(names) - 1)
+        parts.append(tbl if tbl.schema.equals(schema) else tbl.cast(schema))
+    t = pa.concat_tables(parts) if len(parts) > 1 else parts[0]
+    multi = len(names) > 1
+    if multi:
+        counts = [tb.num_rows for tb in parts]
+        t = t.append_column("_ord", pa.array(np.repeat(np.int32(ords), counts)))
+    if after_ns is not None or before_ns is not None:
+        ts = t.column("ts")
+        lo = None if after_ns is None else pc.greater_equal(ts, after_ns)
+        hi = None if before_ns is None else pc.less(ts, before_ns)
+        t = t.filter(hi if lo is None else lo if hi is None else pc.and_(lo, hi))
+    order = [("key", "ascending"), ("ts", "ascending")]
+    t = t.sort_by(order + [("_ord", "ascending")] if multi else order)
+    if not all(unique for _, unique, _ in tables):
+        t = _drop_same_run_duplicates(t, ["key", "ts", "_ord"] if multi else ["key", "ts"])
+    if multi:
+        later = _next_equal(t, ["key", "ts"])
+        if later is not None and pc.any(later).as_py():
+            t = t.filter(pa.chunked_array(pc.invert(later).chunks + [pa.array([True])]))
+    if markers and t.num_rows:
+        t = _drop_deleted(t, markers, names)
+    return t.drop_columns(["_ord"]) if multi else t
+
+
+def _next_equal(t, cols):
+    """Boolean array of ``num_rows - 1``: row i equals row i + 1 on
+    ``cols``; None for fewer than two rows."""
+    n = t.num_rows
+    if n < 2:
+        return None
+    eq = None
+    for c in cols:
+        col = t.column(c)
+        e = pc.equal(col.slice(0, n - 1), col.slice(1))
+        eq = e if eq is None else pc.and_(eq, e)
+    return eq
+
+
+def _drop_same_run_duplicates(t, cols):
+    """Keep the payload-max row of each group of rows equal on ``cols``
+    (sorted input, so groups are adjacent). Only the duplicated rows
+    leave Arrow."""
+    same = _next_equal(t, cols)
+    if same is None or not pc.any(same).as_py():
+        return t
+    first = np.flatnonzero(same.to_numpy(zero_copy_only=False))
+    cont = set(first + 1)  # rows continuing the group of the row before
+    rows = sorted(set(first) | cont)
+    drop = []
+    best = best_rank = None
+    for r, rec in zip(rows, t.take(pa.array(rows)).to_pylist()):
+        rank = _payload_rank(rec)
+        if r not in cont:
+            best, best_rank = r, rank
+        elif rank > best_rank:
+            drop.append(best)
+            best, best_rank = r, rank
+        else:
+            drop.append(r)
+    keep = np.ones(t.num_rows, dtype=bool)
+    keep[drop] = False
+    return t.filter(pa.array(keep))
+
+
+def _drop_deleted(t, markers, names):
+    """Remove the rows of ``t`` (sorted, one row per (key, ts)) that a
+    delete marker hides. ``names`` are the contributing runs in commit
+    order; ``t`` carries their ordinal in ``_ord`` when there are
+    several."""
+    keys = pc.unique(t.column("key")).to_pylist()
+    ts = t.column("ts")
+    span = None  # ts (min, max), computed on first need
+    deleted = None
+    for m in markers:
+        cut = bisect.bisect_left(names, m["_txname"])  # runs older than m
+        if cut == 0:
+            continue
+        hit = [k for k in keys if _marker_key_hits(m, k)]
+        if not hit:
+            continue
+        if span is None:
+            mm = pc.min_max(ts)
+            span = (mm["min"].as_py(), mm["max"].as_py())
+        lo, hi = int(m["after_ns"]), int(m["before_ns"])
+        if lo > span[1] or hi <= span[0]:
+            continue
+        conds = []
+        if cut < len(names):
+            conds.append(pc.less(t.column("_ord"), cut))
+        if lo > span[0]:
+            conds.append(pc.greater_equal(ts, lo))
+        if hi <= span[1]:
+            conds.append(pc.less(ts, hi))
+        if len(hit) < len(keys):
+            conds.append(pc.is_in(t.column("key"), value_set=pa.array(hit, pa.string())))
+        if not conds:
+            return t.slice(0, 0)  # the marker hides every row
+        mask = conds[0]
+        for c in conds[1:]:
+            mask = pc.and_(mask, c)
+        deleted = mask if deleted is None else pc.or_(deleted, mask)
+    return t if deleted is None else t.filter(pc.invert(deleted))
 
 
 def _payload_rank(row: dict):
@@ -509,20 +596,15 @@ def _payload_rank(row: dict):
     return tuple(f(row[c]) for c in ("fmt", "v_long", "v_double", "v_str", "v_bin"))
 
 
-def _marker_hits(m: dict, txname: str, key: str, ts: int) -> bool:
-    """Python mirror of the delete predicate (database_reader.rs:481-492)."""
-    if not txname < m["_txname"]:
-        return False
-    if not (int(m["after_ns"]) <= ts < int(m["before_ns"])):
-        return False
+def _marker_key_hits(m: dict, key: str) -> bool:
+    """The key side of the delete predicate (database_reader.rs:481-492):
+    the marker's key bounds and wildcard."""
     if m["first_key"] and key < m["first_key"]:
         return False
     if m["last_key"] and key >= m["last_key"]:
         return False
     wc = m.get("wildcard") or "%"
-    if wc != "%" and not wildcard_regex(wc).match(key):
-        return False
-    return True
+    return wc == "%" or bool(wildcard_regex(wc).match(key))
 
 
 def arrow_agg_series(
@@ -555,10 +637,7 @@ def arrow_agg_series(
     Like every driver-side path, reads inside the ``_consistent``
     bracket: a commit or compaction swap mid-read retries it.
     """
-    import pyarrow as pa
     import pyarrow.dataset as ds
-
-    from sonnerie_spark.plans.keyfilter import analyze_wildcard
 
     filt = None
 
@@ -573,8 +652,6 @@ def arrow_agg_series(
         if info.exact is not None:
             conj(ds.field("key") == info.exact)
         elif info.prefix and not info.needs_like:
-            from sonnerie_spark.plans.keyfilter import prefix_upper_bound
-
             conj(ds.field("key") >= info.prefix)
             ub = prefix_upper_bound(info.prefix)
             if ub is not None:
@@ -687,8 +764,6 @@ def arrow_agg_series(
         #   - no nulls + uniform list length L > i (homogeneous
         #     formats): list_flatten IS the row-aligned value
         #     stream for L == 1; stride-take for L > 1.
-        import numpy as np
-
         n = len(col)
         lens = pc.list_value_length(col)
         mm = pc.min_max(lens)
@@ -780,9 +855,6 @@ def _segmented_fold(kcol, v) -> list[dict] | None:
     count; ``sum``/``min``/``max`` over valid values, None when n == 0
     — exactly pyarrow's skip-null aggregate semantics.
     """
-    import numpy as np
-    import pyarrow as pa
-
     chunks = kcol.chunks if isinstance(kcol, pa.ChunkedArray) else [kcol]
     if any(
         not pa.types.is_dictionary(ch.type) or ch.null_count for ch in chunks
@@ -820,8 +892,6 @@ class _SegAccumulator:
         self.mx: list = []
 
     def add_chunk(self, kch, npv, nan_mask=None) -> None:
-        import numpy as np
-
         n = len(kch)
         codes = kch.indices.to_numpy(zero_copy_only=False)
         starts = np.flatnonzero(np.diff(codes)) + 1
@@ -887,9 +957,6 @@ def _segmented_fold_single_lane(kcol, list_col) -> list[dict] | None:
     the caller rebuilds the general row-aligned lane instead; the
     retried work is one partial pass over cheap kernels.
     """
-    import numpy as np
-    import pyarrow as pa
-
     kchunks = kcol.chunks if isinstance(kcol, pa.ChunkedArray) else [kcol]
     if any(
         not pa.types.is_dictionary(ch.type) or ch.null_count

@@ -9,10 +9,19 @@
   transaction per request; readers see the data only after the atomic
   commit (README.md:31-35).
 
+GET path: an exact key or a pure prefix (``fib%``) is answered without
+Spark and stays columnar from the row group to the socket —
+``Database.get_table`` returns one Arrow table, already merged
+(last writer wins, delete markers applied), and
+``rowformat.format_table`` renders it per column into the response body.
+Any other wildcard, or a prefix matching more than the point reader's
+row-group budget, streams the Spark plan's rows through
+``cli.record_to_line``, one line each.
+
 The reference keeps a 10-s-TTL cached ``DatabaseReader`` to amortize
 readdir+mmap (sonnerie-serve.rs:239-265). No analogous cache exists
-here ON PURPOSE: the run listing still runs on every GET, inside
-``Database.read``/``get``. Only immutable per-run metadata is cached
+here ON PURPOSE: the run listing still runs on every GET, inside the
+point reader or ``Database.read``. Only immutable per-run metadata is cached
 (``PointReader``): Parquet footer statistics, valid while the run's
 listed file names are unchanged, and parsed delete markers, keyed by
 run path + mtime. A committed write is visible to the very next GET —
@@ -40,7 +49,7 @@ from urllib.parse import unquote, urlparse
 _HEXDIGITS = re.compile(rb"[0-9A-Fa-f]+")
 
 from sonnerie_spark.db import Database
-from sonnerie_spark.rowformat import parse_line
+from sonnerie_spark.rowformat import format_table, parse_line
 
 
 # PUT bodies above this many bytes are spooled to disk and committed
@@ -136,26 +145,19 @@ def make_server(
             headers_sent = False
             ts_style = "%F %T" if human else "nanos"
             try:
-                from types import SimpleNamespace
-
-                from sonnerie_spark.plans.keyfilter import analyze_wildcard
-
-                kf = analyze_wildcard(pattern)
-                rows = None
-                if kf.exact is not None:
-                    # Exact-key GET: driver-side pyarrow point read — no
-                    # Spark job on the latency-critical path (the
-                    # reference's ~15 ms lookup, README.md:277-278).
-                    rows = db.get(kf.exact)
-                elif kf.prefix and not kf.needs_like:
-                    # Pure-prefix GET ("fib%"): same fast path, bounded
-                    # by row-group count; None -> too large, use Spark.
-                    rows = db.get_prefix(kf.prefix)
-                if rows is not None:
-                    it = iter([SimpleNamespace(**r) for r in rows])
+                # Exact-key and pure-prefix GETs: driver-side pyarrow
+                # read, formatted per column — no Spark job on the
+                # latency-critical path (the reference's ~15 ms lookup,
+                # README.md:277-278). None -> the Spark plan.
+                tbl = db.get_table(pattern)
+                if tbl is not None:
+                    body = format_table(tbl, ts_style=ts_style)
+                    lines = ()
                 else:
-                    df = db.read_sorted(wildcard=pattern)
-                    it = df.toLocalIterator(prefetchPartitions=True)
+                    body = b""
+                    lines = db.read_sorted(wildcard=pattern).toLocalIterator(
+                        prefetchPartitions=True
+                    )
                 chunked_out = self._streaming_ok()
                 self.send_response(200)
                 self.send_header("Content-Type", "text/plain; charset=utf-8")
@@ -173,26 +175,17 @@ def make_server(
                     self.send_header("Connection", "close")
                 self.end_headers()
                 headers_sent = True
+                self._write_body(body, chunked_out)
                 buf = bytearray()
-                for row in it:
+                for row in lines:
                     line = record_to_line(row, ts_style=ts_style, show_fmt=False)
                     buf += line.encode() + b"\n"
                     if len(buf) >= 64 * 1024:
-                        if chunked_out:
-                            self.wfile.write(
-                                b"%x\r\n%s\r\n" % (len(buf), bytes(buf))
-                            )
-                        else:
-                            self.wfile.write(bytes(buf))
+                        self._write_body(bytes(buf), chunked_out)
                         buf.clear()
+                self._write_body(bytes(buf), chunked_out)
                 if chunked_out:
-                    if buf:
-                        self.wfile.write(
-                            b"%x\r\n%s\r\n" % (len(buf), bytes(buf))
-                        )
                     self.wfile.write(b"0\r\n\r\n")  # terminal chunk
-                elif buf:
-                    self.wfile.write(bytes(buf))
             except BrokenPipeError:
                 # client died mid-stream: nothing more can be framed on
                 # this socket — leave the keep-alive loop instead of
@@ -216,6 +209,12 @@ def make_server(
                         str(e).encode(),
                         close=self._request_has_unread_body(),
                     )
+
+        def _write_body(self, data: bytes, chunked: bool) -> None:
+            """One piece of a streamed body; an empty piece writes
+            nothing (a zero-size chunk would end a chunked body)."""
+            if data:
+                self.wfile.write(b"%x\r\n%s\r\n" % (len(data), data) if chunked else data)
 
         def _commit_spooled(self, write_body) -> None:
             """Spooled-PUT path: body -> disk spool -> distributed parse

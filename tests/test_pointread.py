@@ -740,3 +740,147 @@ def test_each_read_lists_once(tmp_path, monkeypatch):
     assert calls["runs"] == 1 and calls["run_names"] == 2  # one attempt
     assert data_dirs.isdisjoint(calls["stat"])
     assert sorted(calls["listdir"]) == sorted(r.path for r in runs)
+
+
+def _commit_non_unique(db, rows):
+    """Publish ``rows`` as one run WITHOUT the ``_U`` marker, the way a
+    ``check_duplicates=False`` commit writes it: duplicate (key, ts)
+    rows may share the run. Spark-free."""
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sonnerie_spark.bucketing import bucket_file_name, bucket_of, write_run_buckets
+    from sonnerie_spark.db import RUN_SUBDIR, arrow_record_schema
+    from sonnerie_spark.fsutil import OwnedDir
+
+    with OwnedDir(db.path) as owner:
+        run = os.path.join(owner.path, RUN_SUBDIR)
+        os.mkdir(run)
+        write_run_buckets(run, db.buckets)
+        by_bucket: dict[int, list[dict]] = {}
+        for r in sorted(rows, key=lambda r: (r["key"], r["ts"])):
+            by_bucket.setdefault(bucket_of(r["key"], db.buckets), []).append(r)
+        nonce = f"{time.time_ns():016x}"
+        for b, rs in by_bucket.items():
+            pq.write_table(
+                pa.Table.from_pylist(rs, schema=arrow_record_schema()),
+                os.path.join(run, bucket_file_name(b, nonce)),
+            )
+        db._atomic_rename(owner.path)
+
+
+def test_non_unique_run_duplicates_against_other_runs(tmp_path):
+    """A same-run duplicate of a run without ``_U`` resolves to its
+    payload-max row (the Spark plan's ``max(struct(payload))``), and
+    that row loses to a later run and beats an earlier one."""
+    db = _local_db(tmp_path)
+    db.commit_rows([_u_row("a", 1, 10), _u_row("b", 1, 10)])
+    _commit_non_unique(db, [_u_row("a", 1, 5), _u_row("a", 1, 7), _u_row("a", 1, 6),
+                            _u_row("b", 1, 3), _u_row("b", 1, 9), _u_row("b", 2, 1)])
+    db.commit_rows([_u_row("b", 1, 0)])
+    # a: the non-_U run overwrites the earlier run with its max payload
+    assert db.get("a") == [_u_row("a", 1, 7)]
+    # b@1: the later run overwrites the non-_U run's duplicate
+    assert db.get("b") == [_u_row("b", 1, 0), _u_row("b", 2, 1)]
+    assert db.get_prefix("") == [_u_row("a", 1, 7), _u_row("b", 1, 0), _u_row("b", 2, 1)]
+
+
+_MODEL_KEYS = ["a", "a b", "ab", "b", "b%c", "bc"]
+_MODEL_WINDOWS = [(None, None), (2, None), (None, 4), (1, 3)]
+
+
+def _model_like(pattern: str, key: str) -> bool:
+    import re
+
+    rx = ".*".join(re.escape(p) for p in pattern.split("%"))
+    return re.fullmatch(rx, key, re.DOTALL) is not None
+
+
+try:
+    from hypothesis import given, settings, strategies as st
+
+    _row_st = st.builds(
+        _u_row, st.sampled_from(_MODEL_KEYS), st.integers(0, 5), st.integers(0, 9)
+    )
+    _unique_rows = st.lists(_row_st, min_size=1, max_size=8, unique_by=lambda r: (r["key"], r["ts"]))
+    _ops = st.one_of(
+        st.tuples(st.just("rows"), _unique_rows),
+        st.tuples(st.just("strict"), _unique_rows, st.integers(1, 4)),
+        st.tuples(st.just("unsorted"), _unique_rows, st.integers(1, 4)),
+        st.tuples(st.just("non_unique"), st.lists(_row_st, min_size=1, max_size=8)),
+        st.tuples(st.just("delete"), st.fixed_dictionaries({
+            "first_key": st.sampled_from(["", "a b", "ab", "b"]),
+            "last_key": st.sampled_from(["", "ab", "b", "bc"]),
+            "after_ns": st.sampled_from([0, 1, 2, 4]),
+            "before_ns": st.sampled_from([2, 3, 5, 2**63 - 1]),
+            "wildcard": st.sampled_from(["%", "a%", "b", "%c", "a b"]),
+        })),
+    )
+
+    @given(st.lists(_ops, min_size=1, max_size=7))
+    @settings(max_examples=60, deadline=None, derandomize=True)
+    def test_point_reads_match_lww_model(history):
+        """After every step of a random history of commits (commit_rows,
+        strict and unsorted Transactions that spill, runs without
+        ``_U`` holding same-run duplicates) and delete markers (key
+        bounds, wildcards, ts windows), ``get``, ``get_many`` and
+        ``get_prefix``, with and without a ts window, equal a
+        pure-Python model: a dict of the live (key, ts) records that
+        every commit overwrites and every marker prunes. Spark-free."""
+        import tempfile
+
+        from sonnerie_spark.db import Transaction
+
+        model: dict[tuple[str, int], dict] = {}
+
+        def rows_of(pred, lo, hi):
+            return [
+                model[kt] for kt in sorted(model)
+                if pred(kt[0]) and (lo is None or kt[1] >= lo)
+                and (hi is None or kt[1] < hi)
+            ]
+
+        with tempfile.TemporaryDirectory() as d:
+            db = Database(None, d, buckets=2, durable=False)
+            for op in history:
+                kind, arg = op[0], op[1]
+                if kind == "rows":
+                    db.commit_rows([dict(r) for r in arg])
+                elif kind in ("strict", "unsorted"):
+                    strict = kind == "strict"
+                    tx = Transaction(db, strict_order=strict, spill_threshold=op[2])
+                    order = (lambda r: (r["key"], r["ts"])) if strict else (
+                        lambda r: (r["ts"], r["key"]))  # keys interleaved
+                    for r in sorted(arg, key=order):
+                        tx.add_record(r["key"], r["ts"], "u", r["v_long"])
+                    tx.commit()
+                elif kind == "non_unique":
+                    _commit_non_unique(db, arg)
+                    arg = sorted(arg, key=lambda r: r["v_long"])  # max payload last
+                else:
+                    db.commit_deletes([arg])
+                    for key, ts in list(model):
+                        if ((not arg["first_key"] or key >= arg["first_key"])
+                                and (not arg["last_key"] or key < arg["last_key"])
+                                and arg["after_ns"] <= ts < arg["before_ns"]
+                                and _model_like(arg["wildcard"], key)):
+                            del model[key, ts]
+                    arg = []
+                for r in arg:
+                    model[r["key"], r["ts"]] = r
+                for lo, hi in _MODEL_WINDOWS:
+                    w = dict(after_ns=lo, before_ns=hi)
+                    for k in _MODEL_KEYS:
+                        assert db.get(k, **w) == rows_of(k.__eq__, lo, hi), (k, w)
+                    assert db.get_many(["b", "zz", "a b"], **w) == {
+                        k: rows_of(k.__eq__, lo, hi) for k in ["b", "zz", "a b"]
+                    }
+                    for p in ["", "a", "b"]:
+                        assert db.get_prefix(p, **w) == rows_of(
+                            lambda k: k.startswith(p), lo, hi
+                        ), (p, w)
+except ImportError:  # pragma: no cover - hypothesis is in the image
+    pass

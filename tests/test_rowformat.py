@@ -249,3 +249,65 @@ def test_columns_values_round_trip_is_identity():
         back = rf.values_to_columns(rec.fmt, rf.columns_to_values(rec.fmt, *cols))
         assert bits(back) == bits(cols), ln
     assert seen == rf.VALID_FORMAT_CHARS
+
+
+# --- the columnar formatter equals the per-row one ---
+
+_CODE_VALUES = {
+    "i": st.integers(-(2**31), 2**31 - 1),
+    "u": st.integers(0, 2**32 - 1),
+    "I": st.integers(-(2**63), 2**63 - 1),
+    "U": st.integers(0, 2**64 - 1),
+    "f": st.floats(width=32),  # NaN, +-inf and -0.0 included
+    "F": st.floats(),
+    "s": st.text(st.sampled_from("ab \t\n\r\\é")) | st.text(st.characters(blacklist_categories=("Cs",))),
+    "B": st.binary(max_size=12),
+}
+
+
+@st.composite
+def _record(draw):
+    fmt = draw(st.text(st.sampled_from("iuIUfFsB"), min_size=1, max_size=4))
+    values = [draw(_CODE_VALUES[ch]) for ch in fmt]
+    values = [rf.parse_value("U", str(v)) if ch == "U" else v for ch, v in zip(fmt, values)]
+    cols = rf.values_to_columns(fmt, values)
+    row = {
+        "key": draw(st.sampled_from(["k", "a b", "t\tab\\", "n\nr\r", "é"])
+                    | st.text(st.characters(blacklist_categories=("Cs",)), max_size=6)),
+        "ts": draw(st.integers(0, 2**63 - 1)),
+        "fmt": fmt,
+    }
+    for lane, vals in zip(("v_long", "v_double", "v_str", "v_bin"), cols):
+        # a lane the format does not use is empty, or null as Spark writes it
+        row[lane] = vals if vals else draw(st.sampled_from([[], None]))
+    return row
+
+
+@given(
+    rows=st.lists(_record(), max_size=8),
+    ts_style=st.sampled_from(["nanos", "seconds", "%F %T", "%Y/%m/%d %Hh%M"]),
+    show_fmt=st.booleans(),
+    columns=st.none() | st.lists(st.integers(0, 5), max_size=4),
+    chunks=st.integers(1, 3),
+)
+@settings(max_examples=300, deadline=None, derandomize=True)
+def test_format_table_equals_record_to_line(rows, ts_style, show_fmt, columns, chunks):
+    """``format_table`` is byte-identical to ``record_to_line`` per row:
+    every code ``iuIUfFsB``, mixed formats in one table, integer bounds
+    and U >= 2**63, f32 values, NaN, +-inf and -0.0, escapes in keys and
+    strings, base64, empty/null unused lanes, the empty table, every ts
+    style, column selection and ``show_fmt``, one or several chunks."""
+    from types import SimpleNamespace
+
+    import pyarrow as pa
+
+    from sonnerie_spark.cli import record_to_line
+    from sonnerie_spark.db import arrow_record_schema
+
+    tbl = pa.Table.from_pylist(rows, schema=arrow_record_schema())
+    if chunks > 1 and rows:
+        cut = len(rows) // chunks
+        tbl = pa.concat_tables([tbl.slice(0, cut), tbl.slice(cut)])
+    kw = dict(ts_style=ts_style, show_fmt=show_fmt, columns=columns)
+    want = "".join(record_to_line(SimpleNamespace(**r), **kw) + "\n" for r in rows)
+    assert rf.format_table(tbl, **kw) == want.encode()

@@ -581,8 +581,8 @@ def test_serve_get_with_body_that_500s_still_closes(server, db, monkeypatch):
     from urllib.parse import urlparse
 
     _put(server, "a 1000 u 1\n")
-    monkeypatch.setattr(
-        db, "get", lambda *a, **k: (_ for _ in ()).throw(RuntimeError("boom"))
+    monkeypatch.setattr(  # the GET's point read raises
+        db, "get_table", lambda *a, **k: (_ for _ in ()).throw(RuntimeError("boom"))
     )
     host, port = urlparse(server).netloc.split(":")
     s = socket.create_connection((host, int(port)), timeout=30)
@@ -600,6 +600,65 @@ def test_serve_get_with_body_that_500s_still_closes(server, db, monkeypatch):
     assert buf.startswith(b"HTTP/1.1 500")
     assert b"Connection: close" in buf
     assert buf.count(b"HTTP/1.1") == 1  # follow-up was NOT served
+
+
+def test_fast_reads_format_per_column(db, monkeypatch):
+    """Exact, prefix and ``?human`` GETs, and the CLI's exact and prefix
+    reads, render the point read's table per column: the per-row
+    ``cli.record_to_line`` is never called. A mid-pattern wildcard (the
+    Spark plan) still renders per row."""
+    import io
+    import sys
+
+    from sonnerie_spark import cli
+
+    db.commit_rows([
+        {"key": "a", "ts": 2 * 10**9, "fmt": "Fs", "v_long": [],
+         "v_double": [0.5], "v_str": ["x y"], "v_bin": []},
+        {"key": "ab", "ts": 10**9, "fmt": "u", "v_long": [7],
+         "v_double": [], "v_str": [], "v_bin": []},
+        {"key": "b", "ts": 10**9, "fmt": "u", "v_long": [8],
+         "v_double": [], "v_str": [], "v_bin": []},
+    ])
+
+    def per_row(*a, **k):
+        raise AssertionError("per-row formatter on a fast path")
+
+    monkeypatch.setattr(cli, "record_to_line", per_row)
+    srv = make_server(db)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+
+    def get(path):
+        with urllib.request.urlopen(base + path) as r:
+            return r.read()
+
+    def read(*argv):
+        args = cli.build_parser().parse_args(["-d", db.path, "read", *argv])
+        old, sys.stdout = sys.stdout, io.StringIO()
+        try:
+            cli.cmd_read(db, args)
+            return sys.stdout.getvalue()
+        finally:
+            sys.stdout = old
+
+    try:
+        assert get("/a") == b"a\t2000000000\t0.50000000000000000 x\\ y\n"
+        assert get("/a%25") == (
+            b"a\t2000000000\t0.50000000000000000 x\\ y\nab\t1000000000\t7\n"
+        )
+        assert get("/ab?human") == b"ab\t1970-01-01 00:00:01\t7\n"
+        assert read("ab") == "ab\t1970-01-01 00:00:01\t7\n"
+        assert read("a%", "--print-format", "--timestamp-seconds", "--columns", "2") == (
+            "a\t2\tFs\tx\\ y\nab\t1\tu\t\n"
+        )
+        calls = []
+        monkeypatch.setattr(cli, "record_to_line", lambda *a, **k: calls.append(1) or "")
+        get("/%25b")  # mid-pattern wildcard: the Spark plan
+        assert calls
+    finally:
+        srv.shutdown()
+        srv.server_close()
 
 
 def _age(path, seconds):
