@@ -184,7 +184,10 @@ class DuplicateRecordError(CommitError):
 class RunInfo:
     """One committed run as ``Database.runs()`` listed it. ``files``
     and ``unique`` come from that same listing, so a consumer never
-    reads the run directory's layout again."""
+    reads the run directory's layout again. ``runs()`` hands back the
+    same object for as long as the run directory is the same
+    incarnation, so a per-run cache may key its validity on identity
+    (``pointread.PointReader``)."""
 
     name: str  # 'main' or 'tx.<016x>'
     path: str
@@ -214,6 +217,8 @@ class Database:
         self.durable = bool(durable)
         self.path = os.path.abspath(path)
         self._point_reader = None  # lazy PointReader (exact-key fast path)
+        # run name -> ((st_ino, st_ctime_ns), RunInfo or None): runs()
+        self._runs_cache: dict[str, tuple[tuple[int, int], RunInfo | None]] = {}
         self._view_tables: dict[str, str] = {}  # run-set sig -> table name
         self._last_view_gc = 0.0  # rate limit for the reuse-path sweep
         os.makedirs(self.path, exist_ok=True)
@@ -305,28 +310,61 @@ class Database:
 
         Skips in-flight ``.tmp-*`` dirs and warns-equivalent skips empty
         dirs, like the reference's readdir (database_reader.rs:60-131).
-        This is the only reader of a run directory's layout: its one
-        ``listdir`` per run classifies the run and records its file
-        names and uniqueness marker on the ``RunInfo``.
+        This is the only reader of a run directory's layout: one
+        ``listdir`` classifies a run and records its file names and
+        uniqueness marker on the ``RunInfo``.
+
+        Each incarnation of a run is classified once per handle. A
+        warm listing is one root scan plus one ``DirEntry.stat()`` per
+        run: a run whose directory still has the cached
+        ``(st_ino, st_ctime_ns)`` gets the cached ``RunInfo`` (or stays
+        skipped); only a new or republished run is listed again. The
+        inode alone is not enough: compaction republishes ``main`` and
+        the newest merged tx name, and the filesystem hands a freed
+        inode straight back to the next ``mkdir`` (197 of 200 times on
+        ext4), so two republishes between two listings can leave the
+        same ``(name, inode)`` over new files. The new directory was
+        made after the cached one was published, and its mkdir, the
+        files written into it and its publishing rename all set its
+        ctime, which tells the two apart (distinct on 2000 of 2000
+        consecutive renames on ext4 with nanosecond timestamps; with
+        per-tick timestamps both republishes would have to fall in the
+        tick of the cached publish).
         """
+        cache = self._runs_cache
         out: list[RunInfo] = []
-        for name in sorted(e.name for e in self._root_entries()):
-            if not _TX_NAME_RE.match(name):
-                continue
-            p = os.path.join(self.path, name)
+        listed = set()
+        entries = [e for e in self._root_entries() if _TX_NAME_RE.match(e.name)]
+        for e in sorted(entries, key=lambda e: e.name):
             try:
-                entries = os.listdir(p)
+                st = e.stat()
             except OSError:
                 continue
-            files = tuple(sorted(f for f in entries if f.endswith(".parquet")))
-            if not files and "_SUCCESS" not in entries:
-                continue
-            out.append(
-                RunInfo(
-                    name, p, DELETE_SENTINEL in entries, files,
-                    RUN_UNIQUE_FILE in entries,
-                )
-            )
+            sig = (st.st_ino, st.st_ctime_ns)
+            listed.add(e.name)
+            hit = cache.get(e.name)
+            if hit is not None and hit[0] == sig:
+                run = hit[1]
+            else:
+                p = os.path.join(self.path, e.name)
+                try:
+                    names = os.listdir(p)
+                except OSError:
+                    continue
+                files = tuple(sorted(f for f in names if f.endswith(".parquet")))
+                run = None  # neither data nor _SUCCESS: skipped
+                if files or "_SUCCESS" in names:
+                    run = RunInfo(
+                        e.name, p, DELETE_SENTINEL in names, files,
+                        RUN_UNIQUE_FILE in names,
+                    )
+                cache[e.name] = (sig, run)  # one whole-tuple store
+            if run is not None:
+                out.append(run)
+        # Serve handlers share the handle without a lock: snapshot the
+        # keys in one C-level op, and pop() tolerates a racing eviction.
+        for stale in [n for n in list(cache) if n not in listed]:
+            cache.pop(stale, None)
         return out
 
     def run_names(self) -> list[str]:

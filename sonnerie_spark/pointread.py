@@ -21,13 +21,17 @@ Every read here — ``get``, ``get_many``, the prefix read and the Arrow
 ``agg_series`` fold — runs inside one bracket (``_consistent``): run-set
 fingerprint, ONE ``Database.runs()`` listing, the attempt, a closing
 fingerprint probe, retried on a race. The attempt reads only what that
-listing names; a cached footer stays valid while its run's listed file
-names are unchanged, so a warm read stats no data run.
+listing names; a cached footer or marker entry stays valid while the
+listing hands back the same ``RunInfo`` object, so a warm read lists or
+stats no run directory beyond the listing's own check and reads no
+footer or marker file again.
 
 Scale note: the fast path reads only footer statistics and delete
-markers (both cached per run) plus the pruned row groups, so its cost is
-O(runs) listing + O(selectivity) data — on a compacted DB that is one
-file open and usually one row group. It runs on
+markers (both cached per run) plus the pruned row groups. A warm
+listing is three root scans and one ``stat`` per run directory (the
+incarnation check in ``Database.runs``), no per-run ``listdir``; then
+O(selectivity) data — on a compacted DB that is one file open and
+usually one row group. It runs on
 whatever process calls it (driver or serve worker); it never loads a
 run's full data.
 """
@@ -182,14 +186,18 @@ def _consistent(db, attempt):
     Each try takes the cheap ``run_names`` fingerprint, then ONE
     ``runs()`` listing, which the attempt reads from alone (file names,
     uniqueness marker and delete runs included — no second listing, no
-    stat of a data run), then probes the fingerprint again. Complete
+    stat of a run beyond the listing's own incarnation check), then
+    probes the fingerprint again. ``runs()`` returns the cached
+    ``RunInfo`` of every run whose directory is the same incarnation
+    (``(st_ino, st_ctime_ns)``), so the reader's caches are valid while
+    the listed object is the one they were filled from. Complete
     run dirs appear and disappear only by atomic renames, so an
     unchanged fingerprint brackets a window with no commit or compaction
     swap. Two race shapes retry on a fresh listing:
 
     - a listed run or file vanishing mid-read (a compaction hide, or a
-      same-name republish whose new files carry new names): the attempt
-      raises OSError;
+      same-name republish, which rmtrees the old incarnation): the
+      attempt raises OSError;
     - a listing taken INSIDE a swap window, seeing neither the old runs
       nor the merged result: the closing probe differs.
 
@@ -217,15 +225,20 @@ class PointReader:
     Every read is one ``_consistent`` bracket over one run listing. Two
     per-run caches, keyed by run path, hold no open file:
 
-    - ``_footers``: footer statistics of a data run, valid while the
-      cached file names equal the listed ``RunInfo.files``. A run
-      republished under the same name (compaction keeps ``main`` and the
-      newest tx name) always carries new file names — a Spark write gets
-      a fresh job UUID, the Spark-free writers a fresh ``time_ns``
-      nonce — so the listing alone decides a hit, without a stat.
-    - ``_markers``: the parsed rows of a delete run, valid per mtime. A
-      delete run's file is always ``deletes.parquet``, so its name
-      proves nothing and the stat stays.
+    - ``_footers``: footer statistics of a data run;
+    - ``_markers``: the parsed rows of a delete run.
+
+    An entry is ``(files, value)``, where ``files`` is the ``files``
+    tuple of the ``RunInfo`` it was filled from. It is valid while the
+    listing hands back that same tuple object (``cached[0] is
+    run.files``). ``Database.runs`` builds a fresh tuple each time it
+    classifies a run (all runs with no file share ``()``, and so their
+    empty footer list) and returns the cached ``RunInfo`` while the run
+    directory is the same incarnation, so a run republished under the
+    same name (compaction keeps ``main`` and the newest tx name) always
+    misses, and a hit costs no stat of its own. Entries of runs that
+    are no longer listed are evicted when the caches hold more runs
+    than the listing.
 
     Cached marker dicts are shared between reads and must not be
     mutated.
@@ -243,7 +256,10 @@ class PointReader:
         listed (``all_runs`` must be the FULL listing, data and delete
         runs). A compacted-away run's path is never looked up again, so
         without this a long-lived reader (the serve process) grows its
-        caches by one entry for every transaction ever replaced.
+        caches by one entry for every transaction ever replaced. A read
+        that has filled an entry for every listed run leaves more
+        entries than runs only when some listed name has gone, so the
+        pass runs only then (``_read_once``).
 
         Thread-shape: serve handlers share one PointReader with no
         lock, so snapshot the key set in one C-level op (list(dict) —
@@ -259,7 +275,7 @@ class PointReader:
         """Footer statistics of one listed data run, one ``_FileMeta``
         per file. OSError propagates: the run was replaced under us."""
         cached = self._footers.get(run.path)
-        if cached is not None and cached[0] == run.files:
+        if cached is not None and cached[0] is run.files:
             return cached[1]
         run_b = read_run_buckets(run.path)
         metas = []
@@ -270,15 +286,14 @@ class PointReader:
         return metas
 
     def _run_markers(self, run) -> list[dict]:
-        """The delete markers of one delete run, parsed once per
-        (path, mtime) through ``Database.delete_markers``. OSError
+        """The delete markers of one delete run, parsed once per listed
+        incarnation through ``Database.delete_markers``. OSError
         propagates: the run was purged under us."""
-        mtime = os.stat(run.path).st_mtime_ns
         cached = self._markers.get(run.path)
-        if cached is not None and cached[0] == mtime:
+        if cached is not None and cached[0] is run.files:
             return cached[1]
         rows = self.db.delete_markers([run])
-        self._markers[run.path] = (mtime, rows)
+        self._markers[run.path] = (run.files, rows)
         return rows
 
     # -- point read --------------------------------------------------------
@@ -415,7 +430,6 @@ class PointReader:
         ``max_groups`` row groups match. Every row group is picked from
         the footers before any is read, so an over-budget prefix read
         decodes nothing and stops at the first footer past the budget."""
-        self._evict_stale_footers(runs)
         budget = float("inf") if max_groups is None else max_groups
         plan = []  # (run, file path, row groups), commit order
         for run in runs:  # lexical order == commit order
@@ -438,6 +452,8 @@ class PointReader:
         markers = [
             m for run in runs if run.is_delete for m in self._run_markers(run)
         ]
+        if len(self._footers) + len(self._markers) > len(runs):
+            self._evict_stale_footers(runs)
         return tables, markers
 
 

@@ -688,28 +688,20 @@ def test_same_name_republish_is_seen_without_a_stat(spark, tmp_path):
 
 
 def test_each_read_lists_once(tmp_path, monkeypatch):
-    """A warm GET reads the run set from ONE Database.runs() listing per
-    attempt: no data-run directory is stat'ed or listed again, and a
-    prefix GET does not list the runs a second time for its row-group
-    budget."""
+    """A warm GET and a warm prefix GET read the run set from ONE
+    Database.runs() listing per attempt (between two run_names()
+    probes), and that listing is flat in the number of runs apart from
+    one stat per run directory, its incarnation check: three root
+    scans, no ``listdir`` of a run directory, exactly one stat of each
+    listed run directory (``DirEntry.stat`` counted too) and none of
+    anything inside one, at 10 runs and at 200. A read after one new
+    commit lists only the new run."""
     import os
 
     db = _local_db(tmp_path)
-    for i in range(24):
-        db.commit_rows([_u_row(f"k{i % 5}", T0 + i * NS, i)])
-    for i in range(3):
-        db.commit_deletes(
-            [{"wildcard": "k1", "after_ns": T0 + i * NS, "before_ns": T0 + i * NS + 1}]
-        )
-    runs = db.runs()
-    data_dirs = {r.path for r in runs if not r.is_delete}
-    assert len(data_dirs) >= 20
-    want_get = db.get("k1")
-    want_prefix = db.get_prefix("k")  # warm both paths
-
-    calls = {"runs": 0, "run_names": 0, "stat": [], "listdir": []}
+    calls = {"runs": 0, "run_names": 0, "scandir": 0, "stat": [], "listdir": []}
     real_runs, real_names = Database.runs, Database.run_names
-    real_stat, real_listdir = os.stat, os.listdir
+    real_stat, real_listdir, real_scandir = os.stat, os.listdir, os.scandir
 
     def counted(name, fn):
         def wrapper(*a, **k):
@@ -725,51 +717,221 @@ def test_each_read_lists_once(tmp_path, monkeypatch):
         calls["listdir"].append(os.fspath(p))
         return real_listdir(p, *a, **k)
 
-    monkeypatch.setattr(Database, "runs", counted("runs", real_runs))
-    monkeypatch.setattr(Database, "run_names", counted("run_names", real_names))
-    monkeypatch.setattr(os, "stat", stat)
-    monkeypatch.setattr(os, "listdir", listdir)
+    class Entry:
+        """A DirEntry whose stat() is counted."""
 
-    assert db.get("k1") == want_get
-    assert data_dirs.isdisjoint(calls["stat"])
-    assert sorted(calls["listdir"]) == sorted(r.path for r in runs)
-    assert calls["runs"] == 1 and calls["run_names"] == 2
+        def __init__(self, e):
+            self._e = e
+            self.name, self.path = e.name, e.path
 
-    calls.update(runs=0, run_names=0, stat=[], listdir=[])
-    assert db.get_prefix("k") == want_prefix
-    assert calls["runs"] == 1 and calls["run_names"] == 2  # one attempt
-    assert data_dirs.isdisjoint(calls["stat"])
-    assert sorted(calls["listdir"]) == sorted(r.path for r in runs)
+        def stat(self, *a, **k):
+            calls["stat"].append(self.path)
+            return self._e.stat(*a, **k)
+
+        def __getattr__(self, attr):
+            return getattr(self._e, attr)
+
+    class Scan:
+        def __init__(self, p):
+            calls["scandir"] += 1
+            self._it = real_scandir(p)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._it.close()
+
+        def __iter__(self):
+            return (Entry(e) for e in self._it)
+
+    def count(read):
+        calls.update(runs=0, run_names=0, scandir=0, stat=[], listdir=[])
+        monkeypatch.setattr(Database, "runs", counted("runs", real_runs))
+        monkeypatch.setattr(Database, "run_names", counted("run_names", real_names))
+        monkeypatch.setattr(os, "stat", stat)
+        monkeypatch.setattr(os, "listdir", listdir)
+        monkeypatch.setattr(os, "scandir", Scan)
+        try:
+            return read()
+        finally:
+            monkeypatch.undo()
+
+    n = 0
+    for n_runs in (10, 200):
+        while n < n_runs - 3:
+            db.commit_rows([_u_row(f"k{n % 5}", T0 + n * NS, n)])
+            n += 1
+        while n < n_runs:
+            db.commit_deletes(
+                [{"wildcard": "k1", "after_ns": T0 + n * NS, "before_ns": T0 + n * NS + 1}]
+            )
+            n += 1
+        runs = db.runs()
+        assert len(runs) == n_runs
+        run_dirs = sorted(r.path for r in runs)
+        for read in (lambda: db.get("k1"), lambda: db.get_prefix("k", max_groups=n)):
+            want = read()  # warm
+            assert want
+            assert count(read) == want
+            assert calls["runs"] == 1 and calls["run_names"] == 2, n_runs
+            assert calls["scandir"] == 3, n_runs
+            assert calls["listdir"] == [], n_runs
+            assert sorted(calls["stat"]) == run_dirs, n_runs
+
+    new = db.commit_rows([_u_row("k1", T0 - NS, -1)])
+    count(lambda: db.get("k1"))
+    assert calls["listdir"] == [os.path.join(db.path, new)]
 
 
-def _commit_non_unique(db, rows):
-    """Publish ``rows`` as one run WITHOUT the ``_U`` marker, the way a
-    ``check_duplicates=False`` commit writes it: duplicate (key, ts)
-    rows may share the run. Spark-free."""
+def _write_run(db, run, rows, *, unique):
+    """Write ``rows`` as a bucketed run directory at ``run``, with the
+    ``_U`` marker when ``unique``. Spark-free."""
     import os
     import time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sonnerie_spark.bucketing import bucket_file_name, bucket_of, write_run_buckets
-    from sonnerie_spark.db import RUN_SUBDIR, arrow_record_schema
+    from sonnerie_spark.bucketing import (
+        bucket_file_name, bucket_of, write_run_buckets, write_run_unique,
+    )
+    from sonnerie_spark.db import arrow_record_schema
+
+    os.mkdir(run)
+    write_run_buckets(run, db.buckets)
+    if unique:
+        write_run_unique(run)
+    by_bucket: dict[int, list[dict]] = {}
+    for r in sorted(rows, key=lambda r: (r["key"], r["ts"])):
+        by_bucket.setdefault(bucket_of(r["key"], db.buckets), []).append(r)
+    nonce = f"{time.time_ns():016x}"
+    for b, rs in by_bucket.items():
+        pq.write_table(
+            pa.Table.from_pylist(rs, schema=arrow_record_schema()),
+            os.path.join(run, bucket_file_name(b, nonce)),
+        )
+
+
+def _commit_non_unique(db, rows):
+    """Publish ``rows`` as one run WITHOUT the ``_U`` marker, the way a
+    ``check_duplicates=False`` commit writes it: duplicate (key, ts)
+    rows may share the run. Spark-free; returns the run's name."""
+    import os
+
+    from sonnerie_spark.db import RUN_SUBDIR
+    from sonnerie_spark.fsutil import OwnedDir
+
+    with OwnedDir(db.path) as owner:
+        _write_run(db, os.path.join(owner.path, RUN_SUBDIR), rows, unique=False)
+        return db._atomic_rename(owner.path)
+
+
+def _republish(db, name, rows):
+    """Replace run ``name`` with a ``_U`` run of ``rows`` under the SAME
+    name, in compaction's swap order: write the new run under an owned
+    tmp dir, hide the old run as ``.tmp-old-*``, rename the new one into
+    the name, then rmtree the hidden one. The freed inode is usually
+    handed to the next republish's run directory. Spark-free."""
+    import os
+    import shutil
+    import time
+
+    from sonnerie_spark.db import RUN_SUBDIR
     from sonnerie_spark.fsutil import OwnedDir
 
     with OwnedDir(db.path) as owner:
         run = os.path.join(owner.path, RUN_SUBDIR)
-        os.mkdir(run)
-        write_run_buckets(run, db.buckets)
-        by_bucket: dict[int, list[dict]] = {}
-        for r in sorted(rows, key=lambda r: (r["key"], r["ts"])):
-            by_bucket.setdefault(bucket_of(r["key"], db.buckets), []).append(r)
-        nonce = f"{time.time_ns():016x}"
-        for b, rs in by_bucket.items():
-            pq.write_table(
-                pa.Table.from_pylist(rs, schema=arrow_record_schema()),
-                os.path.join(run, bucket_file_name(b, nonce)),
+        _write_run(db, run, rows, unique=True)
+        final = os.path.join(db.path, name)
+        hidden = os.path.join(db.path, f".tmp-old-{time.time_ns():016x}")
+        os.rename(final, hidden)
+        os.rename(run, final)
+        shutil.rmtree(hidden)
+
+
+def test_republish_under_a_reused_inode_is_seen(tmp_path):
+    """Two same-name republishes with no read between them usually
+    leave the name on the inode the handle cached (the first republish
+    frees it, the second's mkdir gets it back), over new files. The
+    listing must still classify the run again: a stale footer that says
+    "key c is not in this run" would open no file and drop rows. The
+    rounds repeat until the listed inode equals the cached one."""
+    import os
+
+    db = _local_db(tmp_path)
+    name = db.commit_rows([_u_row(k, T0 + i, 0) for k in ("a", "b") for i in range(3)])
+    model = {(k, T0 + i): _u_row(k, T0 + i, 0) for k in ("a", "b") for i in range(3)}
+
+    def check():
+        for k in ("a", "b", "c"):
+            assert db.get(k) == [model[kt] for kt in sorted(model) if kt[0] == k], k
+        assert db.get_prefix("") == [model[kt] for kt in sorted(model)]
+
+    reused = False
+    for rnd in range(1, 21):
+        check()  # warms the listing and the reader's caches
+        cached_ino = db._runs_cache[name][0][0]
+        for v in (2 * rnd, 2 * rnd + 1):
+            keys = ("a", "c") if v % 2 else ("b", "c")  # c: new to the run
+            rows = [_u_row(k, T0 + i, v) for k in keys for i in range(v % 3 + 1)]
+            _republish(db, name, rows)
+            model = {(r["key"], r["ts"]): r for r in rows}
+        reused = os.stat(os.path.join(db.path, name)).st_ino == cached_ino
+        check()
+        if reused:
+            break
+    if not reused:
+        pytest.skip("the filesystem reused no freed inode in 20 rounds")
+
+
+def test_compaction_republishes_are_seen_without_a_read_between(spark, tmp_path):
+    """Two lone-run minor compactions (each republishes the tx name),
+    then two major compactions of a ``main``-only database (each
+    republishes ``main``), with no read in between: ``get``,
+    ``get_prefix`` and ``read()`` see the last content."""
+    from pyspark.sql import functions as F
+
+    from sonnerie_spark.db import RECORD_SCHEMA
+
+    db = Database(spark, str(tmp_path / "db"), buckets=2)
+    db.commit_rows([_u_row(k, T0 + i, 0) for k in ("a", "b") for i in range(3)])
+
+    def rewrite(v, add):
+        def transform(df):
+            kept = df.filter(F.col("key") == "a").withColumn(
+                "v_long", F.array(F.lit(v).cast("long"))
             )
-        db._atomic_rename(owner.path)
+            new = spark.createDataFrame([_u_row(add, T0, v)], RECORD_SCHEMA)
+            return kept.select(*RECORD_SCHEMA.fieldNames()).unionByName(new)
+        return transform
+
+    def check(want):
+        assert db.get("a") == [_u_row("a", T0 + i, want[0]) for i in range(3)]
+        assert db.get("b") == []
+        assert db.get(want[1]) == [_u_row(want[1], T0, want[0])]
+        rows = db.get_prefix("")
+        assert rows == sorted(
+            [_u_row("a", T0 + i, want[0]) for i in range(3)]
+            + [_u_row(want[1], T0, want[0])],
+            key=lambda r: (r["key"], r["ts"]),
+        )
+        got = [
+            {f: r[f] for f in RECORD_SCHEMA.fieldNames()}
+            for r in db.read_sorted().collect()
+        ]
+        assert got == rows
+
+    (run,) = db.runs()
+    assert len(db.get("a")) == 3 and len(db.get_prefix("")) == 6  # warm
+    for v, add in ((1, "c"), (2, "d")):
+        assert db.compact(transform=rewrite(v, add)) == run.name
+    check((2, "d"))
+    db.compact(major=True)
+    check((2, "d"))  # warm on main
+    for v, add in ((3, "e"), (4, "f")):
+        assert db.compact(major=True, transform=rewrite(v, add)) == "main"
+    check((4, "f"))
 
 
 def test_non_unique_run_duplicates_against_other_runs(tmp_path):
@@ -818,6 +980,7 @@ try:
             "before_ns": st.sampled_from([2, 3, 5, 2**63 - 1]),
             "wildcard": st.sampled_from(["%", "a%", "b", "%c", "a b"]),
         })),
+        st.tuples(st.just("rewrite"), _unique_rows, st.integers(0, 6)),
     )
 
     @given(st.lists(_ops, min_size=1, max_size=7))
@@ -825,30 +988,67 @@ try:
     def test_point_reads_match_lww_model(history):
         """After every step of a random history of commits (commit_rows,
         strict and unsorted Transactions that spill, runs without
-        ``_U`` holding same-run duplicates) and delete markers (key
-        bounds, wildcards, ts windows), ``get``, ``get_many`` and
-        ``get_prefix``, with and without a ts window, equal a
-        pure-Python model: a dict of the live (key, ts) records that
-        every commit overwrites and every marker prunes. Spark-free."""
+        ``_U`` holding same-run duplicates), delete markers (key
+        bounds, wildcards, ts windows) and same-name republishes of a
+        data run with new content (compaction's swap), ``get``,
+        ``get_many`` and ``get_prefix``, with and without a ts window,
+        equal a pure-Python model: a dict of the live (key, ts) records,
+        folded from the runs in commit order — every data run
+        overwrites, every marker prunes what is older. Each republish
+        swaps the run twice, so the handle that reads after every step
+        still sees two republishes of one name between two reads. A
+        second handle reads only after the first step and at the end,
+        so it sees several. Spark-free."""
         import tempfile
 
         from sonnerie_spark.db import Transaction
 
-        model: dict[tuple[str, int], dict] = {}
+        log: list[list] = []  # [run name, marker or None, rows], commit order
 
-        def rows_of(pred, lo, hi):
-            return [
-                model[kt] for kt in sorted(model)
-                if pred(kt[0]) and (lo is None or kt[1] >= lo)
-                and (hi is None or kt[1] < hi)
-            ]
+        def hidden(m, key, ts):
+            return ((not m["first_key"] or key >= m["first_key"])
+                    and (not m["last_key"] or key < m["last_key"])
+                    and m["after_ns"] <= ts < m["before_ns"]
+                    and _model_like(m["wildcard"], key))
+
+        def fold():
+            model: dict[tuple[str, int], dict] = {}
+            for _name, marker, rows in log:
+                if marker is not None:
+                    for key, ts in [kt for kt in model if hidden(marker, *kt)]:
+                        del model[key, ts]
+                for r in rows:
+                    model[r["key"], r["ts"]] = r
+            return model
+
+        def check(db, model):
+            def rows_of(pred, lo, hi):
+                return [
+                    model[kt] for kt in sorted(model)
+                    if pred(kt[0]) and (lo is None or kt[1] >= lo)
+                    and (hi is None or kt[1] < hi)
+                ]
+
+            for lo, hi in _MODEL_WINDOWS:
+                w = dict(after_ns=lo, before_ns=hi)
+                for k in _MODEL_KEYS:
+                    assert db.get(k, **w) == rows_of(k.__eq__, lo, hi), (k, w)
+                assert db.get_many(["b", "zz", "a b"], **w) == {
+                    k: rows_of(k.__eq__, lo, hi) for k in ["b", "zz", "a b"]
+                }
+                for p in ["", "a", "b"]:
+                    assert db.get_prefix(p, **w) == rows_of(
+                        lambda k: k.startswith(p), lo, hi
+                    ), (p, w)
 
         with tempfile.TemporaryDirectory() as d:
             db = Database(None, d, buckets=2, durable=False)
-            for op in history:
+            late = Database(None, d, buckets=2, durable=False)
+            for step, op in enumerate(history):
                 kind, arg = op[0], op[1]
+                marker = None
                 if kind == "rows":
-                    db.commit_rows([dict(r) for r in arg])
+                    name = db.commit_rows([dict(r) for r in arg])
                 elif kind in ("strict", "unsorted"):
                     strict = kind == "strict"
                     tx = Transaction(db, strict_order=strict, spill_threshold=op[2])
@@ -856,31 +1056,30 @@ try:
                         lambda r: (r["ts"], r["key"]))  # keys interleaved
                     for r in sorted(arg, key=order):
                         tx.add_record(r["key"], r["ts"], "u", r["v_long"])
-                    tx.commit()
+                    name = tx.commit()
                 elif kind == "non_unique":
-                    _commit_non_unique(db, arg)
+                    name = _commit_non_unique(db, arg)
                     arg = sorted(arg, key=lambda r: r["v_long"])  # max payload last
+                elif kind == "rewrite":
+                    name = None
+                    data = [e for e in log if e[1] is None]
+                    if data:
+                        entry = data[op[2] % len(data)]
+                        # twice, as two compactions between two reads
+                        # would: the second usually gets the inode the
+                        # handles cached back
+                        _republish(db, entry[0], arg[:1])
+                        _republish(db, entry[0], arg)
+                        entry[2] = arg
                 else:
-                    db.commit_deletes([arg])
-                    for key, ts in list(model):
-                        if ((not arg["first_key"] or key >= arg["first_key"])
-                                and (not arg["last_key"] or key < arg["last_key"])
-                                and arg["after_ns"] <= ts < arg["before_ns"]
-                                and _model_like(arg["wildcard"], key)):
-                            del model[key, ts]
-                    arg = []
-                for r in arg:
-                    model[r["key"], r["ts"]] = r
-                for lo, hi in _MODEL_WINDOWS:
-                    w = dict(after_ns=lo, before_ns=hi)
-                    for k in _MODEL_KEYS:
-                        assert db.get(k, **w) == rows_of(k.__eq__, lo, hi), (k, w)
-                    assert db.get_many(["b", "zz", "a b"], **w) == {
-                        k: rows_of(k.__eq__, lo, hi) for k in ["b", "zz", "a b"]
-                    }
-                    for p in ["", "a", "b"]:
-                        assert db.get_prefix(p, **w) == rows_of(
-                            lambda k: k.startswith(p), lo, hi
-                        ), (p, w)
+                    name = db.commit_deletes([arg])
+                    marker, arg = arg, []
+                if name is not None:
+                    log.append([name, marker, arg])
+                model = fold()
+                check(db, model)
+                if step == 0:
+                    check(late, model)
+            check(late, model)
 except ImportError:  # pragma: no cover - hypothesis is in the image
     pass

@@ -32,3 +32,46 @@ def test_perfbench_trace_install_finds_every_hook():
         cwd=ROOT, capture_output=True, text=True, timeout=120,
     )
     assert r.returncode == 0, r.stderr
+
+
+def test_serve_get_goes_through_the_listing_hooks(tmp_path, monkeypatch):
+    """perfbench's ``db.listing`` span wraps ``Database.runs`` and
+    ``Database.run_names`` by name. A warm Spark-free GET through the
+    serve handler must still call both (one ``runs()`` and two
+    ``run_names()`` per read attempt), or a traced run reads 0 there
+    while the listing's time hides in the handler's self time."""
+    import http.client
+    import threading
+
+    from sonnerie_spark.db import Database
+    from sonnerie_spark.serve import make_server
+
+    db = Database(None, str(tmp_path / "db"), buckets=2, durable=False)
+    for ts in (1000, 2000):
+        db.commit_rows(
+            [{"key": "k", "ts": ts, "fmt": "u", "v_long": [ts],
+              "v_double": [], "v_str": [], "v_bin": []}]
+        )
+    calls = {"runs": 0, "run_names": 0}
+    for name in calls:
+        real = getattr(Database, name)
+
+        def counted(self, _real=real, _name=name):
+            calls[_name] += 1
+            return _real(self)
+
+        monkeypatch.setattr(Database, name, counted)
+    srv = make_server(db)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    c = http.client.HTTPConnection("127.0.0.1", srv.server_address[1], timeout=30)
+    try:
+        for _ in range(2):  # cold, then warm
+            calls.update(runs=0, run_names=0)
+            c.request("GET", "/k")
+            r = c.getresponse()
+            assert (r.status, r.read()) == (200, b"k\t1000\t1000\nk\t2000\t2000\n")
+        assert calls == {"runs": 1, "run_names": 2}
+    finally:
+        c.close()
+        srv.shutdown()
+        srv.server_close()

@@ -101,6 +101,7 @@ def main() -> None:
     stale = Database.__new__(Database)
     stale.spark, stale.path = spark, db.path
     stale._point_reader, stale._view_tables = None, {}
+    stale._runs_cache = {}
     stale.buckets = 32
     scnt = stale.read().count()
     assert scnt == expect, f"stale-handle count {scnt} != {expect}"
