@@ -53,10 +53,11 @@ import re
 import shutil
 import time
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from sonnerie_spark import rowformat
+from sonnerie_spark import pointread, rowformat
 from sonnerie_spark.fsutil import (
     OwnedDir,
     fsync_dir,
@@ -182,18 +183,63 @@ class DuplicateRecordError(CommitError):
 
 @dataclass(frozen=True)
 class RunInfo:
-    """One committed run as ``Database.runs()`` listed it. ``files``
-    and ``unique`` come from that same listing, so a consumer never
-    reads the run directory's layout again. ``runs()`` hands back the
-    same object for as long as the run directory is the same
-    incarnation, so a per-run cache may key its validity on identity
-    (``pointread.PointReader``)."""
+    """One committed run as ``Database.runs()`` listed it, and the only
+    owner of that run's immutable metadata: ``files`` and ``unique``
+    come from the listing; ``buckets``, ``footers``, ``bucket_index``
+    and ``markers`` are read once, on first use. ``runs()`` hands back
+    the same object while the run directory is the same incarnation
+    and drops it once the name is unlisted, so a warm read rereads
+    nothing and a handle keeps nothing of a run it no longer lists. A
+    property that raises (the run vanished) caches nothing; concurrent
+    first uses (serve threads share runs without a lock) at worst
+    compute a value twice."""
 
     name: str  # 'main' or 'tx.<016x>'
     path: str
     is_delete: bool
     files: tuple[str, ...] = ()  # sorted .parquet names
     unique: bool = False  # the _U duplicate-free marker is present
+
+    @cached_property
+    def buckets(self) -> int | None:
+        """The bucket count the run was written with (its ``_B``
+        marker, bucketing.py), or None for a legacy run."""
+        return read_run_buckets(self.path)
+
+    @cached_property
+    def footers(self) -> list[pointread.FileMeta]:
+        """A data run's footer statistics, one per file in ``files``
+        order."""
+        return [pointread.FileMeta(os.path.join(self.path, f)) for f in self.files]
+
+    @cached_property
+    def bucket_index(self) -> dict[int, list[pointread.FileMeta]] | None:
+        """``footers`` by bucket id, so an exact-key read opens only its
+        key's bucket file of the run; None when the run cannot be pruned
+        by bucket (no recorded ``buckets``, or a file without a bucket
+        id)."""
+        if self.buckets is None:
+            return None
+        index: dict[int, list[pointread.FileMeta]] = {}
+        for name, fm in zip(self.files, self.footers):
+            b = parse_bucket_id(name)
+            if b is None:
+                return None
+            index.setdefault(b, []).append(fm)
+        return index
+
+    @cached_property
+    def markers(self) -> list[dict]:
+        """A delete run's markers, each tagged with its ``_txname``; []
+        for a data run. Shared by every read: never mutate them."""
+        if not self.is_delete:
+            return []
+        import pyarrow.parquet as pq
+
+        rows = pq.read_table(os.path.join(self.path, "deletes.parquet")).to_pylist()
+        for row in rows:
+            row["_txname"] = self.name
+        return rows
 
 
 class Database:
@@ -216,7 +262,6 @@ class Database:
         self.spark = spark
         self.durable = bool(durable)
         self.path = os.path.abspath(path)
-        self._point_reader = None  # lazy PointReader (exact-key fast path)
         # run name -> ((st_ino, st_ctime_ns), RunInfo or None): runs()
         self._runs_cache: dict[str, tuple[tuple[int, int], RunInfo | None]] = {}
         self._view_tables: dict[str, str] = {}  # run-set sig -> table name
@@ -318,9 +363,11 @@ class Database:
         warm listing is one root scan plus one ``DirEntry.stat()`` per
         run: a run whose directory still has the cached
         ``(st_ino, st_ctime_ns)`` gets the cached ``RunInfo`` (or stays
-        skipped); only a new or republished run is listed again. The
-        inode alone is not enough: compaction republishes ``main`` and
-        the newest merged tx name, and the filesystem hands a freed
+        skipped); only a new or republished run is listed again, and an
+        unlisted name is dropped. Listings of unchanged runs thus return
+        the same objects, which ``pointread._consistent`` checks. The inode alone
+        is not enough: compaction republishes ``main`` and the newest
+        merged tx name, and the filesystem hands a freed
         inode straight back to the next ``mkdir`` (197 of 200 times on
         ext4), so two republishes between two listings can leave the
         same ``(name, inode)`` over new files. The new directory was
@@ -368,13 +415,12 @@ class Database:
         return out
 
     def run_names(self) -> list[str]:
-        """Cheap run-set fingerprint: the sorted top-level transaction
-        names, WITHOUT per-run classification (no second-level listdir).
-        Complete run dirs only ever appear/disappear via atomic renames,
-        so two equal fingerprints bracket a window with no commit or
-        compaction swap — the point reader's consistency probe.
-        ``DirEntry.is_dir()`` answers from the readdir d_type (following
-        symlinks like ``os.path.isdir``), so no entry is stat'ed."""
+        """The sorted top-level transaction names, WITHOUT per-run
+        classification: one root scan, no stat (``DirEntry.is_dir()``
+        answers from the readdir d_type, following symlinks like
+        ``os.path.isdir``). A count of runs for callers that need no
+        snapshot; the names alone cannot bracket a read, since a
+        same-name republish keeps them unchanged (``runs()`` does)."""
         return sorted(
             e.name
             for e in self._root_entries()
@@ -385,22 +431,14 @@ class Database:
         return [r for r in self.runs() if not r.is_delete]
 
     def delete_markers(self, runs: list["RunInfo"] | None = None) -> list[dict]:
-        """Load delete markers (tiny) to the driver, tagged with txname.
+        """The delete markers (tiny) of every delete run, tagged with
+        txname, from each run's ``RunInfo.markers`` (parsed once per
+        incarnation; do not mutate them).
 
         ``runs``: an already-taken run listing to read from — callers
-        holding a listing (the point reader's retry loop) pass it so one
-        snapshot serves the whole attempt and no second readdir runs."""
-        markers: list[dict] = []
-        for r in self.runs() if runs is None else runs:
-            if not r.is_delete:
-                continue
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(os.path.join(r.path, "deletes.parquet"))
-            for row in tbl.to_pylist():
-                row["_txname"] = r.name
-                markers.append(row)
-        return markers
+        holding a listing (a read's retry loop) pass it so one snapshot
+        serves the whole attempt and no second readdir runs."""
+        return [m for r in (self.runs() if runs is None else runs) for m in r.markers]
 
     # -- bucketed multi-run scan -------------------------------------------
 
@@ -416,7 +454,7 @@ class Database:
         the new B, so pruning by them would silently drop rows."""
         out: list[tuple[str, str]] = []
         for r in runs:
-            if read_run_buckets(r.path) != self.buckets:
+            if r.buckets != self.buckets:
                 return None
             for name in r.files:
                 b = parse_bucket_id(name)
@@ -808,18 +846,9 @@ class Database:
         (segment_reader.rs:173-234, ~15 ms random lookup). Wildcards and
         scans still use the Spark plan.
         """
-        return self._reader().get(
-            key, after_ns=after_ns, before_ns=before_ns
+        return pointread.get(
+            self, key, after_ns=after_ns, before_ns=before_ns
         ).to_pylist()
-
-    def _reader(self):
-        """The handle's lazily built ``PointReader`` (its caches live
-        as long as the handle; ``rebucket`` drops it)."""
-        if self._point_reader is None:
-            from sonnerie_spark.pointread import PointReader
-
-            self._point_reader = PointReader(self)
-        return self._point_reader
 
     def agg_series(
         self,
@@ -841,9 +870,7 @@ class Database:
         to the (identical-answer) Spark plan for every other state.
         Returns [{key, n, sum, min, max}] sorted by key.
         """
-        from sonnerie_spark.pointread import arrow_agg_series
-
-        fast = arrow_agg_series(
+        fast = pointread.arrow_agg_series(
             self, key=key, wildcard=wildcard, after_ns=after_ns,
             before_ns=before_ns, value_index=value_index,
         )
@@ -887,34 +914,28 @@ class Database:
         (run listing, footers, and delete markers amortized across the
         batch — the point-read analogue of ``read(keys=[...])``)."""
         out: dict[str, list[dict]] = {k: [] for k in keys}
-        tbl = self._reader().get_many(keys, after_ns=after_ns, before_ns=before_ns)
+        tbl = pointread.get_many(self, keys, after_ns=after_ns, before_ns=before_ns)
         for r in tbl.to_pylist():
             out[r["key"]].append(r)
         return out
 
     def stats(self) -> dict:
         """Operational database report from parquet footers alone — no
-        Spark job, O(runs) metadata reads (the cost of one directory
-        listing plus cached footers). Keys: per-run name/files/rows/
-        bytes, totals, delete-marker count, bucket count.
+        Spark job: one listing, each run's cached footers and markers
+        (``RunInfo``), and one stat per file for its size. Keys: per-run
+        name/files/rows/bytes, totals, delete-marker count, bucket count.
 
         An extension (the reference has no introspection command); the
         numbers mirror what its users reconstruct with `ls` + dump."""
-        import pyarrow.parquet as pq
-
+        listed = self.runs()
         runs = []
         total_rows = 0
         total_bytes = 0
-        n_markers = 0
-        for r in self.runs():
+        for r in listed:
             if r.is_delete:
-                n_markers += len(self.delete_markers([r]))
                 continue
-            rows = nbytes = 0
-            for name in r.files:
-                p = os.path.join(r.path, name)
-                nbytes += os.stat(p).st_size
-                rows += pq.ParquetFile(p).metadata.num_rows
+            rows = sum(fm.num_rows for fm in r.footers)
+            nbytes = sum(os.stat(fm.path).st_size for fm in r.footers)
             runs.append(
                 {"name": r.name, "files": len(r.files), "rows": rows,
                  "bytes": nbytes}
@@ -926,7 +947,7 @@ class Database:
             "n_runs": len(runs),
             "total_rows": total_rows,
             "total_bytes": total_bytes,
-            "delete_markers": n_markers,
+            "delete_markers": len(self.delete_markers(listed)),
             "buckets": self.buckets,
         }
 
@@ -942,7 +963,8 @@ class Database:
         pyarrow like :meth:`get`, bounded by row-group count — returns
         ``None`` when the match is too large, signalling the caller to
         use the distributed :meth:`read` plan instead."""
-        tbl = self._reader().get_range(
+        tbl = pointread.get_range(
+            self,
             prefix,
             prefix_upper_bound(prefix),
             after_ns=after_ns,
@@ -967,12 +989,12 @@ class Database:
         budget."""
         kf = analyze_wildcard(pattern)
         if kf.exact is not None:
-            return self._reader().get(
-                kf.exact, after_ns=after_ns, before_ns=before_ns
+            return pointread.get(
+                self, kf.exact, after_ns=after_ns, before_ns=before_ns
             )
         if kf.prefix and not kf.needs_like:
-            return self._reader().get_range(
-                kf.prefix, prefix_upper_bound(kf.prefix),
+            return pointread.get_range(
+                self, kf.prefix, prefix_upper_bound(kf.prefix),
                 after_ns=after_ns, before_ns=before_ns,
             )
         return None
@@ -1316,7 +1338,6 @@ class Database:
         with store_lock(self.path, ".commitlock"):
             self._write_json(BUCKETS_FILE, new_buckets)
         self.buckets = new_buckets
-        self._point_reader = None  # cached reader carries the old B
 
     def compact(self, *, major: bool = False, transform=None, max_runs: int = 1000) -> str | None:
         """Merge runs into one (O15), optionally through a transform (O16).

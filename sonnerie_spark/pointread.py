@@ -17,37 +17,36 @@ lookup is a binary search over mmap'ed segment headers
 key ranges and analytics keep the Spark plan; an exact key or a pure
 prefix (optionally with a time range) takes this path.
 
-Every read here — ``get``, ``get_many``, the prefix read and the Arrow
-``agg_series`` fold — runs inside one bracket (``_consistent``): run-set
-fingerprint, ONE ``Database.runs()`` listing, the attempt, a closing
-fingerprint probe, retried on a race. The attempt reads only what that
-listing names; a cached footer or marker entry stays valid while the
-listing hands back the same ``RunInfo`` object, so a warm read lists or
-stats no run directory beyond the listing's own check and reads no
-footer or marker file again.
+Every read here — ``get``, ``get_many``, ``get_range`` and the Arrow
+``agg_series`` fold — runs inside one bracket (``_consistent``): ONE
+``Database.runs()`` listing, the attempt, a closing listing that must
+hand back the same run incarnations, retried on a race. The attempt
+reads only what that listing names, and everything it needs of a run
+beyond its data — footer statistics, bucket index, delete markers — is
+read once per incarnation and held by the listed ``RunInfo``. The module
+holds no state of its own.
 
 Scale note: the fast path reads only footer statistics and delete
-markers (both cached per run) plus the pruned row groups. A warm
-listing is three root scans and one ``stat`` per run directory (the
-incarnation check in ``Database.runs``), no per-run ``listdir``; then
-O(selectivity) data — on a compacted DB that is one file open and
-usually one row group. It runs on
-whatever process calls it (driver or serve worker); it never loads a
-run's full data.
+markers (both cached on the run) plus the pruned row groups. A warm
+read is two root scans and two ``stat`` calls per run directory (the
+incarnation check in ``Database.runs``), no per-run ``listdir``, one
+bucket-index lookup per run; then O(selectivity) data — on a compacted
+DB that is one file open and usually one row group. It runs on whatever
+process calls it (driver or serve worker); it never loads a run's full
+data.
 """
 
 from __future__ import annotations
 
 import bisect
 import os
-from typing import Any
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-from sonnerie_spark.bucketing import bucket_of, parse_bucket_id, read_run_buckets
+from sonnerie_spark.bucketing import bucket_of
 from sonnerie_spark.plans.keyfilter import (
     analyze_wildcard,
     prefix_upper_bound,
@@ -55,8 +54,9 @@ from sonnerie_spark.plans.keyfilter import (
 )
 
 
-class _FileMeta:
-    """One run file: row-group count + per-row-group key/ts min/max.
+class FileMeta:
+    """One run file's footer statistics: row counts and per-row-group
+    key/ts min/max.
 
     Row groups are (key, ts)-sorted at write time, so the per-group
     [min_key, max_key] intervals are non-overlapping and sorted — a
@@ -64,24 +64,18 @@ class _FileMeta:
     hundreds of) statistics objects per lookup. Only these plain lists
     are kept (a few KB per run), not the Parquet footer object or an
     open file: a read opens the file for just its own row groups.
+    ``RunInfo.footers`` holds one per file of a listed run.
     """
 
     __slots__ = (
-        "path", "num_row_groups", "mins", "maxs", "ts_mins", "ts_maxs",
-        "bucket", "run_b",
+        "path", "num_rows", "num_row_groups", "mins", "maxs", "ts_mins", "ts_maxs",
     )
 
-    def __init__(self, path: str, md: Any, run_b: int | None = None):
+    def __init__(self, path: str):
+        md = pq.read_metadata(path)
         self.path = path
+        self.num_rows = md.num_rows
         self.num_row_groups = md.num_row_groups
-        # bucket id from the file name (bucketing.py layout), paired with
-        # the RUN's recorded bucket count: lets an exact-key lookup skip
-        # every file of the other B-1 buckets before touching footer
-        # stats. Pruning uses the run's OWN B (valid even mid-rebucket /
-        # from a stale handle whose db.buckets differs); files whose run
-        # has no recorded B are never pruned.
-        self.bucket = parse_bucket_id(os.path.basename(path))
-        self.run_b = run_b
         arrow_schema = md.schema.to_arrow_schema()
         key_idx = arrow_schema.get_field_index("key")
         ts_idx = arrow_schema.get_field_index("ts")
@@ -169,7 +163,7 @@ class _FileMeta:
         ]
 
 
-# Lost attempts a read outlasts. The closing probe fails on every plain
+# Lost attempts a read outlasts. The closing listing fails on every plain
 # commit too, and a retry starts right after the commit it lost to, so a
 # writer committing back-to-back (a PUT streak on another serve
 # connection, each PUT about as long as one attempt) beats attempt after
@@ -183,278 +177,197 @@ def _consistent(db, attempt):
     is one committed snapshot — the retry loop every Spark-free read
     shares (point, batch and prefix GETs, the Arrow fold).
 
-    Each try takes the cheap ``run_names`` fingerprint, then ONE
-    ``runs()`` listing, which the attempt reads from alone (file names,
-    uniqueness marker and delete runs included — no second listing, no
-    stat of a run beyond the listing's own incarnation check), then
-    probes the fingerprint again. ``runs()`` returns the cached
-    ``RunInfo`` of every run whose directory is the same incarnation
-    (``(st_ino, st_ctime_ns)``), so the reader's caches are valid while
-    the listed object is the one they were filled from. Complete
-    run dirs appear and disappear only by atomic renames, so an
-    unchanged fingerprint brackets a window with no commit or compaction
-    swap. Two race shapes retry on a fresh listing:
+    Each try takes ONE ``runs()`` listing, which the attempt reads from
+    alone (its files, uniqueness marker, footers and delete markers all
+    hang off the listed ``RunInfo`` objects), then lists again and
+    accepts only if the closing listing hands back the very same
+    objects. ``runs()`` returns one ``RunInfo`` per incarnation of a
+    run directory (``(st_ino, st_ctime_ns)``), and complete run dirs
+    appear, disappear and are republished only by atomic renames, so
+    an unchanged listing brackets a window with no commit and no
+    compaction swap. Two race shapes retry on a fresh listing:
 
     - a listed run or file vanishing mid-read (a compaction hide, or a
       same-name republish, which rmtrees the old incarnation): the
       attempt raises OSError;
     - a listing taken INSIDE a swap window, seeing neither the old runs
-      nor the merged result: the closing probe differs.
+      nor the merged result — including the hide window of a lone
+      run's same-name republish, where the names come back unchanged:
+      the closing listing holds a different incarnation.
 
     The attempt reads delete markers inside the bracket too: a major
     compaction purges them while merged rows may still be
-    pre-compaction, so markers read after the probe could resurrect
-    deleted records — a snapshot that never existed."""
+    pre-compaction, so markers read after the closing listing could
+    resurrect deleted records — a snapshot that never existed."""
     err = None
     for _attempt in range(_MAX_ATTEMPTS):
-        fingerprint = db.run_names()
         runs = db.runs()
         try:
             result = attempt(runs)
         except OSError as e:
             err = e
             continue
-        if db.run_names() == fingerprint:
+        after = db.runs()
+        if len(after) == len(runs) and all(a is b for a, b in zip(after, runs)):
             return result
     raise RuntimeError("read kept racing commits and compaction swaps") from err
 
 
-class PointReader:
-    """Exact-key reads over a Database without Spark jobs.
+def _key_files(keys):
+    """``files(run)``: the ``FileMeta`` of each file of a listed data run
+    that may hold one of ``keys``. On a bucketed run that is the keys'
+    own bucket files, looked up in the run's bucket index (the
+    driver-side mirror of Spark's bucket pruning), computed against the
+    run's RECORDED bucket count, never the handle's — correct
+    mid-rebucket and from stale handles. A run without an index yields
+    every file."""
+    wanted: dict[int, list[int]] = {}  # run B -> the keys' bucket ids
 
-    Every read is one ``_consistent`` bracket over one run listing. Two
-    per-run caches, keyed by run path, hold no open file:
+    def files(run):
+        index = run.bucket_index
+        if index is None:
+            return run.footers
+        bs = wanted.get(run.buckets)
+        if bs is None:
+            bs = wanted[run.buckets] = sorted({bucket_of(k, run.buckets) for k in keys})
+        return [fm for b in bs for fm in index.get(b, ())]
 
-    - ``_footers``: footer statistics of a data run;
-    - ``_markers``: the parsed rows of a delete run.
+    return files
 
-    An entry is ``(files, value)``, where ``files`` is the ``files``
-    tuple of the ``RunInfo`` it was filled from. It is valid while the
-    listing hands back that same tuple object (``cached[0] is
-    run.files``). ``Database.runs`` builds a fresh tuple each time it
-    classifies a run (all runs with no file share ``()``, and so their
-    empty footer list) and returns the cached ``RunInfo`` while the run
-    directory is the same incarnation, so a run republished under the
-    same name (compaction keeps ``main`` and the newest tx name) always
-    misses, and a hit costs no stat of its own. Entries of runs that
-    are no longer listed are evicted when the caches hold more runs
-    than the listing.
 
-    Cached marker dicts are shared between reads and must not be
-    mutated.
+def get(
+    db,
+    key: str,
+    *,
+    after_ns: int | None = None,
+    before_ns: int | None = None,
+) -> pa.Table:
+    """All surviving records of one key as a ts-ascending ``pa.Table``.
+
+    Semantics identical to ``Database.read(key=...)``: last-writer-wins
+    across runs (merge.rs:17-26) then delete-marker suppression with
+    txid scoping (database_reader.rs:474-518). Per run, only the key's
+    own bucket file is opened (``_key_files``)."""
+    return _merge(
+        db,
+        _key_files([key]),
+        lambda fm: fm.groups_for(key, after_ns, before_ns),
+        lambda tbl: tbl.filter(pc.equal(tbl.column("key"), key)),
+        after_ns=after_ns,
+        before_ns=before_ns,
+    )
+
+
+def get_many(
+    db,
+    keys: list[str],
+    *,
+    after_ns: int | None = None,
+    before_ns: int | None = None,
+) -> pa.Table:
+    """Batch exact-key lookup: one merge pass over the UNION of the keys'
+    row groups, amortizing the run listing, footer reads, and
+    delete-marker load across the whole batch (a loop over ``get``
+    repeats all three per key). Returns one (key, ts)-sorted
+    ``pa.Table``."""
+    kset = sorted(set(keys))
+    arr = pa.array(kset)
+
+    def groups(fm):
+        gs: set[int] = set()
+        for k in kset:
+            gs.update(fm.groups_for(k, after_ns, before_ns))
+        return sorted(gs)
+
+    return _merge(
+        db,
+        _key_files(kset),
+        groups,
+        lambda tbl: tbl.filter(pc.is_in(tbl.column("key"), value_set=arr)),
+        after_ns=after_ns,
+        before_ns=before_ns,
+    )
+
+
+def get_range(
+    db,
+    lo: str,
+    hi: str | None,
+    *,
+    after_ns: int | None = None,
+    before_ns: int | None = None,
+    max_groups: int = 64,
+) -> pa.Table | None:
+    """Surviving records with ``lo <= key < hi`` as a (key, ts)-sorted
+    ``pa.Table`` — the prefix-wildcard fast path (e.g. serve GET
+    ``fib%``).
+
+    Returns ``None`` when more than ``max_groups`` row groups match: the
+    result is then large enough that the distributed Spark plan is the
+    right tool, and the caller falls back to it. The cap bounds driver
+    memory AND keeps this path's latency in the point-read class
+    regardless of the pattern a client sends.
     """
 
-    def __init__(self, db):
-        self.db = db
-        self._footers: dict[str, tuple[tuple[str, ...], list[_FileMeta]]] = {}
-        self._markers: dict[str, tuple[int, list[dict]]] = {}
+    def flt(tbl):
+        keep = pc.greater_equal(tbl.column("key"), lo)
+        if hi is not None:
+            keep = pc.and_(keep, pc.less(tbl.column("key"), hi))
+        return tbl.filter(keep)
 
-    # -- caches ------------------------------------------------------------
+    return _merge(
+        db,
+        lambda run: run.footers,
+        lambda fm: fm.groups_for_range(lo, hi, after_ns, before_ns),
+        flt,
+        after_ns=after_ns,
+        before_ns=before_ns,
+        max_groups=max_groups,
+    )
 
-    def _evict_stale_footers(self, all_runs) -> None:
-        """Evict footer- and marker-cache entries for runs no longer
-        listed (``all_runs`` must be the FULL listing, data and delete
-        runs). A compacted-away run's path is never looked up again, so
-        without this a long-lived reader (the serve process) grows its
-        caches by one entry for every transaction ever replaced. A read
-        that has filled an entry for every listed run leaves more
-        entries than runs only when some listed name has gone, so the
-        pass runs only then (``_read_once``).
 
-        Thread-shape: serve handlers share one PointReader with no
-        lock, so snapshot the key set in one C-level op (list(dict) —
-        atomic under the GIL) instead of iterating the live dict while
-        another handler inserts, and pop() tolerates a concurrent
-        eviction of the same key."""
-        live = {r.path for r in all_runs}
-        for cache in (self._footers, self._markers):
-            for stale in [p for p in list(cache) if p not in live]:
-                cache.pop(stale, None)
+def _merge(
+    db, files_fn, groups_fn, filter_fn, *, after_ns, before_ns, max_groups=None,
+) -> pa.Table | None:
+    """Read one snapshot and merge it: a (key, ts)-sorted table of the
+    surviving records, or None when more than ``max_groups`` row groups
+    match."""
+    read = _consistent(
+        db,
+        lambda runs: _read_once(db, runs, files_fn, groups_fn, filter_fn, max_groups),
+    )
+    if read is None:
+        return None
+    tables, markers = read
+    return _merge_tables(tables, markers, after_ns, before_ns)
 
-    def _run_footers(self, run) -> list[_FileMeta]:
-        """Footer statistics of one listed data run, one ``_FileMeta``
-        per file. OSError propagates: the run was replaced under us."""
-        cached = self._footers.get(run.path)
-        if cached is not None and cached[0] is run.files:
-            return cached[1]
-        run_b = read_run_buckets(run.path)
-        metas = []
-        for name in run.files:
-            p = os.path.join(run.path, name)
-            metas.append(_FileMeta(p, pq.read_metadata(p), run_b))
-        self._footers[run.path] = (run.files, metas)
-        return metas
 
-    def _run_markers(self, run) -> list[dict]:
-        """The delete markers of one delete run, parsed once per listed
-        incarnation through ``Database.delete_markers``. OSError
-        propagates: the run was purged under us."""
-        cached = self._markers.get(run.path)
-        if cached is not None and cached[0] is run.files:
-            return cached[1]
-        rows = self.db.delete_markers([run])
-        self._markers[run.path] = (run.files, rows)
-        return rows
-
-    # -- point read --------------------------------------------------------
-
-    def get(
-        self,
-        key: str,
-        *,
-        after_ns: int | None = None,
-        before_ns: int | None = None,
-    ) -> pa.Table:
-        """All surviving records of one key as a ts-ascending ``pa.Table``.
-
-        Semantics identical to ``Database.read(key=...)``: last-writer-
-        wins across runs (merge.rs:17-26) then delete-marker suppression
-        with txid scoping (database_reader.rs:474-518). On a bucketed
-        layout only the key's own bucket file is opened per run (1/B of
-        the footers — the driver-side mirror of Spark's bucket pruning).
-        Pruning is computed against each run's RECORDED bucket count,
-        never the handle's — correct mid-rebucket and from stale handles.
-        """
-        want: dict[int, int] = {}  # run B -> bucket_of(key, B), memoized
-
-        def file_ok(fm):
-            if fm.bucket is None or fm.run_b is None:
-                return True
-            b = want.get(fm.run_b)
-            if b is None:
-                b = want[fm.run_b] = bucket_of(key, fm.run_b)
-            return fm.bucket == b
-
-        return self._merge(
-            lambda fm: fm.groups_for(key, after_ns, before_ns),
-            lambda tbl: tbl.filter(pc.equal(tbl.column("key"), key)),
-            after_ns=after_ns,
-            before_ns=before_ns,
-            file_ok=file_ok,
-        )
-
-    def get_many(
-        self,
-        keys: list[str],
-        *,
-        after_ns: int | None = None,
-        before_ns: int | None = None,
-    ) -> pa.Table:
-        """Batch exact-key lookup: one merge pass over the UNION of the
-        keys' row groups, amortizing the run listing, footer reads, and
-        delete-marker load across the whole batch (a loop over ``get``
-        repeats all three per key). Returns one (key, ts)-sorted
-        ``pa.Table``."""
-        kset = sorted(set(keys))
-        arr = pa.array(kset)
-        buckets: dict[int, set[int]] = {}  # run B -> wanted bucket ids
-
-        def file_ok(fm):
-            if fm.bucket is None or fm.run_b is None:
-                return True
-            bs = buckets.get(fm.run_b)
-            if bs is None:
-                bs = buckets[fm.run_b] = {bucket_of(k, fm.run_b) for k in kset}
-            return fm.bucket in bs
-
-        def groups(fm):
-            gs: set[int] = set()
-            for k in kset:
-                gs.update(fm.groups_for(k, after_ns, before_ns))
-            return sorted(gs)
-
-        return self._merge(
-            groups,
-            lambda tbl: tbl.filter(pc.is_in(tbl.column("key"), value_set=arr)),
-            after_ns=after_ns,
-            before_ns=before_ns,
-            file_ok=file_ok,
-        )
-
-    def get_range(
-        self,
-        lo: str,
-        hi: str | None,
-        *,
-        after_ns: int | None = None,
-        before_ns: int | None = None,
-        max_groups: int = 64,
-    ) -> pa.Table | None:
-        """Surviving records with ``lo <= key < hi`` as a (key, ts)-sorted
-        ``pa.Table`` — the prefix-wildcard fast path (e.g. serve GET
-        ``fib%``).
-
-        Returns ``None`` when more than ``max_groups`` row groups match:
-        the result is then large enough that the distributed Spark plan
-        is the right tool, and the caller falls back to it. The cap
-        bounds driver memory AND keeps this path's latency in the
-        point-read class regardless of the pattern a client sends.
-        """
-
-        def flt(tbl):
-            keep = pc.greater_equal(tbl.column("key"), lo)
-            if hi is not None:
-                keep = pc.and_(keep, pc.less(tbl.column("key"), hi))
-            return tbl.filter(keep)
-
-        return self._merge(
-            lambda fm: fm.groups_for_range(lo, hi, after_ns, before_ns),
-            flt,
-            after_ns=after_ns,
-            before_ns=before_ns,
-            max_groups=max_groups,
-        )
-
-    def _merge(
-        self, groups_fn, filter_fn, *, after_ns, before_ns, file_ok=None,
-        max_groups=None,
-    ) -> pa.Table | None:
-        """Read one snapshot and merge it: a (key, ts)-sorted table of
-        the surviving records, or None when more than ``max_groups`` row
-        groups match."""
-        read = _consistent(
-            self.db,
-            lambda runs: self._read_once(
-                runs, groups_fn, filter_fn, file_ok, max_groups
-            ),
-        )
-        if read is None:
-            return None
-        tables, markers = read
-        return _merge_tables(tables, markers, after_ns, before_ns)
-
-    def _read_once(self, runs, groups_fn, filter_fn, file_ok, max_groups):
-        """One attempt over the listed ``runs``: ``(tables, markers)`` —
-        ``(run name, run is _U, filtered arrow table)`` per read file in
-        commit order, and the delete markers — or None when more than
-        ``max_groups`` row groups match. Every row group is picked from
-        the footers before any is read, so an over-budget prefix read
-        decodes nothing and stops at the first footer past the budget."""
-        budget = float("inf") if max_groups is None else max_groups
-        plan = []  # (run, file path, row groups), commit order
-        for run in runs:  # lexical order == commit order
-            if run.is_delete:
-                continue
-            for fm in self._run_footers(run):
-                if file_ok is None or file_ok(fm):
-                    groups = groups_fn(fm)
-                    if groups:
-                        budget -= len(groups)
-                        if budget < 0:
-                            return None
-                        plan.append((run, fm.path, groups))
-        tables = []
-        for run, path, groups in plan:
-            with pq.ParquetFile(path) as pf:
-                tbl = filter_fn(pf.read_row_groups(groups))
-            if tbl.num_rows:
-                tables.append((run.name, run.unique, tbl))
-        markers = [
-            m for run in runs if run.is_delete for m in self._run_markers(run)
-        ]
-        if len(self._footers) + len(self._markers) > len(runs):
-            self._evict_stale_footers(runs)
-        return tables, markers
+def _read_once(db, runs, files_fn, groups_fn, filter_fn, max_groups):
+    """One attempt over the listed ``runs``: ``(tables, markers)`` —
+    ``(run name, run is _U, filtered arrow table)`` per read file in
+    commit order, and the delete markers — or None when more than
+    ``max_groups`` row groups match. Every row group is picked from the
+    footers before any is read, so an over-budget prefix read decodes
+    nothing and stops at the first footer past the budget."""
+    budget = float("inf") if max_groups is None else max_groups
+    plan = []  # (run, file path, row groups), commit order
+    for run in runs:  # lexical order == commit order
+        if run.is_delete:
+            continue
+        for fm in files_fn(run):
+            groups = groups_fn(fm)
+            if groups:
+                budget -= len(groups)
+                if budget < 0:
+                    return None
+                plan.append((run, fm.path, groups))
+    tables = []
+    for run, path, groups in plan:
+        with pq.ParquetFile(path) as pf:
+            tbl = filter_fn(pf.read_row_groups(groups))
+        if tbl.num_rows:
+            tables.append((run.name, run.unique, tbl))
+    return tables, db.delete_markers(runs)
 
 
 def _merge_tables(tables, markers, after_ns, before_ns):

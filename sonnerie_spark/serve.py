@@ -21,11 +21,12 @@ row-group budget, streams the Spark plan's rows through
 The reference keeps a 10-s-TTL cached ``DatabaseReader`` to amortize
 readdir+mmap (sonnerie-serve.rs:239-265). No analogous cache exists
 here ON PURPOSE: the run listing still runs on every GET, inside the
-point reader or ``Database.read``. Only immutable per-run metadata is cached
-(``PointReader``): Parquet footer statistics, valid while the run's
-listed file names are unchanged, and parsed delete markers, keyed by
-run path + mtime. A committed write is visible to the very next GET —
-there is no staleness window to tune.
+point read's bracket or ``Database.read``. Only immutable per-run
+metadata is cached, on the ``RunInfo`` that ``Database.runs()`` hands
+back while the run directory is the same incarnation: its bucket
+count, Parquet footer statistics and parsed delete markers. A
+committed write is visible to the very next GET — there is no
+staleness window to tune.
 
 Sockets: every accepted connection sets ``TCP_NODELAY``. A response
 goes out in several ``send`` calls (status + headers, then the body

@@ -5,6 +5,10 @@ equivalence, tests.rs:726-785): db.get(key) vs db.read(key=...) on a DB
 with multiple runs, LWW overwrites, delete markers, and compaction.
 """
 
+import gc
+import os
+import weakref
+
 import pytest
 
 from sonnerie_spark.db import Database
@@ -84,30 +88,50 @@ def test_point_read_after_compaction_and_footer_cache(db):
     assert _norm(_point_rows(db, "zeta")) == _norm(_spark_rows(db, "zeta"))
 
 
+def _cached(run, attr):
+    """Has ``run`` (a listed ``RunInfo``) read and kept ``attr``?"""
+    return attr in vars(run)
+
+
+def _refs(runs):
+    """Weak references to ``runs``: one that dies shows the handle holds
+    nothing of that run any more (its footers and markers lived on it)."""
+    return [weakref.ref(r) for r in runs]
+
+
+def _all_dead(refs):
+    gc.collect()
+    return all(r() is None for r in refs)
+
+
 def test_footer_cache_evicts_replaced_runs(db):
-    """Footer-cache entries for compacted-away runs must be EVICTED on
-    the next read: a replaced run's path is never looked up again, so a
-    long-lived serve process would otherwise grow its memory by one
-    entry for every replaced transaction."""
+    """Footers of compacted-away runs must be DROPPED by the next read:
+    a replaced run is never listed again, so a long-lived serve process
+    would otherwise grow its memory by one run's footers for every
+    replaced transaction. The footers live on the listed ``RunInfo``,
+    so the handle holds them only while it lists the run."""
     _seed(db)
-    db.get("beta")  # warm: one footer entry per data run
-    pr = db._point_reader
-    n_runs = len(db.data_runs())
-    assert len(pr._footers) == n_runs > 1
-    old_paths = set(pr._footers)
+    db.get("beta")  # warm: footers on every data run
+    n_runs = sum(_cached(r, "footers") for r in db.runs())
+    assert n_runs == len(db.data_runs()) > 1
+    old = _refs(db.runs())
     db.compact(major=True)
     db.get("beta")  # post-compaction read reconciles the cache
-    assert set(pr._footers).isdisjoint(old_paths)
-    assert len(pr._footers) == len(db.data_runs()) == 1
+    assert _all_dead(old)
+    (main,) = db.data_runs()
+    assert _cached(main, "footers") and len(db.runs()) == 1
+    del main
     # prefix fast path reconciles too
     db.commit_rows(
         [{"key": "beta", "ts": 999, "fmt": "u", "v_long": [1],
           "v_double": [], "v_str": [], "v_bin": []}]
     )
     db.get_prefix("bet")
+    old = _refs(db.runs())
     db.compact(major=True)
     db.get_prefix("bet")
-    assert len(pr._footers) == 1
+    assert _all_dead(old)
+    assert [_cached(r, "footers") for r in db.runs()] == [True]
 
 
 def _local_db(tmp_path):
@@ -131,17 +155,23 @@ def test_delete_markers_parsed_once_per_run(tmp_path, monkeypatch):
         db.commit_deletes(
             [{"wildcard": "k", "after_ns": T0 + i * NS, "before_ns": T0 + i * NS + 1}]
         )
-    parsed = []  # marker runs parsed per delete_markers call
-    real = Database.delete_markers
+    import pyarrow.parquet as pq
 
-    def counting(self, runs=None):
-        parsed.append(sum(r.is_delete for r in (runs or self.runs())))
-        return real(self, runs)
+    parsed = []  # every deletes.parquet read
+    real = pq.read_table
 
-    monkeypatch.setattr(Database, "delete_markers", counting)
+    def counting(source, *a, **kw):
+        if os.path.basename(source) == "deletes.parquet":
+            parsed.append(source)
+        return real(source, *a, **kw)
+
+    monkeypatch.setattr(pq, "read_table", counting)
     for _ in range(5):
         assert [r["ts"] for r in db.get("k")] == [T0 + i * NS for i in range(k, 10)]
-    assert sum(parsed) == k  # not 5 * k
+    assert len(parsed) == k  # not 5 * k
+    assert sorted(parsed) == sorted(
+        os.path.join(r.path, "deletes.parquet") for r in db.runs() if r.is_delete
+    )
 
 
 def test_marker_cache_sees_new_delete_on_next_get(tmp_path):
@@ -157,7 +187,7 @@ def test_marker_cache_sees_new_delete_on_next_get(tmp_path):
 
 
 def test_marker_cache_concurrent_readers_see_monotone_snapshots(tmp_path):
-    """Serve handlers share one PointReader without a lock. Readers on
+    """Serve handlers share one handle without a lock. Readers on
     more threads than cores, racing a writer that deletes one ts per
     commit, must each see a committed snapshot (records j..9) and never
     an older one than they saw before."""
@@ -203,7 +233,7 @@ def test_marker_cache_concurrent_readers_see_monotone_snapshots(tmp_path):
 
 def test_point_read_outlasts_a_commit_streak(tmp_path, monkeypatch):
     """Every commit that lands inside a point-read attempt fails the
-    attempt's closing run-set probe. A writer committing back-to-back
+    attempt's closing run listing. A writer committing back-to-back
     (a PUT streak on another serve connection) must delay the read, not
     fail it, and the answer is the state after the streak."""
     db = _local_db(tmp_path)
@@ -211,16 +241,16 @@ def test_point_read_outlasts_a_commit_streak(tmp_path, monkeypatch):
     db.get("k")  # warm the footer cache
     streak = 10
     probes = []
-    real = Database.run_names
+    real = Database.runs
 
     def racing(self):
         probes.append(None)
-        # even calls are an attempt's closing probe: a commit beats it
+        # even calls are an attempt's closing listing: a commit beats it
         if len(probes) % 2 == 0 and len(probes) <= 2 * streak:
             self.commit_rows([_u_row("k", T0 + (100 + len(probes)) * NS, 7)])
         return real(self)
 
-    monkeypatch.setattr(Database, "run_names", racing)
+    monkeypatch.setattr(Database, "runs", racing)
     rows = db.get("k")
     assert len(probes) == 2 * (streak + 1)  # streak lost attempts + 1
     assert [r["v_long"][0] for r in rows] == [0, 1, 2] + [7] * streak
@@ -229,13 +259,14 @@ def test_point_read_outlasts_a_commit_streak(tmp_path, monkeypatch):
 def test_marker_cache_evicts_markers_purged_by_compaction(db):
     _seed(db)
     before = {k: _norm(_point_rows(db, k)) for k in ("alpha", "zeta")}
-    pr = db._point_reader
-    marker_paths = {r.path for r in db.runs() if r.is_delete}
-    assert set(pr._markers) == marker_paths != set()
+    dels = [r for r in db.runs() if r.is_delete]
+    assert dels and all(_cached(r, "markers") for r in dels)
+    old = _refs(dels)
+    del dels
     db.compact(major=True)  # purges the marker run from disk
     assert not any(r.is_delete for r in db.runs())
     after = {k: _norm(_point_rows(db, k)) for k in ("alpha", "zeta")}
-    assert pr._markers == {}
+    assert _all_dead(old)
     assert after == before
     assert after["zeta"] == _norm(_spark_rows(db, "zeta"))
 
@@ -366,8 +397,7 @@ def test_point_read_prunes_row_groups_by_ts(spark, tmp_path):
     got = db.get("k", after_ns=5000, before_ns=5100)
     assert [r["ts"] for r in got] == list(range(5000, 5100))
 
-    pr = db._point_reader
-    fm = pr._run_footers(db.data_runs()[0])[0]
+    fm = db.data_runs()[0].footers[0]
     assert fm.num_row_groups >= 20
     pruned = fm.groups_for("k", 5000, 5100)
     assert len(pruned) <= 2  # the window spans at most 2 of 20 groups
@@ -665,9 +695,10 @@ def test_segmented_fold_matches_hash_agg():
 
 def test_same_name_republish_is_seen_without_a_stat(spark, tmp_path):
     """A minor compaction of a lone tx run republishes it under the SAME
-    name with new files. The footer cache is keyed by the run's listed
-    file names, so the next reads see the new content and the cache
-    holds only the new names."""
+    name with new files. The listing hands back a new ``RunInfo`` for
+    the new incarnation, so the next reads see the new content, read
+    the footers of the new files, and the handle keeps nothing of the
+    old run."""
     from pyspark.sql import functions as F
 
     db = Database(spark, str(tmp_path / "db"), buckets=2)
@@ -677,29 +708,35 @@ def test_same_name_republish_is_seen_without_a_stat(spark, tmp_path):
     (old,) = db.runs()
     assert len(db.get("drop")) == 3  # warm
     assert len(db.get_prefix("")) == 6
+    old_name, old_files, old = old.name, old.files, _refs([old])
     db.compact(transform=lambda df: df.filter(F.col("key") != "drop"))
     (new,) = db.runs()
-    assert new.name == old.name and new.files and set(new.files).isdisjoint(old.files)
+    assert new.name == old_name and new.files and set(new.files).isdisjoint(old_files)
     assert db.get("drop") == []
     assert [r["key"] for r in db.get_prefix("")] == ["keep"] * 3
-    pr = db._point_reader
-    assert list(pr._footers) == [new.path]
-    assert pr._footers[new.path][0] == new.files
+    assert _all_dead(old)
+    (listed,) = db.runs()
+    assert listed is new
+    assert [fm.path for fm in vars(new)["footers"]] == [
+        os.path.join(new.path, f) for f in new.files
+    ]
 
 
 def test_each_read_lists_once(tmp_path, monkeypatch):
     """A warm GET and a warm prefix GET read the run set from ONE
-    Database.runs() listing per attempt (between two run_names()
-    probes), and that listing is flat in the number of runs apart from
-    one stat per run directory, its incarnation check: three root
-    scans, no ``listdir`` of a run directory, exactly one stat of each
-    listed run directory (``DirEntry.stat`` counted too) and none of
-    anything inside one, at 10 runs and at 200. A read after one new
-    commit lists only the new run."""
-    import os
+    Database.runs() listing per attempt, checked by one closing
+    ``runs()`` (no ``run_names()``), and each listing is flat in the
+    number of runs apart from one stat per run directory, its
+    incarnation check: two root scans, no ``listdir`` of a run
+    directory, exactly two stats of each listed run directory
+    (``DirEntry.stat`` counted too) and none of anything inside one, and
+    no footer or delete-marker read, at 10 runs and at 200. A read
+    after one new commit lists only the new run."""
+    import pyarrow.parquet as pq
 
     db = _local_db(tmp_path)
-    calls = {"runs": 0, "run_names": 0, "scandir": 0, "stat": [], "listdir": []}
+    calls = {"runs": 0, "run_names": 0, "scandir": 0, "stat": [], "listdir": [],
+             "read_metadata": 0, "read_table": 0}
     real_runs, real_names = Database.runs, Database.run_names
     real_stat, real_listdir, real_scandir = os.stat, os.listdir, os.scandir
 
@@ -746,9 +783,12 @@ def test_each_read_lists_once(tmp_path, monkeypatch):
             return (Entry(e) for e in self._it)
 
     def count(read):
-        calls.update(runs=0, run_names=0, scandir=0, stat=[], listdir=[])
+        calls.update(runs=0, run_names=0, scandir=0, stat=[], listdir=[],
+                     read_metadata=0, read_table=0)
         monkeypatch.setattr(Database, "runs", counted("runs", real_runs))
         monkeypatch.setattr(Database, "run_names", counted("run_names", real_names))
+        for name in ("read_metadata", "read_table"):  # footer, marker reads
+            monkeypatch.setattr(pq, name, counted(name, getattr(pq, name)))
         monkeypatch.setattr(os, "stat", stat)
         monkeypatch.setattr(os, "listdir", listdir)
         monkeypatch.setattr(os, "scandir", Scan)
@@ -774,10 +814,11 @@ def test_each_read_lists_once(tmp_path, monkeypatch):
             want = read()  # warm
             assert want
             assert count(read) == want
-            assert calls["runs"] == 1 and calls["run_names"] == 2, n_runs
-            assert calls["scandir"] == 3, n_runs
+            assert calls["runs"] == 2 and calls["run_names"] == 0, n_runs
+            assert calls["scandir"] == 2, n_runs
             assert calls["listdir"] == [], n_runs
-            assert sorted(calls["stat"]) == run_dirs, n_runs
+            assert sorted(calls["stat"]) == sorted(run_dirs * 2), n_runs
+            assert calls["read_metadata"] == calls["read_table"] == 0, n_runs
 
     new = db.commit_rows([_u_row("k1", T0 - NS, -1)])
     count(lambda: db.get("k1"))
@@ -848,6 +889,90 @@ def _republish(db, name, rows):
         os.rename(final, hidden)
         os.rename(run, final)
         shutil.rmtree(hidden)
+
+
+def _hide_once(db, path):
+    """Make ``db``'s next ``runs()`` list while the run at ``path`` is
+    hidden as ``.tmp-old-*``, and rename it back right after: a listing
+    taken inside the hide window of a compaction that republishes the
+    run under its own name. Later listings are left alone."""
+    real = db.runs
+
+    def runs():
+        del db.runs  # once only
+        hidden = os.path.join(db.path, ".tmp-old-hidden")
+        os.rename(path, hidden)
+        try:
+            return real()
+        finally:
+            os.rename(hidden, path)
+
+    db.runs = runs
+
+
+def test_read_inside_a_republish_hide_window_retries(tmp_path, monkeypatch):
+    """A lone run republished under its own name is hidden for a moment,
+    so a listing taken then lists no run, while the run names before
+    and after it are the same. A read whose first listing falls in that
+    window must see the closing listing differ and retry: ``get``,
+    ``get_many`` and ``get_prefix`` each return the row."""
+    db = _local_db(tmp_path)
+    name = db.commit_rows([_u_row("k", T0, 1)])
+    row = _u_row("k", T0, 1)
+    listings = []
+    real = Database.runs
+
+    def counted(self):
+        listings.append(None)
+        return real(self)
+
+    monkeypatch.setattr(Database, "runs", counted)
+    for read, want in (
+        (lambda: db.get("k"), [row]),
+        (lambda: db.get_many(["k"]), {"k": [row]}),
+        (lambda: db.get_prefix("k"), [row]),
+    ):
+        assert read() == want  # warm
+        del listings[:]
+        _hide_once(db, os.path.join(db.path, name))
+        assert read() == want
+        assert "runs" not in vars(db)  # the hide ran
+        assert len(listings) == 4  # a lost attempt, then one that holds
+
+
+def test_warm_stats_reads_no_footer(tmp_path, monkeypatch):
+    """``stats()`` takes row counts from each run's cached footers and
+    marker counts from its cached markers: the numbers equal a direct
+    read of every footer, and a warm call opens no footer and parses no
+    marker file."""
+    import pyarrow.parquet as pq
+
+    db = _local_db(tmp_path)
+    db.commit_rows([_u_row(k, T0 + i, i) for k in ("a", "b", "c") for i in range(4)])
+    db.commit_rows([_u_row("a", T0, 9)])
+    db.commit_deletes([{"wildcard": "b"}, {"wildcard": "c", "before_ns": T0 + 2}])
+    db.commit_deletes([{"wildcard": "a"}])
+    data = [r for r in db.runs() if not r.is_delete]
+    want = {
+        "runs": [
+            {"name": r.name, "files": len(r.files),
+             "rows": sum(pq.read_metadata(os.path.join(r.path, f)).num_rows
+                         for f in r.files),
+             "bytes": sum(os.stat(os.path.join(r.path, f)).st_size for f in r.files)}
+            for r in data
+        ],
+        "n_runs": 2, "total_rows": 13, "delete_markers": 3, "buckets": 2,
+    }
+    want["total_bytes"] = sum(r["bytes"] for r in want["runs"])
+    assert db.stats() == want  # cold
+    opened = []
+    for name in ("read_metadata", "read_table", "ParquetFile"):
+        def spy(*a, _name=name, _real=getattr(pq, name), **kw):
+            opened.append(_name)
+            return _real(*a, **kw)
+        monkeypatch.setattr(pq, name, spy)
+    assert db.stats() == want  # warm
+    assert opened == []
 
 
 def test_republish_under_a_reused_inode_is_seen(tmp_path):
@@ -981,6 +1106,7 @@ try:
             "wildcard": st.sampled_from(["%", "a%", "b", "%c", "a b"]),
         })),
         st.tuples(st.just("rewrite"), _unique_rows, st.integers(0, 6)),
+        st.tuples(st.just("hide"), st.integers(0, 6)),
     )
 
     @given(st.lists(_ops, min_size=1, max_size=7))
@@ -989,8 +1115,9 @@ try:
         """After every step of a random history of commits (commit_rows,
         strict and unsorted Transactions that spill, runs without
         ``_U`` holding same-run duplicates), delete markers (key
-        bounds, wildcards, ts windows) and same-name republishes of a
-        data run with new content (compaction's swap), ``get``,
+        bounds, wildcards, ts windows), same-name republishes of a
+        data run with new content (compaction's swap) and reads whose
+        first listing falls inside a run's hide window, ``get``,
         ``get_many`` and ``get_prefix``, with and without a ts window,
         equal a pure-Python model: a dict of the live (key, ts) records,
         folded from the runs in commit order — every data run
@@ -1071,6 +1198,13 @@ try:
                         _republish(db, entry[0], arg[:1])
                         _republish(db, entry[0], arg)
                         entry[2] = arg
+                elif kind == "hide":
+                    name = None
+                    listed = db.runs()
+                    if listed:
+                        # the first read of the check below lists inside
+                        # the window
+                        _hide_once(db, listed[arg % len(listed)].path)
                 else:
                     name = db.commit_deletes([arg])
                     marker, arg = arg, []
@@ -1078,6 +1212,7 @@ try:
                     log.append([name, marker, arg])
                 model = fold()
                 check(db, model)
+                assert "runs" not in vars(db)  # any armed hide ran
                 if step == 0:
                     check(late, model)
             check(late, model)

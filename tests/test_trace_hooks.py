@@ -37,12 +37,20 @@ def test_perfbench_trace_install_finds_every_hook():
 def test_serve_get_goes_through_the_listing_hooks(tmp_path, monkeypatch):
     """perfbench's ``db.listing`` span wraps ``Database.runs`` and
     ``Database.run_names`` by name. A warm Spark-free GET through the
-    serve handler must still call both (one ``runs()`` and two
-    ``run_names()`` per read attempt), or a traced run reads 0 there
-    while the listing's time hides in the handler's self time."""
+    serve handler must still list through ``runs()`` (the opening and
+    the closing listing of its one read attempt; ``run_names()`` is off
+    the read path), or a traced run reads 0 there while the listing's
+    time hides in the handler's self time. Likewise perfbench counts
+    footer opens and decoded row groups by replacing ``pointread.pq``
+    with a proxy, so the GET must open its data files through
+    ``pointread.pq.ParquetFile``: here one file per run, the key's
+    bucket file."""
     import http.client
     import threading
 
+    import pyarrow.parquet as pq
+
+    from sonnerie_spark import pointread
     from sonnerie_spark.db import Database
     from sonnerie_spark.serve import make_server
 
@@ -61,16 +69,34 @@ def test_serve_get_goes_through_the_listing_hooks(tmp_path, monkeypatch):
             return _real(self)
 
         monkeypatch.setattr(Database, name, counted)
+    opened = []
+
+    class CountingParquetFile(pq.ParquetFile):
+        def __init__(self, source, *a, **kw):
+            opened.append(source)
+            super().__init__(source, *a, **kw)
+
+    class ParquetProxy:
+        ParquetFile = CountingParquetFile
+
+        def __getattr__(self, attr):
+            return getattr(pq, attr)
+
+    monkeypatch.setattr(pointread, "pq", ParquetProxy())
     srv = make_server(db)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     c = http.client.HTTPConnection("127.0.0.1", srv.server_address[1], timeout=30)
     try:
         for _ in range(2):  # cold, then warm
             calls.update(runs=0, run_names=0)
+            del opened[:]
             c.request("GET", "/k")
             r = c.getresponse()
             assert (r.status, r.read()) == (200, b"k\t1000\t1000\nk\t2000\t2000\n")
-        assert calls == {"runs": 1, "run_names": 2}
+        assert calls == {"runs": 2, "run_names": 0}
+        runs = db.runs()
+        assert len(runs) == 2 and all(len(r.files) == 1 for r in runs)
+        assert sorted(opened) == sorted(os.path.join(r.path, r.files[0]) for r in runs)
     finally:
         c.close()
         srv.shutdown()

@@ -98,10 +98,7 @@ def main() -> None:
     print(f"rebucket migration: swap {t_swap * 1e3:.0f}ms + compact {t_compact:.1f}s")
 
     # (c) stale handle still carrying B=32 over the migrated layout.
-    stale = Database.__new__(Database)
-    stale.spark, stale.path = spark, db.path
-    stale._point_reader, stale._view_tables = None, {}
-    stale._runs_cache = {}
+    stale = Database(spark, db.path)
     stale.buckets = 32
     scnt = stale.read().count()
     assert scnt == expect, f"stale-handle count {scnt} != {expect}"
