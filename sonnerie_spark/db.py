@@ -48,10 +48,12 @@ from __future__ import annotations
 
 import contextlib
 import glob
+import json
 import os
 import re
 import shutil
 import time
+import uuid
 from dataclasses import dataclass
 from functools import cached_property
 
@@ -134,6 +136,15 @@ DELETE_SENTINEL = "DELETE_MARKER"
 # or forward. The name is NOT under .tmp-* on purpose: the janitor must
 # never reap it.
 COMPACT_PLAN = ".compact-plan.json"
+# The swap epoch: a token every compaction swap rewrites before its
+# first hide (Database._swap), and Database.runs_edited after an
+# in-place run edit; never the same twice. Database.runs() trusts its
+# cached run classifications only while it is unchanged.
+SWAP_EPOCH = ".swap-epoch"
+# A listing that meets a live swap between its plan and its publish (a
+# dir fsync and a handful of renames) waits this long before listing
+# again (Database._root_entries).
+SWAP_POLL_SECONDS = 0.001
 # A run is written at <owned .tmp-* dir>/RUN_SUBDIR and published by
 # renaming that subdir (fsutil "Own").
 RUN_SUBDIR = "run"
@@ -187,9 +198,10 @@ class RunInfo:
     owner of that run's immutable metadata: ``files`` and ``unique``
     come from the listing; ``buckets``, ``footers``, ``bucket_index``
     and ``markers`` are read once, on first use. ``runs()`` hands back
-    the same object while the run directory is the same incarnation
-    and drops it once the name is unlisted, so a warm read rereads
-    nothing and a handle keeps nothing of a run it no longer lists. A
+    the same object while the run is listed on the same inode and the
+    swap epoch is unchanged, and drops it once the name is unlisted,
+    so a warm read rereads nothing and a handle keeps nothing of a
+    run it no longer lists. A
     property that raises (the run vanished) caches nothing; concurrent
     first uses (serve threads share runs without a lock) at worst
     compute a value twice."""
@@ -262,8 +274,11 @@ class Database:
         self.spark = spark
         self.durable = bool(durable)
         self.path = os.path.abspath(path)
-        # run name -> ((st_ino, st_ctime_ns), RunInfo or None): runs()
-        self._runs_cache: dict[str, tuple[tuple[int, int], RunInfo | None]] = {}
+        # runs(): (swap epoch it was filled under,
+        #          (run name, inode) -> RunInfo or None)
+        self._runs_cache: tuple[bytes | None, dict[tuple[str, int], RunInfo | None]] = (
+            None, {},
+        )
         self._view_tables: dict[str, str] = {}  # run-set sig -> table name
         self._last_view_gc = 0.0  # rate limit for the reuse-path sweep
         os.makedirs(self.path, exist_ok=True)
@@ -322,7 +337,7 @@ class Database:
         first reaping the tmp files of a writer killed before its
         rename. The caller holds the lock that serializes ``name``'s
         writers: the commit lock for BUCKETS, the compaction lock for
-        the swap plan."""
+        the swap plan and the swap epoch."""
         path = os.path.join(self.path, name)
         for stale in glob.glob(glob.escape(path) + ".tmp-*"):
             os.remove(stale)
@@ -331,23 +346,35 @@ class Database:
     # -- manifest ----------------------------------------------------------
 
     def _root_entries(self) -> list[os.DirEntry]:
-        """The database directory's entries. A dead compactor's
-        unresolved swap could list ZERO visible runs (data hidden under
-        .tmp-old-*) — a long-lived handle (serve) must not serve that
-        view, nor may a commit take its name floor from it — so a plan
-        in the listing is healed and the directory listed again.
-        Non-blocking: if the compaction lock is held, a LIVE compactor
-        owns the plan and the swap is mid-flight (microseconds), the
-        normal reader race."""
+        """The database directory's entries, never taken inside a
+        compaction swap's hide window: there the runs already hidden
+        under ``.tmp-old-*`` are missing and their replacement is not
+        yet published (a lone run's same-name republish lists NO run),
+        and two listings inside one window look unchanged to a read's
+        bracket. A long-lived handle (serve) must not serve that view,
+        nor may a commit take its name floor from it.
+
+        A plan in the listing marks a swap between its plan and its
+        purge. A dead compactor's plan is healed (non-blocking: a held
+        compaction lock means a LIVE compactor owns it). While the live
+        swap's output, which the swap epoch names, is still listed, its
+        publish has not happened: the directory is listed again after a
+        pause. An epoch read unchanged around the scan shows that no
+        later swap began during it."""
 
         def scan() -> list[os.DirEntry]:
             with os.scandir(self.path) as it:
                 return list(it)
 
         entries = scan()
-        if any(e.name == COMPACT_PLAN for e in entries):
+        while any(e.name == COMPACT_PLAN for e in entries):
             self._heal_compact_crash()
+            epoch = self._swap_epoch()
             entries = scan()
+            output = json.loads(epoch) if epoch else None
+            if self._swap_epoch() == epoch and not any(e.name == output for e in entries):
+                break
+            time.sleep(SWAP_POLL_SECONDS)
         return entries
 
     def runs(self) -> list[RunInfo]:
@@ -359,39 +386,42 @@ class Database:
         ``listdir`` classifies a run and records its file names and
         uniqueness marker on the ``RunInfo``.
 
-        Each incarnation of a run is classified once per handle. A
-        warm listing is one root scan plus one ``DirEntry.stat()`` per
-        run: a run whose directory still has the cached
-        ``(st_ino, st_ctime_ns)`` gets the cached ``RunInfo`` (or stays
-        skipped); only a new or republished run is listed again, and an
-        unlisted name is dropped. Listings of unchanged runs thus return
-        the same objects, which ``pointread._consistent`` checks. The inode alone
-        is not enough: compaction republishes ``main`` and the newest
-        merged tx name, and the filesystem hands a freed
-        inode straight back to the next ``mkdir`` (197 of 200 times on
-        ext4), so two republishes between two listings can leave the
-        same ``(name, inode)`` over new files. The new directory was
-        made after the cached one was published, and its mkdir, the
-        files written into it and its publishing rename all set its
-        ctime, which tells the two apart (distinct on 2000 of 2000
-        consecutive renames on ext4 with nanosecond timestamps; with
-        per-tick timestamps both republishes would have to fall in the
-        tick of the cached publish).
+        Each run is classified once per handle and swap epoch. A warm
+        listing is one root scan between two reads of the
+        ``SWAP_EPOCH`` token, with no syscall per run: a run listed
+        under a cached ``(name, DirEntry.inode())`` (the readdir
+        ``d_ino``) gets the cached ``RunInfo`` (or stays skipped) while
+        the epoch read after the scan is the one the cache was filled
+        under; only a new run is listed again. Listings of unchanged
+        runs thus return the same objects, which
+        ``pointread._consistent`` checks.
+
+        The epoch invariant: a listed ``(name, inode)`` names the same
+        directory, with the same files, until a compaction swap (or
+        ``runs_edited``, after an in-place edit) bumps the epoch. Commits
+        publish only new names, and a swap's roll-back restores a hidden
+        run on its own inode. A freed inode does come straight back to
+        the next ``mkdir`` (197 of 200 times on ext4), so a republished
+        ``main`` or tx name can return on a cached inode over new files,
+        but only through a later swap: its output was made after the
+        old directory was freed, and its bump (``_swap``) lands after
+        that and before its publish. A listing that sees the reused pair
+        therefore reads a changed epoch and classifies every run again.
+        New classifications are stamped with the epoch read before the
+        scan, so a bump that lands during the scan empties the cache on
+        the next call.
         """
-        cache = self._runs_cache
-        out: list[RunInfo] = []
-        listed = set()
+        epoch = self._swap_epoch()
         entries = [e for e in self._root_entries() if _TX_NAME_RE.match(e.name)]
+        filled_under, cached = self._runs_cache
+        if self._swap_epoch() != filled_under:
+            cached = {}
+        fresh: dict[tuple[str, int], RunInfo | None] = {}
+        out: list[RunInfo] = []
         for e in sorted(entries, key=lambda e: e.name):
-            try:
-                st = e.stat()
-            except OSError:
-                continue
-            sig = (st.st_ino, st.st_ctime_ns)
-            listed.add(e.name)
-            hit = cache.get(e.name)
-            if hit is not None and hit[0] == sig:
-                run = hit[1]
+            key = (e.name, e.inode())
+            if key in cached:
+                run = cached[key]
             else:
                 p = os.path.join(self.path, e.name)
                 try:
@@ -405,14 +435,32 @@ class Database:
                         e.name, p, DELETE_SENTINEL in names, files,
                         RUN_UNIQUE_FILE in names,
                     )
-                cache[e.name] = (sig, run)  # one whole-tuple store
+            fresh[key] = run
             if run is not None:
                 out.append(run)
-        # Serve handlers share the handle without a lock: snapshot the
-        # keys in one C-level op, and pop() tolerates a racing eviction.
-        for stale in [n for n in list(cache) if n not in listed]:
-            cache.pop(stale, None)
+        # One store: serve handlers share the handle without a lock, and
+        # a name no longer listed leaves the cache with the old dict.
+        self._runs_cache = (epoch, fresh)
         return out
+
+    def runs_edited(self) -> None:
+        """Make an in-place edit of a listed run (say, a removed ``_U``
+        marker) visible to every handle on this database, in any
+        process: bumps the swap epoch to a fresh token under the
+        compaction lock, so each handle classifies every run again on
+        its next listing. Reads that start after this returns see the
+        edit; a read already in flight retries (``pointread._consistent``)
+        or plans from the listing it took."""
+        with store_lock(self.path, ".compact"):
+            self._write_json(SWAP_EPOCH, f"edit-{uuid.uuid4().hex}")
+
+    def _swap_epoch(self) -> bytes:
+        """The ``SWAP_EPOCH`` token; empty before the first swap."""
+        try:
+            with open(os.path.join(self.path, SWAP_EPOCH), "rb") as f:
+                return f.read()
+        except FileNotFoundError:
+            return b""
 
     def run_names(self) -> list[str]:
         """The sorted top-level transaction names, WITHOUT per-run
@@ -1458,62 +1506,63 @@ class Database:
 
         if major:
             target_name = "main"
-            purge = [r.path for r in merged_runs]
+            replaced = [r.path for r in merged_runs]
         else:
             # Name the result after the newest merged *data* run and keep
             # delete-marker runs on disk until major compaction.
             target_name = data[-1].name
-            purge = [r.path for r in data]
-        # Swap (lib.rs:173-210 _purge_compacted_files semantics), ordered
-        # for concurrent readers: rmtree of large runs takes seconds, so
-        # deleting in place would open long windows where a listing sees
-        # no data (purge-then-rename) or where stale delete markers
-        # re-suppress records that survived a major merge (rename-then-
-        # purge). Instead every replaced run is HIDDEN first via an O(1)
-        # rename to a ``.tmp-old-*`` name — invisible to readers, and
-        # reclaimed by the stale-tmp janitor if this process dies — so
-        # the whole visibility transition is a handful of renames; the
-        # expensive rmtrees happen after the new run is live. A reader
-        # that resolved its file list before the swap may still hit a
-        # removed path (Spark re-opens by path; the reference's POSIX
-        # mmap keeps unlinked files readable) — such readers retry on a
-        # fresh run listing (every driver-side read brackets itself
-        # with the run-set fingerprint; Spark plans are rebuilt per
-        # request by the serve layer).
-        final = os.path.join(self.path, target_name)
-        if major and os.path.exists(final) and final not in purge:
-            purge.append(final)
+            replaced = [r.path for r in data]
+        self._swap(tmp, target_name, replaced)
+        return target_name
+
+    def _swap(self, tmp: str, final_name: str, replaced: list[str]) -> None:
+        """Publish the complete run directory ``tmp`` (a uniquely named
+        ``.tmp-*`` dir of the root) as run ``final_name`` in place of
+        the run directories ``replaced`` (lib.rs:173-210
+        _purge_compacted_files semantics); the caller holds the
+        compaction lock. The one swap of the database: epoch bump,
+        plan, hides, publish, purge.
+
+        Every replaced run is HIDDEN first by an O(1) rename to a
+        ``.tmp-old-*`` name, so readers see the swap as a handful of
+        renames and the slow rmtrees run after the new run is live
+        (deleting in place would let a listing see no data, or stale
+        delete markers re-suppress merged records). A reader that
+        resolved its files before the swap may hit a removed path;
+        Spark-free reads retry on a fresh listing
+        (``pointread._consistent``), and the serve layer rebuilds
+        Spark plans per request. The renames are journaled: the plan
+        is durable before the first hide, and
+        ``_recover_compact_plan`` rolls an interrupted swap back (tmp
+        still present) or forward (tmp gone).
+
+        The ``SWAP_EPOCH`` bump to ``tmp``'s name comes after ``tmp``
+        was made (so after any freed directory whose inode it reuses)
+        and before anything is renamed: the order ``runs()`` relies
+        on."""
+        final = os.path.join(self.path, final_name)
+        if os.path.exists(final) and final not in replaced:
+            replaced = [*replaced, final]
         if self.durable:
-            # The swap below DESTROYS the merged inputs, so the merged
-            # output must be durable first — the reference syncs at
-            # compaction for the same reason.
+            # The swap DESTROYS the replaced runs, so the new run must
+            # be durable first — the reference syncs at compaction for
+            # the same reason.
             fsync_tree(tmp)
-        # The hide -> publish sequence is MULTIPLE renames: a crash
-        # inside it (after some hides, before the publish) would leave
-        # the database with no visible runs and the data stranded under
-        # .tmp-old-* names the janitor eventually reaps — total data
-        # loss. So the swap is journaled: persist the full plan FIRST,
-        # then execute it; _recover_compact_plan rolls an interrupted
-        # swap back (tmp still present: restore the hides) or forward
-        # (tmp gone == publish happened: finish the purge).
-        hides = []
-        for i, p in enumerate(purge):
-            if os.path.exists(p):
-                hides.append(
-                    (os.path.basename(p), f".tmp-old-{time.time_ns():016x}-{i}")
-                )
+        self._write_json(SWAP_EPOCH, os.path.basename(tmp))
+        hides = [
+            (os.path.basename(p), f".tmp-old-{time.time_ns():016x}-{i}")
+            for i, p in enumerate(replaced)
+            if os.path.exists(p)
+        ]
         # durable BEFORE the first hide rename: recovery must be able
         # to trust that a hide implies a readable plan
         self._write_json(
             COMPACT_PLAN,
-            {"tmp": os.path.basename(tmp), "final": target_name,
-             "hides": hides},
+            {"tmp": os.path.basename(tmp), "final": final_name, "hides": hides},
         )
         hidden = []
         for orig, h in hides:
-            os.rename(
-                os.path.join(self.path, orig), os.path.join(self.path, h)
-            )
+            os.rename(os.path.join(self.path, orig), os.path.join(self.path, h))
             hidden.append(os.path.join(self.path, h))
         os.rename(tmp, final)
         if self.durable:
@@ -1521,7 +1570,6 @@ class Database:
         for h in hidden:
             shutil.rmtree(h, ignore_errors=True)
         self._clear_compact_plan()
-        return target_name
 
     def _merged_view(
         self, data: list[RunInfo], dels: list[RunInfo]
@@ -1550,9 +1598,9 @@ class Database:
         redoing it later loses nothing). tmp gone means the publish
         happened: ROLL FORWARD — finish the purge of the hidden
         originals. Either way the database is consistent afterwards and
-        the plan is cleared; a crash inside recovery just re-runs it."""
-        import json
-
+        the plan is cleared; a crash inside recovery just re-runs it,
+        except in the roll-back's final rmtree of the discarded rewrite,
+        which runs after the plan is cleared (debris for the janitor)."""
         p = os.path.join(self.path, COMPACT_PLAN)
         try:
             with open(p) as f:
@@ -1574,13 +1622,18 @@ class Database:
                 op = os.path.join(self.path, orig)
                 if os.path.isdir(hp) and not os.path.exists(op):
                     os.rename(hp, op)
+            if self.durable:
+                fsync_dir(self.path)
+            # The restored listing is whole: clear the plan BEFORE the
+            # slow rmtree, so listings (_root_entries) stop waiting on
+            # it. A crash inside the rmtree leaves only .tmp-compact-*
+            # debris, which the janitor reaps.
+            os.remove(p)
             shutil.rmtree(tmp, ignore_errors=True)
-        else:
-            # published: the hidden originals are now superseded
-            for _orig, h in plan["hides"]:
-                shutil.rmtree(
-                    os.path.join(self.path, h), ignore_errors=True
-                )
+            return
+        # published: the hidden originals are now superseded
+        for _orig, h in plan["hides"]:
+            shutil.rmtree(os.path.join(self.path, h), ignore_errors=True)
         if self.durable:
             fsync_dir(self.path)
         os.remove(p)

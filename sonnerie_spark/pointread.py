@@ -28,12 +28,12 @@ holds no state of its own.
 
 Scale note: the fast path reads only footer statistics and delete
 markers (both cached on the run) plus the pruned row groups. A warm
-read is two root scans and two ``stat`` calls per run directory (the
-incarnation check in ``Database.runs``), no per-run ``listdir``, one
-bucket-index lookup per run; then O(selectivity) data — on a compacted
-DB that is one file open and usually one row group. It runs on whatever
-process calls it (driver or serve worker); it never loads a run's full
-data.
+read is two root scans, each between two reads of the swap epoch
+token (``Database.runs``), and no syscall per run directory: no
+``stat``, no ``listdir``. Then one bucket-index lookup per run and
+O(selectivity) data — on a compacted DB that is one file open and
+usually one row group. It runs on whatever process calls it (driver or
+serve worker); it never loads a run's full data.
 """
 
 from __future__ import annotations
@@ -181,19 +181,24 @@ def _consistent(db, attempt):
     alone (its files, uniqueness marker, footers and delete markers all
     hang off the listed ``RunInfo`` objects), then lists again and
     accepts only if the closing listing hands back the very same
-    objects. ``runs()`` returns one ``RunInfo`` per incarnation of a
-    run directory (``(st_ino, st_ctime_ns)``), and complete run dirs
-    appear, disappear and are republished only by atomic renames, so
-    an unchanged listing brackets a window with no commit and no
-    compaction swap. Two race shapes retry on a fresh listing:
+    objects. ``runs()`` hands back the same ``RunInfo`` only for a run
+    listed under the same ``(name, inode)`` while the swap epoch is
+    unchanged (its docstring states the invariant), and complete run
+    dirs appear, disappear and are republished only by atomic renames,
+    so an unchanged listing brackets a window with no commit, no swap
+    rename and no swap bump. Three race shapes retry on a fresh
+    listing:
 
     - a listed run or file vanishing mid-read (a compaction hide, or a
-      same-name republish, which rmtrees the old incarnation): the
-      attempt raises OSError;
-    - a listing taken INSIDE a swap window, seeing neither the old runs
-      nor the merged result — including the hide window of a lone
-      run's same-name republish, where the names come back unchanged:
-      the closing listing holds a different incarnation.
+      same-name republish, which rmtrees the old run): the attempt
+      raises OSError;
+    - a listing whose scan overlapped a swap's renames, seeing neither
+      the old runs nor the merged result (a scan that starts inside the
+      hide window waits for the publish, ``Database._root_entries``):
+      the closing listing holds a different name or inode;
+    - a swap bumping the epoch during the attempt: the closing listing
+      drops the cache and classifies every run again, so it returns
+      new objects.
 
     The attempt reads delete markers inside the bracket too: a major
     compaction purges them while merged rows may still be

@@ -552,7 +552,10 @@ def test_single_run_dedup_elided_only_with_unique_marker(db, spark, tmp_path):
     """The hot single-run scan plans NO aggregation when the run carries
     the _U duplicate-free marker; stripping the marker (legacy or
     unverified check_duplicates=False run) plans the same LWW dedup a
-    multi-run read would — reads never return two rows per (key, ts)."""
+    multi-run read would — reads never return two rows per (key, ts).
+    A handle classifies a listed run once per swap epoch, so the live
+    handle sees the in-place strip once ``runs_edited`` announces it; a
+    new handle sees it on its first listing."""
     import os
 
     plan = plan_of(db.read())
@@ -560,8 +563,12 @@ def test_single_run_dedup_elided_only_with_unique_marker(db, spark, tmp_path):
 
     run = db.data_runs()[0]
     os.remove(os.path.join(run.path, "_U"))
+    db.runs_edited()
+    assert not db.data_runs()[0].unique
     plan2 = plan_of(db.read())
     assert "Aggregate" in plan2, plan2  # unverified: LWW dedup planned
+    plan3 = plan_of(Database(spark, db.path).read())
+    assert "Aggregate" in plan3, plan3
 
 
 def test_bm25_broadcasts_query_sides_no_corpus_smj(spark, sf_dir):

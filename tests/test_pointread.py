@@ -231,6 +231,70 @@ def test_marker_cache_concurrent_readers_see_monotone_snapshots(tmp_path):
     assert [r["v_long"][0] for r in db.get("k")] == list(range(k, 10))
 
 
+def test_concurrent_readers_across_same_name_republishes(tmp_path, monkeypatch):
+    """Readers on more threads than cores share one handle (and its run
+    listing cache) while the lone run is republished under its own name,
+    each time with other keys, by a swap that pauses after its hide
+    rename (a compactor descheduled mid-swap), so whole reads fall in
+    the hide window. Every read must return exactly one published
+    version, never an older one than that reader saw: a read that lists
+    the run as hidden before and after its attempt returned no rows."""
+    import sys
+    import threading
+    import time
+
+    real_rename = os.rename
+
+    def slow_hide(src, dst):
+        real_rename(src, dst)
+        if os.path.basename(dst).startswith(".tmp-old-"):
+            time.sleep(0.02)
+
+    monkeypatch.setattr(os, "rename", slow_hide)
+
+    def version(v):
+        keys = ("a", "c") if v % 2 else ("b", "c")
+        return [_u_row(k, T0 + i, v) for k in keys for i in range(v % 3 + 1)]
+
+    db = _local_db(tmp_path)
+    name = db.commit_rows(version(0))
+    last = 6
+    seen: dict[int, list[int]] = {}
+    errors: list[BaseException] = []
+    done = threading.Event()
+
+    def reader(tid):
+        mine = seen[tid] = []
+        try:
+            while not done.is_set() or len(mine) < 10:
+                rows = db.get_prefix("")
+                v = rows[0]["v_long"][0]
+                assert rows == version(v), (v, rows)
+                mine.append(v)
+        except BaseException as e:  # surfaced by the main thread below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=reader, args=(t,)) for t in range(8)]
+        for t in threads:
+            t.start()
+        for v in range(1, last + 1):
+            _republish(db, name, version(v))
+        done.set()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        done.set()
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+    for vs in seen.values():
+        assert vs == sorted(vs)
+    assert db.get_prefix("") == version(last)
+
+
 def test_point_read_outlasts_a_commit_streak(tmp_path, monkeypatch):
     """Every commit that lands inside a point-read attempt fails the
     attempt's closing run listing. A writer committing back-to-back
@@ -726,18 +790,18 @@ def test_each_read_lists_once(tmp_path, monkeypatch):
     """A warm GET and a warm prefix GET read the run set from ONE
     Database.runs() listing per attempt, checked by one closing
     ``runs()`` (no ``run_names()``), and each listing is flat in the
-    number of runs apart from one stat per run directory, its
-    incarnation check: two root scans, no ``listdir`` of a run
-    directory, exactly two stats of each listed run directory
-    (``DirEntry.stat`` counted too) and none of anything inside one, and
-    no footer or delete-marker read, at 10 runs and at 200. A read
-    after one new commit lists only the new run."""
+    number of runs: two root scans, the same number of swap epoch reads
+    at 10 runs and at 200, no ``listdir`` and no ``stat`` of anything
+    (``DirEntry.stat`` counted too), and no footer or delete-marker
+    read. A read after one new commit lists only the new run."""
     import pyarrow.parquet as pq
 
     db = _local_db(tmp_path)
-    calls = {"runs": 0, "run_names": 0, "scandir": 0, "stat": [], "listdir": [],
-             "read_metadata": 0, "read_table": 0}
-    real_runs, real_names = Database.runs, Database.run_names
+    calls = {"runs": 0, "run_names": 0, "_swap_epoch": 0, "scandir": 0, "stat": [],
+             "listdir": [], "read_metadata": 0, "read_table": 0}
+    real_runs, real_names, real_epoch = (
+        Database.runs, Database.run_names, Database._swap_epoch
+    )
     real_stat, real_listdir, real_scandir = os.stat, os.listdir, os.scandir
 
     def counted(name, fn):
@@ -783,10 +847,11 @@ def test_each_read_lists_once(tmp_path, monkeypatch):
             return (Entry(e) for e in self._it)
 
     def count(read):
-        calls.update(runs=0, run_names=0, scandir=0, stat=[], listdir=[],
-                     read_metadata=0, read_table=0)
+        calls.update(runs=0, run_names=0, _swap_epoch=0, scandir=0, stat=[],
+                     listdir=[], read_metadata=0, read_table=0)
         monkeypatch.setattr(Database, "runs", counted("runs", real_runs))
         monkeypatch.setattr(Database, "run_names", counted("run_names", real_names))
+        monkeypatch.setattr(Database, "_swap_epoch", counted("_swap_epoch", real_epoch))
         for name in ("read_metadata", "read_table"):  # footer, marker reads
             monkeypatch.setattr(pq, name, counted(name, getattr(pq, name)))
         monkeypatch.setattr(os, "stat", stat)
@@ -798,6 +863,7 @@ def test_each_read_lists_once(tmp_path, monkeypatch):
             monkeypatch.undo()
 
     n = 0
+    epoch_reads = set()
     for n_runs in (10, 200):
         while n < n_runs - 3:
             db.commit_rows([_u_row(f"k{n % 5}", T0 + n * NS, n)])
@@ -807,18 +873,17 @@ def test_each_read_lists_once(tmp_path, monkeypatch):
                 [{"wildcard": "k1", "after_ns": T0 + n * NS, "before_ns": T0 + n * NS + 1}]
             )
             n += 1
-        runs = db.runs()
-        assert len(runs) == n_runs
-        run_dirs = sorted(r.path for r in runs)
+        assert len(db.runs()) == n_runs
         for read in (lambda: db.get("k1"), lambda: db.get_prefix("k", max_groups=n)):
             want = read()  # warm
             assert want
             assert count(read) == want
             assert calls["runs"] == 2 and calls["run_names"] == 0, n_runs
             assert calls["scandir"] == 2, n_runs
-            assert calls["listdir"] == [], n_runs
-            assert sorted(calls["stat"]) == sorted(run_dirs * 2), n_runs
+            assert calls["listdir"] == [] and calls["stat"] == [], n_runs
             assert calls["read_metadata"] == calls["read_table"] == 0, n_runs
+            epoch_reads.add(calls["_swap_epoch"])
+    assert epoch_reads == {4}  # two per listing, at 10 runs and at 200
 
     new = db.commit_rows([_u_row("k1", T0 - NS, -1)])
     count(lambda: db.get("k1"))
@@ -870,25 +935,76 @@ def _commit_non_unique(db, rows):
 
 def _republish(db, name, rows):
     """Replace run ``name`` with a ``_U`` run of ``rows`` under the SAME
-    name, in compaction's swap order: write the new run under an owned
-    tmp dir, hide the old run as ``.tmp-old-*``, rename the new one into
-    the name, then rmtree the hidden one. The freed inode is usually
-    handed to the next republish's run directory. Spark-free."""
-    import os
-    import shutil
+    name through compaction's own swap (``Database._swap``: epoch bump,
+    plan, hide, publish, purge) under the compaction lock, without the
+    Spark merge: the new run is written as a ``.tmp-compact-*`` dir.
+    The freed inode is usually handed to the next republish's run
+    directory. Spark-free."""
     import time
 
-    from sonnerie_spark.db import RUN_SUBDIR
-    from sonnerie_spark.fsutil import OwnedDir
+    from sonnerie_spark.fsutil import store_lock
 
-    with OwnedDir(db.path) as owner:
-        run = os.path.join(owner.path, RUN_SUBDIR)
-        _write_run(db, run, rows, unique=True)
-        final = os.path.join(db.path, name)
-        hidden = os.path.join(db.path, f".tmp-old-{time.time_ns():016x}")
-        os.rename(final, hidden)
-        os.rename(run, final)
-        shutil.rmtree(hidden)
+    tmp = os.path.join(db.path, f".tmp-compact-{time.time_ns():x}")
+    _write_run(db, tmp, rows, unique=True)
+    with store_lock(db.path, ".compact"):
+        db._swap(tmp, name, [os.path.join(db.path, name)])
+
+
+def test_read_does_not_wait_for_a_roll_back_rmtree(tmp_path, monkeypatch):
+    """Rolling back a dead compactor's swap restores its hidden runs
+    and then removes the discarded rewrite, which can take seconds on
+    large runs. A read on another thread that lists the database during
+    that rmtree gets the restored rows without waiting for it."""
+    import shutil
+    import threading
+    import time
+
+    from sonnerie_spark.db import COMPACT_PLAN
+    from sonnerie_spark.fsutil import store_lock
+
+    db = _local_db(tmp_path)
+    name = db.commit_rows([_u_row("k", T0, 1)])
+    tmp = os.path.join(db.path, f".tmp-compact-{time.time_ns():x}")
+    _write_run(db, tmp, [_u_row("k", T0, 2)], unique=True)
+    real_rename = os.rename
+
+    def crash_at_publish(src, dst):
+        if src == tmp:
+            raise OSError("compactor died before its publish")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_at_publish)
+    with store_lock(db.path, ".compact"), pytest.raises(OSError):
+        db._swap(tmp, name, [os.path.join(db.path, name)])
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert os.path.exists(os.path.join(db.path, COMPACT_PLAN))
+    assert not os.path.exists(os.path.join(db.path, name))  # hidden
+
+    real_rmtree = shutil.rmtree
+    started, release = threading.Event(), threading.Event()
+
+    def slow_rmtree(path, *a, **k):
+        if path == tmp:
+            started.set()
+            release.wait(30)
+        real_rmtree(path, *a, **k)
+
+    monkeypatch.setattr(shutil, "rmtree", slow_rmtree)
+    healer = threading.Thread(target=db._heal_compact_crash)
+    healer.start()
+    try:
+        assert started.wait(30)
+        got = []
+        reader = threading.Thread(target=lambda: got.append(db.get("k")))
+        reader.start()
+        reader.join(timeout=10)
+        assert not reader.is_alive(), "the read waited for the rmtree"
+        assert got == [[_u_row("k", T0, 1)]]
+    finally:
+        release.set()
+        healer.join(timeout=30)
+    assert not os.path.exists(tmp)
+    assert not os.path.exists(os.path.join(db.path, COMPACT_PLAN))
 
 
 def _hide_once(db, path):
@@ -938,6 +1054,62 @@ def test_read_inside_a_republish_hide_window_retries(tmp_path, monkeypatch):
         assert read() == want
         assert "runs" not in vars(db)  # the hide ran
         assert len(listings) == 4  # a lost attempt, then one that holds
+
+
+def _bump_after_once(db):
+    """Make ``db``'s next ``runs()`` bump the swap epoch right after it
+    lists, as a compaction swap that starts during a read's attempt
+    does before it renames anything. Later listings are left alone."""
+    import time
+
+    from sonnerie_spark.db import SWAP_EPOCH
+
+    real = db.runs
+
+    def runs():
+        del db.runs  # once only
+        try:
+            return real()
+        finally:
+            db._write_json(SWAP_EPOCH, f".tmp-compact-{time.time_ns():x}")
+
+    db.runs = runs
+
+
+def test_read_across_a_swap_epoch_bump_retries(tmp_path, monkeypatch):
+    """A swap epoch bump after a read's opening listing empties the
+    listing cache: the closing listing names the same runs through new
+    ``RunInfo`` objects, so the read loses exactly one attempt and then
+    returns the right rows. ``get``, ``get_many`` and ``get_prefix``
+    each, over data runs and a delete run."""
+    db = _local_db(tmp_path)
+    db.commit_rows([_u_row("k", T0, 1), _u_row("j", T0, 2)])
+    db.commit_deletes([{"wildcard": "j"}])
+    db.commit_rows([_u_row("k", T0 + 1, 3)])
+    rows = [_u_row("k", T0, 1), _u_row("k", T0 + 1, 3)]
+    listings = []
+    real = Database.runs
+
+    def recorded(self):
+        listings.append(real(self))
+        return listings[-1]
+
+    monkeypatch.setattr(Database, "runs", recorded)
+    for read, want in (
+        (lambda: db.get("k"), rows),
+        (lambda: db.get_many(["k", "j"]), {"k": rows, "j": []}),
+        (lambda: db.get_prefix(""), rows),
+    ):
+        assert read() == want  # warm
+        del listings[:]
+        _bump_after_once(db)
+        assert read() == want
+        assert "runs" not in vars(db)  # the bump ran
+        assert len(listings) == 4  # a lost attempt, then one that holds
+        opening, closing, *held = listings
+        assert [r.name for r in closing] == [r.name for r in opening]
+        assert len(opening) == 3 and all(a is not b for a, b in zip(opening, closing))
+        assert all(a is b for a, b in zip(*held))
 
 
 def test_warm_stats_reads_no_footer(tmp_path, monkeypatch):
@@ -996,7 +1168,7 @@ def test_republish_under_a_reused_inode_is_seen(tmp_path):
     reused = False
     for rnd in range(1, 21):
         check()  # warms the listing and the reader's caches
-        cached_ino = db._runs_cache[name][0][0]
+        (cached_ino,) = [ino for n, ino in db._runs_cache[1] if n == name]
         for v in (2 * rnd, 2 * rnd + 1):
             keys = ("a", "c") if v % 2 else ("b", "c")  # c: new to the run
             rows = [_u_row(k, T0 + i, v) for k in keys for i in range(v % 3 + 1)]

@@ -67,7 +67,7 @@ DB_RENAMES_NOT_SWEPT = {
     "_bucketed_table": "publishes a view cache of hard links, rebuilt "
     "by the next read if missing; no database state",
 }
-DB_RENAMES_SWEPT = {"_atomic_rename", "_compact_locked", "_recover_compact_plan"}
+DB_RENAMES_SWEPT = {"_atomic_rename", "_swap", "_recover_compact_plan"}
 LSH_COLS = ["id", "band", "bucket"]
 
 
